@@ -276,7 +276,7 @@ object Dedup {
       .filter(col("line") =!= "")
       .distinct() // per-doc repeats count once toward n_docs
       .groupBy(col("line"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
+      .agg(count(col("doc_id")).as("n_docs")) // rows are distinct (doc_id, line) pairs
       .filter(col("n_docs") >= minDocs)
 
   /** Remove cross-document boilerplate lines from every document: each

@@ -32,7 +32,12 @@ object Similarity {
       // min-heap: head = weakest kept candidate (lowest sim; ties evict the
       // higher neighbor_id first, matching the window's asc-id preference)
       val heaps = new java.util.HashMap[Long, java.util.PriorityQueue[(Double, Long)]]()
-      val ord = Ordering.by[(Double, Long), (Double, Long)](t => (t._1, -t._2))
+      val ord = new Ordering[(Double, Long)] {
+        def compare(a: (Double, Long), b: (Double, Long)): Int = {
+          val bySim = java.lang.Double.compare(a._1, b._1)
+          if (bySim != 0) bySim else java.lang.Long.compare(b._2, a._2)
+        }
+      }
       it.foreach { n =>
         var h = heaps.get(n.query_id)
         if (h == null) {

@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** spark-submit entry point for the transcript extraction pipeline.
   *
@@ -23,13 +25,27 @@ import org.apache.spark.sql.functions._
   *    directory-per-pass Parquet, `--format iceberg` commits each pass as
   *    an Iceberg snapshot via `writeTo(...).overwritePartitions()` (same
   *    control flow, snapshot-native resume);
-  *  - extraction itself is shuffle-free; the only shuffle is the optional
-  *    `repartition` that balances bucket passes, and skew from very long
+  *  - extraction itself is shuffle-free; the optional salted
+  *    `repartition` balances bucket passes, and skew from very long
   *    conversations is neutralized because routing hashes conv_id but
   *    repartitioning salts by (`conv_id`, `turn_idx` div salt) so one
   *    conversation can spread over `salt` tasks;
-  *  - lineage rows (partition id, counts, digest) land next to the data in
-  *    `<output>/_lineage`, metrics are printed as one JSON line.
+  *  - the write stage repartitions by `_bucket` into
+  *    `min(buckets/P, defaultParallelism)` tasks, so every core writes and
+  *    no task holds more than the pass's buckets, then sorts within each
+  *    task by (`_bucket`, `conv_id`, `turn_idx`) for stable turn order in
+  *    every bucket file;
+  *  - lineage rows (partition id, counts, XOR digest) are folded by the
+  *    writer tasks themselves, from the rows they write
+  *    ([[Extraction.foldLineage]]), and reach the driver through an
+  *    accumulator. The write stage is the job's result stage, whose
+  *    accumulator updates Spark applies once per partition and never from a
+  *    failed attempt, so the counts are exact without re-reading the pass or
+  *    collecting a data row. The ≤ buckets/P rows land as one file in
+  *    `<output>/_lineage`, and metrics are printed as one JSON line.
+  *
+  * A pass runs three Spark jobs: the extract stage's shuffle, the sorted
+  * write, and the one-task lineage write.
   */
 object ExtractJob {
 
@@ -104,20 +120,17 @@ object ExtractJob {
             .withColumn("_bucket", pmod(xxhash64(col("conv_id")), lit(args.buckets)))
 
         // stable turn ordering inside every bucket file: repartition by
-        // bucket then sort (conv_id, turn_idx) within each writer task
+        // bucket then sort (conv_id, turn_idx) within each writer task; the
+        // lineage fold sits between them, in the write stage
+        val lineage = spark.sparkContext.collectionAccumulator[LineageRow](s"graft.extract.lineage.pass$pass")
+        val width = math.min(bucketsPerPass, spark.sparkContext.defaultParallelism)
         io.writePass(
-          extracted
-            .repartition(col("_bucket"))
+          Extraction.foldLineage(extracted.repartition(width, col("_bucket")), lineage)
             .sortWithinPartitions(col("_bucket"), col("conv_id"), col("turn_idx")),
           args.output, pass)
 
-        val lin = Extraction.lineage(
-          io.readPass(spark, args.output, pass)
-            .drop("_bucket")
-            .select($"conv_id", $"turn_idx", $"role", $"extracted_text", $"spans",
-              $"n_parse_errors", $"first_parse_error", $"budget_error",
-              $"n_chars_in", $"n_chars_out").as[ExtractedTurn])
-        io.writeLineage(lin.toDF(), args.output, pass)
+        val lin = lineage.value.asScala.toSeq.sortBy(_.partition_id)
+        io.writeLineage(spark.createDataset(lin).toDF().coalesce(1), args.output, pass)
 
         val mOut = fs.create(marker, true)
         try mOut.write(s"pass=$pass\n".getBytes("UTF-8")) finally mOut.close()

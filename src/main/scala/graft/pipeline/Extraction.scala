@@ -2,8 +2,8 @@ package graft.pipeline
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 /** Per-turn extraction: the reference's `visibleText(parse(html))` +
   * provenance-token spans, run distributed via typed `mapPartitions`.
@@ -232,23 +232,61 @@ object Extraction {
     h
   }
 
+  /** The lineage fold of one task partition over (conv_id, turn_idx, text,
+    * failed): rows, failed rows and the XOR of [[rowDigest]]. XOR is
+    * order-independent, so the global XOR of all partition digests is the
+    * dataset digest at any parallelism. [[lineage]] and [[foldLineage]] both
+    * build their [[LineageRow]]s here.
+    */
+  final class LineageFold(partitionId: Int) {
+    private var rows = 0L
+    private var errors = 0L
+    private var digest = 0L
+
+    def add(convId: String, turnIdx: Int, text: String, failed: Boolean): Unit = {
+      rows += 1
+      if (failed) errors += 1
+      digest ^= rowDigest(convId, turnIdx, text)
+    }
+
+    /** The partition's lineage row; none for a partition without rows. */
+    def result: Option[LineageRow] =
+      if (rows == 0L) None else Some(LineageRow(partitionId, rows, errors, Nil, digest))
+  }
+
   /** One lineage row per task partition: partition id, files, counts and an
-    * order-independent XOR digest (stable across parallelism levels — the
-    * global XOR of all partition digests is the dataset digest).
+    * order-independent XOR digest.
     */
   def lineage(extracted: Dataset[ExtractedTurn]): Dataset[LineageRow] = {
     import extracted.sparkSession.implicits._
     extracted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var n = 0L; var errs = 0L; var digest = 0L
-      it.foreach { e =>
-        n += 1
-        if (e.budget_error.nonEmpty) errs += 1
-        digest ^= rowDigest(e.conv_id, e.turn_idx, e.extracted_text)
-      }
-      if (n == 0L) Iterator.empty
-      else Iterator.single(LineageRow(pid, n, errs, Nil, digest))
+      val fold = new LineageFold(TaskContext.getPartitionId())
+      it.foreach(e => fold.add(e.conv_id, e.turn_idx, e.extracted_text, e.budget_error.nonEmpty))
+      fold.result.iterator
     }
+  }
+
+  /** Passes extracted rows through unchanged while folding each task
+    * partition's lineage row, which goes to `sink` once the task has read
+    * all of its rows. Meant for the tasks of a job's result stage: Spark
+    * applies a result task's accumulator updates once per partition and
+    * never those of a failed attempt, so the rows in `sink` count exactly
+    * what the job's successful tasks passed on.
+    */
+  def foldLineage(rows: DataFrame, sink: CollectionAccumulator[LineageRow]): DataFrame = {
+    val schema = rows.schema
+    val conv = schema.fieldIndex("conv_id")
+    val turn = schema.fieldIndex("turn_idx")
+    val text = schema.fieldIndex("extracted_text")
+    val error = schema.fieldIndex("budget_error")
+    rows.mapPartitions { (it: Iterator[Row]) =>
+      val fold = new LineageFold(TaskContext.getPartitionId())
+      // `++` evaluates its argument once, when `it` is exhausted
+      it.map { r =>
+        fold.add(r.getString(conv), r.getInt(turn), r.getString(text), r.getString(error).nonEmpty)
+        r
+      } ++ { fold.result.foreach(sink.add); Iterator.empty }
+    }(Encoders.row(schema))
   }
 
   /** Order-independent digest of the whole extracted dataset. */

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage seam for the extraction job (SURVEY §7.5): [[ExtractJob]] talks
@@ -23,9 +23,6 @@ trait TableIO {
     */
   def writePass(df: DataFrame, root: String, pass: Int): Unit
 
-  /** Read back one committed pass. */
-  def readPass(spark: SparkSession, root: String, pass: Int): DataFrame
-
   /** Commit the per-partition lineage rows of one pass. */
   def writeLineage(df: DataFrame, root: String, pass: Int): Unit
 }
@@ -47,16 +44,16 @@ object TableIO {
 /** Directory-per-pass Parquet implementation (local/HDFS/object store). */
 object ParquetTableIO extends TableIO {
 
+  /** Reads with the [[TranscriptTurn]] schema, so no footer job infers one;
+    * columns resolve by name, and columns outside the schema are not read.
+    */
   override def readInput(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Encoders.product[TranscriptTurn].schema).parquet(path)
 
   override def writePass(df: DataFrame, root: String, pass: Int): Unit =
     df.write.mode(SaveMode.Overwrite)
       .partitionBy("_bucket")
       .parquet(s"$root/data/pass=$pass")
-
-  override def readPass(spark: SparkSession, root: String, pass: Int): DataFrame =
-    spark.read.parquet(s"$root/data/pass=$pass")
 
   override def writeLineage(df: DataFrame, root: String, pass: Int): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$root/_lineage/pass=$pass")
@@ -82,9 +79,6 @@ object IcebergTableIO extends TableIO {
     df.withColumn("_pass", lit(pass))
       .writeTo(s"${root}_data")
       .overwritePartitions()
-
-  override def readPass(spark: SparkSession, root: String, pass: Int): DataFrame =
-    spark.table(s"${root}_data").filter(col("_pass") === pass).drop("_pass")
 
   override def writeLineage(df: DataFrame, root: String, pass: Int): Unit =
     df.withColumn("_pass", lit(pass))

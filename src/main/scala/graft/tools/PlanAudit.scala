@@ -139,12 +139,14 @@ object PlanAudit {
       "Exchange".r.findAllIn(mtPlan).length == 1, mtPlan)
 
     // 16. line-level dedup: the boilerplate count must partial-aggregate
-    //     map-side before its exchange (hot line keys combine locally)
+    //     map-side before its exchange (hot line keys combine locally).
+    //     Plans print top-down, so the final count sits above the Exchange
+    //     and the partial-mode count must appear below it
     val ldPlan = graft.SparkEntry.queries("q_line_dedup")(spark, sfDir)
       .queryExecution.executedPlan.toString
+    val ldExchange = ldPlan.indexOf("Exchange")
     check("q_line_dedup partial-aggregates before its exchange")(
-      ldPlan.contains("Aggregate") &&
-        ldPlan.indexOf("Aggregate") < ldPlan.indexOf("Exchange"), ldPlan)
+      ldExchange >= 0 && ldPlan.indexOf("partial_count(", ldExchange) > ldExchange, ldPlan)
 
     // 17. connected components: label propagation is hash joins only —
     //     a cartesian would mean the edge/label join lost its key

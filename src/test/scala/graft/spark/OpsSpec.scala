@@ -651,4 +651,15 @@ class OpsSpec extends AnyFunSuite {
       assert(rows.length <= k && rows.map(_._2).sorted.sameElements(1L to rows.length.toLong), s"query $q ranks")
     }
   }
+
+  test("map-side top-k tie-break keeps the lowest neighbor_id, Long.MinValue included") {
+    import spark.implicits._
+    import Similarity.Neighbor
+    val scored = Seq(
+      Neighbor(1L, 7L, 0.5), Neighbor(1L, Long.MinValue, 0.5), Neighbor(1L, 0L, 0.5),
+      Neighbor(1L, 3L, 0.9), Neighbor(2L, Long.MaxValue, 0.1), Neighbor(2L, Long.MinValue, 0.1))
+    val kept = Similarity.partitionTopK(spark.createDataset(scored).coalesce(1), k = 2)
+      .collect().groupBy(_.query_id).map { case (q, ns) => q -> ns.map(_.neighbor_id).toSet }
+    assert(kept == Map(1L -> Set(3L, Long.MinValue), 2L -> Set(Long.MaxValue, Long.MinValue)))
+  }
 }

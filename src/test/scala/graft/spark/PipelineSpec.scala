@@ -99,6 +99,80 @@ class PipelineSpec extends AnyFunSuite {
     assert(global == Extraction.datasetDigest(extracted))
   }
 
+  /** One committed pass of an ExtractJob output, read back. */
+  private def readPass(out: String, pass: Int) = {
+    import spark.implicits._
+    spark.read.parquet(s"$out/data/pass=$pass")
+      .select($"conv_id", $"turn_idx", $"role", $"extracted_text", $"spans",
+        $"n_parse_errors", $"first_parse_error", $"budget_error",
+        $"n_chars_in", $"n_chars_out").as[ExtractedTurn]
+  }
+
+  test("ExtractJob lineage, folded by the writer tasks, equals a read-back of every pass") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-lineage").toString
+    // deeper than DefaultBudgets.maxDepth; nested spans build faster than nested divs
+    val poison = TranscriptTurn("poison-conv", 0, "user", "<span>" * 70000 + "x", "",
+      new java.sql.Timestamp(0L))
+    (Transcripts.generate(spark, 60, seed = 11L).collect().toSeq :+ poison)
+      .toDS().toDF().write.parquet(s"$tmp/in")
+    for (main <- Seq(false, true)) {
+      val out = s"$tmp/out-main-$main"
+      ExtractJob.run(spark, ExtractJob.Args(s"$tmp/in", out, buckets = 8, passes = 2,
+        mainContent = main))
+      var failed = 0L
+      for (pass <- 0 until 2) {
+        val lineage = spark.read.parquet(s"$out/_lineage/pass=$pass").as[LineageRow].collect()
+        val written = readPass(out, pass)
+        val errors = written.filter($"budget_error" =!= "").count()
+        assert(lineage.map(_.n_rows).sum == written.count(), s"main=$main pass=$pass rows")
+        assert(lineage.map(_.n_errors).sum == errors, s"main=$main pass=$pass errors")
+        assert(lineage.map(_.digest).fold(0L)(_ ^ _) == Extraction.datasetDigest(written),
+          s"main=$main pass=$pass digest")
+        // one writer task per bucket of the pass at most, each with rows
+        assert(lineage.map(_.partition_id).distinct.length == lineage.length)
+        assert(lineage.length <= 4 && lineage.forall(_.n_rows > 0))
+        failed += errors
+      }
+      assert(failed == 1L, s"main=$main: the poisoned turn is counted once")
+    }
+  }
+
+  test("a single-pass ExtractJob run starts at most three Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = Files.createTempDirectory("graft-jobs").toString
+    Transcripts.generate(spark, 40, seed = 5L).toDF().write.parquet(s"$tmp/in")
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ExtractJob.run(spark, ExtractJob.Args(s"$tmp/in", s"$tmp/out", buckets = 8, passes = 1))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // extract stage's shuffle, sorted write, lineage write: no re-read of
+    // the pass and no schema inference over the input
+    assert(started.get > 0 && started.get <= 3, s"${started.get} Spark jobs")
+  }
+
+  test("ExtractJob reads input columns by name: extra and reordered columns change nothing") {
+    val tmp = Files.createTempDirectory("graft-schema").toString
+    val plain = Transcripts.generate(spark, 50, seed = 13L).toDF()
+    plain.write.parquet(s"$tmp/plain")
+    plain.select(col("ts"), col("text"), lit("unused").as("extra"), col("tool"),
+        col("turn_idx"), col("role"), col("conv_id"))
+      .write.parquet(s"$tmp/shuffled")
+    for (in <- Seq("plain", "shuffled"))
+      ExtractJob.run(spark, ExtractJob.Args(s"$tmp/$in", s"$tmp/out-$in", buckets = 4, passes = 1))
+    val digest = Extraction.datasetDigest(readPass(s"$tmp/out-plain", 0))
+    assert(Extraction.datasetDigest(readPass(s"$tmp/out-shuffled", 0)) == digest)
+    assert(readPass(s"$tmp/out-shuffled", 0).count() == plain.count())
+    assert(!spark.read.parquet(s"$tmp/out-shuffled/data").columns.contains("extra"))
+  }
+
   test("poison rows (budget violations) become error columns, not task failures") {
     import spark.implicits._
     val deep = "<div>" * 100000 + "x"
