@@ -42,7 +42,13 @@ import scala.jdk.CollectionConverters._
   *    accumulator updates Spark applies once per partition and never from a
   *    failed attempt, so the counts are exact without re-reading the pass or
   *    collecting a data row. The ≤ buckets/P rows land as one file in
-  *    `<output>/_lineage`, and metrics are printed as one JSON line.
+  *    `<output>/_lineage`, and metrics are printed as one JSON line;
+  *  - a local (`file:`) output is written through [[PosixLocalFileSystem]]:
+  *    the pass, its lineage and the progress markers. Without libhadoop the
+  *    stock local FileSystem starts a `chmod` process for every file, `.crc`
+  *    sidecar and directory it creates (about 200 per 64-bucket pass); this
+  *    one sets the same modes with a syscall. HDFS, object stores and the
+  *    input read use their usual FileSystem.
   *
   * A pass runs three Spark jobs: the extract stage's shuffle, the sorted
   * write, and the one-task lineage write.
@@ -86,9 +92,10 @@ object ExtractJob {
     val io = TableIO.resolve(args.format)
     val metrics = Extraction.Metrics.register(spark)
     // progress markers go through the Hadoop FileSystem resolved from the
-    // output URI so --output may be local, HDFS, or an object store
+    // output URI so --output may be local, HDFS, or an object store; a local
+    // one is the pass writes' PosixLocalFileSystem (no chmod process)
     val progressDir = new HPath(args.output, "_progress")
-    val fs = progressDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = progressDir.getFileSystem(PosixLocalFileSystem.conf(spark.sparkContext.hadoopConfiguration))
     fs.mkdirs(progressDir)
 
     val bucketsPerPass = args.buckets / args.passes

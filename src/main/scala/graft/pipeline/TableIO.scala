@@ -41,7 +41,14 @@ object TableIO {
   }
 }
 
-/** Directory-per-pass Parquet implementation (local/HDFS/object store). */
+/** Directory-per-pass Parquet implementation (local/HDFS/object store).
+  *
+  * Both writes carry [[PosixLocalFileSystem.options]], so a local (`file:`)
+  * output sets each file's and directory's mode with a syscall instead of a
+  * `chmod` process; the files, their `.crc` sidecars and their modes are
+  * what the stock local FileSystem writes. Other schemes and the input read
+  * are untouched.
+  */
 object ParquetTableIO extends TableIO {
 
   /** Reads with the [[TranscriptTurn]] schema, so no footer job infers one;
@@ -51,12 +58,13 @@ object ParquetTableIO extends TableIO {
     spark.read.schema(Encoders.product[TranscriptTurn].schema).parquet(path)
 
   override def writePass(df: DataFrame, root: String, pass: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    df.write.options(PosixLocalFileSystem.options).mode(SaveMode.Overwrite)
       .partitionBy("_bucket")
       .parquet(s"$root/data/pass=$pass")
 
   override def writeLineage(df: DataFrame, root: String, pass: Int): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/_lineage/pass=$pass")
+    df.write.options(PosixLocalFileSystem.options).mode(SaveMode.Overwrite)
+      .parquet(s"$root/_lineage/pass=$pass")
 }
 
 /** Iceberg implementation: `root` is a catalog-qualified table prefix (e.g.

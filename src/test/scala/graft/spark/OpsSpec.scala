@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,19 +114,32 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("LSH ANN achieves reasonable recall vs brute force") {
+  /** Recall@5 of an ANN operator against `bruteForceTopK`: 200 sin-phase
+    * vectors in 16 dimensions, 10 queries (BASELINE.md "ANN recall@k").
+    */
+  private def recallAt5(ann: (DataFrame, DataFrame) => DataFrame): Double = {
     import spark.implicits._
     def vec(seed: Int): Array[Float] =
       Array.tabulate(16)(d => math.sin(seed * 131 + d * 17).toFloat)
-    val base = (0L until 200L).map(i => (i, vec(i.toInt)))
-    val df = base.toDF("vec_id", "embedding")
+    val df = (0L until 200L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val queries = df.filter(col("vec_id") < 10)
-    val exact = Similarity.bruteForceTopK(df, queries, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val approx = Similarity.lshTopK(df, queries, k = 5, nPlanes = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
+    def pairs(out: DataFrame) = out.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = pairs(Similarity.bruteForceTopK(df, queries, k = 5))
+    exact.intersect(pairs(ann(df, queries))).size.toDouble / exact.size
+  }
+
+  test("LSH ANN achieves reasonable recall vs brute force") {
+    val recall = recallAt5((df, q) => Similarity.lshTopK(df, q, k = 5, nPlanes = 6))
     assert(recall >= 0.5, s"recall=$recall")
+  }
+
+  test("IVF ANN with trained centroids achieves reasonable recall vs brute force") {
+    val recall = recallAt5 { (df, q) =>
+      val cs = Similarity.kmeansTrain(df, nLists = 8, iters = 5, seed = 42L, dim = 16)
+      Similarity.ivfTopK(df, q, k = 5, centroids = cs, nProbe = 2)
+    }
+    // measured 1.0, probing 2 of 8 trained lists
+    assert(recall >= 0.9, s"recall=$recall")
   }
 
   test("embeddingNearDups recovers planted duplicates via LSH buckets") {

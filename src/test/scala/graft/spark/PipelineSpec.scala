@@ -158,6 +158,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(started.get > 0 && started.get <= 3, s"${started.get} Spark jobs")
   }
 
+  test("a default 64-bucket ExtractJob run starts no process") {
+    val tmp = Files.createTempDirectory("graft-exec").toString
+    Transcripts.generate(spark, 300, seed = 17L).toDF().write.parquet(s"$tmp/in")
+    // the stock local FileSystem without libhadoop starts a chmod process
+    // per created file, .crc sidecar and directory: about 200 for this run
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val previous = System.getSecurityManager
+    System.setSecurityManager(new SecurityManager {
+      override def checkPermission(perm: java.security.Permission): Unit = ()
+      override def checkPermission(perm: java.security.Permission, context: AnyRef): Unit = ()
+      override def checkExec(cmd: String): Unit = started.add(cmd)
+    })
+    try ExtractJob.run(spark, ExtractJob.Args(s"$tmp/in", s"$tmp/out"))
+    finally System.setSecurityManager(previous)
+    assert(started.size == 0, s"processes: ${started.asScala.toSeq.distinct.mkString(", ")}")
+    assert(spark.read.parquet(s"$tmp/out/data/pass=0").count() > 0)
+  }
+
   test("ExtractJob reads input columns by name: extra and reordered columns change nothing") {
     val tmp = Files.createTempDirectory("graft-schema").toString
     val plain = Transcripts.generate(spark, 50, seed = 13L).toDF()
