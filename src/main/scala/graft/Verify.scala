@@ -15,13 +15,20 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // stderr: each query's wall seconds (or `failed`), then a closing total
+    def secs(since: Long): String = f"${(System.nanoTime() - since) / 1e9}%.3f s"
+    val start = System.nanoTime()
+    val failed = SparkEntry.queries.count { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        System.err.println(s"[verify] $name ${secs(t0)}"); false
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"); true
       }
     }
+    System.err.println(
+      s"[verify] ${SparkEntry.queries.size} queries, $failed failed, ${secs(start)}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

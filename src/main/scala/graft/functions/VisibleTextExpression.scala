@@ -5,16 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{Budgets, HtmlParser, ParseOptions, VisibleText, VisibleTextOptions}
+import graft.core.{HtmlParser, ParseOptions, VisibleText, VisibleTextOptions}
 
 /** Static entry points the generated code calls into (kept tiny so the
   * JIT inlines the dispatch; the parser itself is the work).
   */
 object VisibleTextEval {
-  private val budgets = Budgets(
-    maxInputBytes = Some(32 * 1024 * 1024),
-    maxNodes = Some(2 * 1024 * 1024),
-    maxDepth = Some(65536))
+  private val budgets = graft.pipeline.Extraction.DefaultBudgets
 
   // Budget trips, malformed-input surprises, and recursion overflow on the
   // task thread (maxDepth is only checked post-build) degrade to "" so one

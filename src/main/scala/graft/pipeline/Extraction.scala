@@ -16,7 +16,8 @@ import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
   *    thread: the tree builder and the node converter recurse over the DOM
   *    (reference recursion: src/internal/tree/build.ts:420-490), and
   *    adversarial deeply-nested inputs overflow executor default stacks.
-  *    One thread per ~512-row batch amortizes thread start-up to noise;
+  *    One worker thread per task, fed ~512-row batches, amortizes thread
+  *    start-up to noise;
   *  - a poison document can never kill a task: budget violations and any
   *    unexpected error land in the `budget_error` column (north rule:
   *    per-row guard, reference budget semantics src/public/mod.ts:165-180).
@@ -89,6 +90,32 @@ object Extraction {
     def close(): Unit = in.offer(Poison, 1, java.util.concurrent.TimeUnit.SECONDS)
   }
 
+  private val taskWorkers = new java.util.concurrent.ConcurrentHashMap[Long, BigStackWorker]
+
+  /** Runs `f` on the current task's [[BigStackWorker]], started on the
+    * task's first call and closed when the task completes. Outside a task,
+    * `f` runs on a worker started and closed for this one call.
+    */
+  private def onTaskWorker[T](f: () => T): T = TaskContext.get() match {
+    case null =>
+      val worker = new BigStackWorker
+      try worker(f) finally worker.close()
+    case tc =>
+      val id = tc.taskAttemptId()
+      val worker = Option(taskWorkers.get(id)).getOrElse {
+        val started = new BigStackWorker
+        taskWorkers.put(id, started)
+        tc.addTaskCompletionListener[Unit] { _ => taskWorkers.remove(id); started.close() }
+        started
+      }
+      worker(f)
+  }
+
+  /** `rowFn` over `turns`, in batches, on the task's deep-stack worker. */
+  private[pipeline] def extractOnTaskWorker(turns: Iterator[TranscriptTurn])
+                                           (rowFn: TranscriptTurn => ExtractedTurn): Iterator[ExtractedTurn] =
+    turns.grouped(BatchSize).flatMap(batch => onTaskWorker(() => batch.map(rowFn)))
+
   /** Extract one turn. Total for data-shaped failures: budget trips, parse
     * surprises and recursion overflow degrade to the `budget_error` column;
     * genuinely fatal VM errors (OOM, internal JVM errors) propagate and fail
@@ -102,10 +129,7 @@ object Extraction {
       case e: BudgetExceededException =>
         ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
           0, "", s"budget:${e.payload.budget}", htmlLen, 0L)
-      case scala.util.control.NonFatal(e) =>
-        ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
-          0, "", s"internal:${e.getClass.getSimpleName}", htmlLen, 0L)
-      case e: StackOverflowError =>
+      case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
         ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
           0, "", s"internal:${e.getClass.getSimpleName}", htmlLen, 0L)
     }
@@ -179,23 +203,17 @@ object Extraction {
                          (rowFn: TranscriptTurn => ExtractedTurn): Dataset[ExtractedTurn] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      val worker = new BigStackWorker
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => worker.close()))
-      val batched = it.grouped(BatchSize).flatMap { batch =>
-        val out = worker(() => batch.map(rowFn))
-        metrics.foreach { m =>
-          m.turnsIn.add(batch.size.toLong)
-          out.foreach { e =>
-            if (e.budget_error.isEmpty) m.turnsOk.add(1L) else m.turnsFailed.add(1L)
-            m.parseErrors.add(e.n_parse_errors.toLong)
-            m.bytesIn.add(e.n_chars_in)
-            m.bytesOut.add(e.n_chars_out)
-          }
+      val out = extractOnTaskWorker(it)(rowFn)
+      metrics.fold(out) { m =>
+        out.map { e =>
+          m.turnsIn.add(1L)
+          if (e.budget_error.isEmpty) m.turnsOk.add(1L) else m.turnsFailed.add(1L)
+          m.parseErrors.add(e.n_parse_errors.toLong)
+          m.bytesIn.add(e.n_chars_in)
+          m.bytesOut.add(e.n_chars_out)
+          e
         }
-        out
       }
-      batched
     }
   }
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.core.{Budgets, VisibleTextOptions}
+import graft.core.VisibleTextOptions
 
 /** Stateful Structured-Streaming variant of the conversation digest:
   * `readStream → withWatermark(ts) → groupByKey(conv_id) →
@@ -12,8 +12,9 @@ import graft.core.{Budgets, VisibleTextOptions}
   *
   * Scale shape: state is O(1) per conversation (three longs), the digest is
   * an order-independent XOR so out-of-order turns fold in without re-reading
-  * history, and extraction runs inline per row (total — poison rows degrade
-  * to an error inside extractOne, never fail the query). Each micro-batch
+  * history, and extraction runs per row on the task's deep-stack worker with
+  * the batch budgets (total — poison rows degrade to an error inside
+  * extractOne, never fail the query). Each micro-batch
   * emits the updated running digest per touched conversation
   * (OutputMode.Update).
   *
@@ -30,10 +31,6 @@ object StreamingDigest {
 
   final case class ConvUpdate(conv_id: String, n_turns: Long, digest: Long,
                               n_chars: Long)
-
-  private val DefaultBudgets = Budgets(
-    maxInputBytes = Some(32 * 1024 * 1024),
-    maxNodes = Some(2 * 1024 * 1024))
 
   /** Per-turn extracted-text digests over a streaming typed transcript
     * Dataset. The input must have `.withWatermark("ts", ...)` applied
@@ -55,12 +52,13 @@ object StreamingDigest {
             ConvUpdate(convId, st.n_turns, st.digest, st.n_chars)
           } else {
             var st = state.getOption.getOrElse(ConvDigestState(0L, 0L, 0L))
-            rows.foreach { t =>
-              val extracted = Extraction.extractOne(t, DefaultBudgets, VisibleTextOptions())
+            Extraction.extractOnTaskWorker(rows)(
+              Extraction.extractOne(_, Extraction.DefaultBudgets, VisibleTextOptions())
+            ).foreach { e =>
               st = ConvDigestState(
                 st.n_turns + 1L,
-                st.digest ^ ConvDigest.turnHash(t.turn_idx.toLong, extracted.extracted_text),
-                st.n_chars + extracted.extracted_text.length.toLong)
+                st.digest ^ ConvDigest.turnHash(e.turn_idx.toLong, e.extracted_text),
+                st.n_chars + e.extracted_text.length.toLong)
             }
             state.update(st)
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + stateTtlMs)

@@ -52,13 +52,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
-  test("stateful streaming digest equals the batch ConvDigest aggregation") {
+  /** Final (n_turns, digest, n_chars) per conversation from one
+    * AvailableNow pass of [[StreamingDigest.updates]] over the parquet at `in`.
+    */
+  private def streamingDigests(in: String): Map[String, (Long, Long, Long)] = {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stream-digest").toString
-    val in = s"$tmp/in"
-    val ckpt = s"$tmp/ckpt"
-    Transcripts.generate(spark, 30, seed = 7L).toDF().write.parquet(in)
-
+    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val name = s"graft_digest_out_${System.nanoTime()}"
     val schema = spark.read.parquet(in).schema
     val streamIn = spark.readStream.schema(schema).parquet(in)
       .withColumn("turn_idx", col("turn_idx").cast("int"))
@@ -66,7 +66,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[TranscriptTurn]
     val query = StreamingDigest.updates(streamIn).writeStream
       .format("memory")
-      .queryName("graft_digest_out")
+      .queryName(name)
       .outputMode("update")
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
@@ -75,22 +75,48 @@ class StreamingSpec extends AnyFunSuite {
 
     // streaming emits the latest running state per conversation; with one
     // AvailableNow pass that's one final row per conv
-    val streamed = spark.table("graft_digest_out")
+    spark.table(name)
       .groupBy(col("conv_id"))
       .agg(max(struct(col("n_turns"), col("digest"), col("n_chars"))).as("s"))
       .select(col("conv_id"), col("s.n_turns"), col("s.digest"), col("s.n_chars"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
+  }
 
+  /** The batch [[ConvDigest.Agg]] over [[Extraction.extract]] of the same input. */
+  private def batchDigests(in: String): Map[String, (Long, Long, Long)] = {
+    import spark.implicits._
     val batchTurns = spark.read.parquet(in)
       .withColumn("turn_idx", col("turn_idx").cast("int")).as[TranscriptTurn]
-    val batch = Extraction.extract(batchTurns)
+    Extraction.extract(batchTurns)
       .map(e => (e.conv_id, (e.turn_idx.toLong, e.extracted_text)))
       .groupByKey(_._1).mapValues(_._2)
       .agg(new ConvDigest.Agg().toColumn.name("st"))
       .collect().map { case (c, st) => c -> (st.n_turns, st.digest, st.n_chars) }
       .toMap
+  }
 
-    assert(streamed == batch)
+  test("stateful streaming digest equals the batch ConvDigest aggregation") {
+    val in = s"${Files.createTempDirectory("graft-stream-digest")}/in"
+    Transcripts.generate(spark, 30, seed = 7L).toDF().write.parquet(in)
+    assert(streamingDigests(in) == batchDigests(in))
+  }
+
+  test("streaming digest extracts a deeply nested turn as the batch digest does") {
+    import spark.implicits._
+    val in = s"${Files.createTempDirectory("graft-stream-deep")}/in"
+    // 20,000 levels: below DefaultBudgets.maxDepth, far past what a default
+    // 1 MiB task-thread stack can recurse through
+    val deep = "<div>" * 20000 + "deep text"
+    val ts = new java.sql.Timestamp(1700000000000L)
+    Seq(TranscriptTurn("c1", 0, "user", "<p>hello</p>", "", ts),
+        TranscriptTurn("c1", 1, "assistant", deep, "", ts),
+        TranscriptTurn("c2", 0, "user", "<b>hi</b>", "", ts))
+      .toDS().write.parquet(in)
+    val batch = batchDigests(in)
+    assert(batch("c1") == (2L,
+      ConvDigest.turnHash(0L, "hello") ^ ConvDigest.turnHash(1L, "deep text"),
+      "hello".length.toLong + "deep text".length.toLong))
+    assert(streamingDigests(in) == batch)
   }
 }
