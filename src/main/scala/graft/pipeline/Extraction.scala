@@ -116,23 +116,28 @@ object Extraction {
                                            (rowFn: TranscriptTurn => ExtractedTurn): Iterator[ExtractedTurn] =
     turns.grouped(BatchSize).flatMap(batch => onTaskWorker(() => batch.map(rowFn)))
 
-  /** Extract one turn. Total for data-shaped failures: budget trips, parse
-    * surprises and recursion overflow degrade to the `budget_error` column;
-    * genuinely fatal VM errors (OOM, internal JVM errors) propagate and fail
-    * the task so Spark retries it — same contract as
-    * [[graft.functions.VisibleTextEval]]'s guard.
+  /** The one failure guard of per-document work: `body`, or `failed` with
+    * the failure's class — `budget:<budget>` for a budget trip,
+    * `internal:<exception>` for parse surprises and recursion overflow.
+    * Genuinely fatal VM errors (OOM, internal JVM errors) propagate and fail
+    * the task so Spark retries it. Shared by the typed extraction and the
+    * `visible_text()` / `text_content()` SQL expressions.
+    */
+  private[graft] def guarded[T](body: => T)(failed: String => T): T =
+    try body
+    catch {
+      case e: BudgetExceededException => failed(s"budget:${e.payload.budget}")
+      case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+        failed(s"internal:${e.getClass.getSimpleName}")
+    }
+
+  /** Extract one turn; a [[guarded]] failure becomes an empty row with its
+    * class in the `budget_error` column.
     */
   private[graft] def guardedExtract(t: TranscriptTurn, htmlLen: Long)
                                    (body: => ExtractedTurn): ExtractedTurn =
-    try body
-    catch {
-      case e: BudgetExceededException =>
-        ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
-          0, "", s"budget:${e.payload.budget}", htmlLen, 0L)
-      case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
-        ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
-          0, "", s"internal:${e.getClass.getSimpleName}", htmlLen, 0L)
-    }
+    guarded(body)(error => ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
+      0, "", error, htmlLen, 0L))
 
   def extractOne(t: TranscriptTurn, budgets: Budgets,
                  options: VisibleTextOptions): ExtractedTurn = {

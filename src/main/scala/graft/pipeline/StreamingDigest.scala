@@ -26,6 +26,13 @@ import graft.core.VisibleTextOptions
   * eviction starts a fresh digest for that conversation (callers that need
   * exactly-once-per-conversation folds must XOR the emitted updates
   * downstream, which is associative and order-independent).
+  *
+  * Late turns: Spark drops a turn whose `ts` is at or before the current
+  * event-time watermark before it reaches the state function. The first
+  * micro-batch runs at the initial watermark, the epoch (0 ms), so a turn
+  * with `ts` at or before 1970-01-01T00:00:00Z never counts here, although
+  * the batch [[ConvDigest]] counts it. Dropped turns are reported only in
+  * the query progress (`stateOperators(i).numRowsDroppedByWatermark`).
   */
 object StreamingDigest {
 

@@ -72,7 +72,7 @@ class VisibleTextFixtureSpec extends AnyFunSuite {
     }
   }
 
-  // Regression (found by scripts/conformance/extract_diff.py): the output
+  // Regression (found by the extraction differential): the output
   // edge-trim follows JS String.trim() / regex \s — which includes NBSP,
   // NNBSP, FEFF and the Zs block — not Java's Character.isWhitespace.
   // Reference: mod.ts:1138 (output.trim()) and :1484 (/\s/ char trim).

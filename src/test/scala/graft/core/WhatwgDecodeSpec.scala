@@ -3,8 +3,8 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TextDecoder-exact decode semantics (verified against the reference's
-  * real sniff+decode by scripts/conformance/bytes_diff.py; these pin the
-  * behaviors in-repo without needing node).
+  * real sniff+decode by the byte-decode differential, whose cases
+  * PinnedCorpusSpec replays; these pin the named behaviors one by one).
   */
 class WhatwgDecodeSpec extends AnyFunSuite {
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftExtensions, TextContentExpression, VisibleTextExpression}
+import graft.pipeline.{Extraction, TranscriptTurn}
 
 /** The SQL surface: visible_text / text_content planned as native codegen
   * expressions (no UDF boxing), verified against the core library.
@@ -45,6 +46,20 @@ class SqlFunctionSpec extends AnyFunSuite {
     Seq((null: String, 0)).toDF("html", "id").createOrReplaceTempView("nulldoc")
     val row = spark.sql("SELECT visible_text(html) FROM nulldoc").collect().head
     assert(row.isNullAt(0))
+  }
+
+  test("a guarded failure is NULL in SQL, and a budget_error in the typed path") {
+    import spark.implicits._
+    // deeper than DefaultBudgets.maxDepth (the PipelineSpec poison turn)
+    val poison = "<span>" * 70000 + "x"
+    Seq((poison, 0), ("<p></p>", 1)).toDF("html", "id").createOrReplaceTempView("poisoned")
+    val rows = spark.sql("SELECT id, visible_text(html), text_content(html) FROM poisoned")
+      .collect().map(r => r.getInt(0) -> (Option(r.getString(1)), Option(r.getString(2)))).toMap
+    assert(rows(0) == ((None, None)), "a poisoned document is NULL, not an empty page")
+    assert(rows(1) == ((Some(""), Some(""))), "an empty page is still \"\"")
+    val typed = Extraction.extract(Seq(TranscriptTurn("c", 0, "user", poison, "",
+      new java.sql.Timestamp(0L))).toDS()).collect().head
+    assert(typed.budget_error.nonEmpty)
   }
 
   test("visible_text participates in whole-stage codegen") {

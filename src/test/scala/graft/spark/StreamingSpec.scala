@@ -53,9 +53,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Final (n_turns, digest, n_chars) per conversation from one
-    * AvailableNow pass of [[StreamingDigest.updates]] over the parquet at `in`.
+    * AvailableNow pass of [[StreamingDigest.updates]] over the parquet at `in`,
+    * with the rows the pass's stateful operator dropped as late.
     */
-  private def streamingDigests(in: String): Map[String, (Long, Long, Long)] = {
+  private def streamingDigestRun(in: String): (Map[String, (Long, Long, Long)], Long) = {
     import spark.implicits._
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
     val name = s"graft_digest_out_${System.nanoTime()}"
@@ -75,13 +76,17 @@ class StreamingSpec extends AnyFunSuite {
 
     // streaming emits the latest running state per conversation; with one
     // AvailableNow pass that's one final row per conv
-    spark.table(name)
+    val digests = spark.table(name)
       .groupBy(col("conv_id"))
       .agg(max(struct(col("n_turns"), col("digest"), col("n_chars"))).as("s"))
       .select(col("conv_id"), col("s.n_turns"), col("s.digest"), col("s.n_chars"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
+    val dropped = query.recentProgress.iterator
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    (digests, dropped)
   }
+
 
   /** The batch [[ConvDigest.Agg]] over [[Extraction.extract]] of the same input. */
   private def batchDigests(in: String): Map[String, (Long, Long, Long)] = {
@@ -99,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stateful streaming digest equals the batch ConvDigest aggregation") {
     val in = s"${Files.createTempDirectory("graft-stream-digest")}/in"
     Transcripts.generate(spark, 30, seed = 7L).toDF().write.parquet(in)
-    assert(streamingDigests(in) == batchDigests(in))
+    assert(streamingDigestRun(in)._1 == batchDigests(in))
   }
 
   test("streaming digest extracts a deeply nested turn as the batch digest does") {
@@ -117,6 +122,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch("c1") == (2L,
       ConvDigest.turnHash(0L, "hello") ^ ConvDigest.turnHash(1L, "deep text"),
       "hello".length.toLong + "deep text".length.toLong))
-    assert(streamingDigests(in) == batch)
+    assert(streamingDigestRun(in)._1 == batch)
+  }
+
+  test("streaming digest drops turns at the epoch as late, and reports them") {
+    import spark.implicits._
+    val in = s"${Files.createTempDirectory("graft-stream-epoch")}/in"
+    val epoch = new java.sql.Timestamp(0L)
+    val later = new java.sql.Timestamp(1700000000000L)
+    Seq(TranscriptTurn("c1", 0, "user", "<p>at the epoch</p>", "", epoch),
+        TranscriptTurn("c1", 1, "assistant", "<p>also</p>", "", epoch),
+        TranscriptTurn("c2", 0, "user", "<b>kept</b>", "", later))
+      .toDS().write.parquet(in)
+    assert(batchDigests(in).keySet == Set("c1", "c2"))
+    val (streamed, dropped) = streamingDigestRun(in)
+    assert(streamed.keySet == Set("c2"))
+    assert(dropped == 2L)
   }
 }
