@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL extension entry point. Enables:
   *
@@ -13,20 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * work from plain SQL, planned as native codegen expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("visible_text"),
-      new ExpressionInfo(classOf[VisibleTextExpression].getName, "visible_text"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "visible_text(html) takes exactly one argument")
-        VisibleTextExpression(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("text_content"),
-      new ExpressionInfo(classOf[TextContentExpression].getName, "text_content"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "text_content(html) takes exactly one argument")
-        TextContentExpression(children.head)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.sqlFunctions.foreach(ext.injectFunction)
 }

@@ -14,25 +14,29 @@ import graft.pipeline.Extraction
 object VisibleTextEval {
   private val budgets = Extraction.DefaultBudgets
 
-  // Budget trips, malformed-input surprises and recursion overflow on the
-  // task thread yield NULL (never "", which would read as an empty page), so
-  // one poison row never kills a task; genuinely fatal errors (OOM etc.)
-  // still fail the task. The typed pipeline's guard, with its failure class
-  // dropped: a SQL string column has nowhere to carry it.
-  private def guard(body: => String): UTF8String =
-    Extraction.guarded(UTF8String.fromString(body))(_ => null)
+  // Budget trips, malformed-input surprises and recursion overflow yield
+  // NULL (never "", which would read as an empty page), so one poison row
+  // never kills a task; genuinely fatal errors (OOM etc.) still fail the
+  // task. The typed pipeline's guard, with its failure class dropped: a SQL
+  // string column has nowhere to carry it. A document that overflows the
+  // task thread's stack runs once more on the task's 64 MiB-stack worker,
+  // as the typed path runs every document; only such a document pays for
+  // that hand-off, and one that overflows there too is NULL.
+  private def guard(body: () => String): UTF8String =
+    Extraction.guarded(UTF8String.fromString(
+      try body() catch { case _: StackOverflowError => Extraction.onTaskWorker(body) }))(_ => null)
+
+  private def parse(html: UTF8String) =
+    HtmlParser.parse(html.toString, ParseOptions(budgets = Some(budgets)))
 
   def visibleText(html: UTF8String): UTF8String = {
     if (html == null) return null
-    guard(VisibleText.ofDocument(
-      HtmlParser.parse(html.toString, ParseOptions(budgets = Some(budgets))),
-      VisibleTextOptions()))
+    guard(() => VisibleText.ofDocument(parse(html), VisibleTextOptions()))
   }
 
   def textContent(html: UTF8String): UTF8String = {
     if (html == null) return null
-    guard(graft.core.Traversal.textContent(
-      HtmlParser.parse(html.toString, ParseOptions(budgets = Some(budgets))).children))
+    guard(() => graft.core.Traversal.textContent(parse(html).children))
   }
 }
 

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
 /** Scala DataFrame-side entry points for the native extraction expressions —
@@ -13,20 +14,29 @@ import org.apache.spark.sql.functions.call_function
   */
 object functions {
 
+  /** The SQL functions, as (identifier, info, builder) triples: the one list
+    * both [[register]] and [[GraftExtensions]] install. Each builder rejects
+    * any argument count but one.
+    */
+  private[graft] val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    unary("visible_text", classOf[VisibleTextExpression], VisibleTextExpression),
+    unary("text_content", classOf[TextContentExpression], TextContentExpression))
+
+  private def unary(name: String, cls: Class[_], build: Expression => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == 1, s"$name(html) takes exactly one argument")
+        build(children.head)
+      })
+
   /** Register visible_text / text_content on a live session (the same
     * registration [[GraftExtensions]] performs at session build time).
     * Idempotent.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("visible_text"),
-      new ExpressionInfo(classOf[VisibleTextExpression].getName, "visible_text"),
-      children => VisibleTextExpression(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("text_content"),
-      new ExpressionInfo(classOf[TextContentExpression].getName, "text_content"),
-      children => TextContentExpression(children.head))
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 
   /** Normalized visible text of an HTML document column. */
   def visible_text(html: Column): Column = call_function("visible_text", html)

@@ -42,7 +42,11 @@ import scala.jdk.CollectionConverters._
   *    accumulator updates Spark applies once per partition and never from a
   *    failed attempt, so the counts are exact without re-reading the pass or
   *    collecting a data row. The ≤ buckets/P rows land as one file in
-  *    `<output>/_lineage`, and metrics are printed as one JSON line;
+  *    `<output>/_lineage`;
+  *  - the closing `job-done` JSON line sums the lineage rows of the passes
+  *    this run executed (a resumed run skips the completed passes), so its
+  *    counts are exact too: there is no second, per-row counter in the
+  *    extract stage, a shuffle-map stage whose re-run would count again;
   *  - a local (`file:`) output is written through [[PosixLocalFileSystem]]:
   *    the pass, its lineage and the progress markers. Without libhadoop the
   *    stock local FileSystem starts a `chmod` process for every file, `.crc`
@@ -62,7 +66,7 @@ object ExtractJob {
       passes: Int = 1,
       resume: Boolean = false,
       salt: Int = 0,
-      format: String = TableIO.defaultFormat,
+      format: String = "parquet",
       mainContent: Boolean = false
   )
 
@@ -87,10 +91,21 @@ object ExtractJob {
     a
   }
 
-  def run(spark: SparkSession, args: Args): Unit = {
+  /** What the `job-done` line reports: the wall seconds of the run and the
+    * sums of the lineage rows of the passes it executed.
+    */
+  final case class Summary(sec: Double, turnsIn: Long, turnsOk: Long, turnsFailed: Long,
+                           parseErrors: Long, bytesIn: Long, bytesOut: Long) {
+    def json: String =
+      s"""{"event":"job-done","sec":$sec,"turnsIn":$turnsIn,"turnsOk":$turnsOk,""" +
+      s""""turnsFailed":$turnsFailed,"parseErrors":$parseErrors,"bytesIn":$bytesIn,""" +
+      s""""bytesOut":$bytesOut}"""
+  }
+
+  /** Runs the job, prints its `job-done` line and returns the [[Summary]]. */
+  def run(spark: SparkSession, args: Args): Summary = {
     import spark.implicits._
     val io = TableIO.resolve(args.format)
-    val metrics = Extraction.Metrics.register(spark)
     // progress markers go through the Hadoop FileSystem resolved from the
     // output URI so --output may be local, HDFS, or an object store; a local
     // one is the pass writes' PosixLocalFileSystem (no chmod process)
@@ -100,6 +115,7 @@ object ExtractJob {
 
     val bucketsPerPass = args.buckets / args.passes
     val t0 = System.nanoTime()
+    val ran = Seq.newBuilder[LineageRow]
     for (pass <- 0 until args.passes) {
       val marker = new HPath(progressDir, s"pass-$pass.done")
       if (args.resume && fs.exists(marker)) {
@@ -117,13 +133,10 @@ object ExtractJob {
               pmod(xxhash64(col("conv_id"), expr(s"turn_idx DIV ${args.salt}")), lit(args.salt)))
           else turns
 
-        val bucketOf = salted.select(col("_bucket"),
-          col("conv_id"), col("turn_idx"), col("role"), col("text"),
-          col("tool"), col("ts"))
-        val turnsDs = bucketOf.drop("_bucket").as[TranscriptTurn]
+        val turnsDs = salted.drop("_bucket").as[TranscriptTurn]
         val extracted =
-          (if (args.mainContent) Extraction.extractMain(turnsDs, Some(metrics))
-           else Extraction.extract(turnsDs, Some(metrics)))
+          (if (args.mainContent) Extraction.extractMain(turnsDs)
+           else Extraction.extract(turnsDs))
             .withColumn("_bucket", pmod(xxhash64(col("conv_id")), lit(args.buckets)))
 
         // stable turn ordering inside every bucket file: repartition by
@@ -138,18 +151,20 @@ object ExtractJob {
 
         val lin = lineage.value.asScala.toSeq.sortBy(_.partition_id)
         io.writeLineage(spark.createDataset(lin).toDF().coalesce(1), args.output, pass)
+        ran ++= lin
 
         val mOut = fs.create(marker, true)
         try mOut.write(s"pass=$pass\n".getBytes("UTF-8")) finally mOut.close()
         println(s"""{"event":"pass-done","pass":$pass,"buckets":[$lo,$hi)}""".replace(")}", "]}"))
       }
     }
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(
-      s"""{"event":"job-done","sec":$secs,"turnsIn":${metrics.turnsIn.value},""" +
-      s""""turnsOk":${metrics.turnsOk.value},"turnsFailed":${metrics.turnsFailed.value},""" +
-      s""""parseErrors":${metrics.parseErrors.value},"bytesIn":${metrics.bytesIn.value},""" +
-      s""""bytesOut":${metrics.bytesOut.value}}""")
+    val all = ran.result()
+    val rows = all.map(_.n_rows).sum
+    val failed = all.map(_.n_errors).sum
+    val summary = Summary((System.nanoTime() - t0) / 1e9, rows, rows - failed, failed,
+      all.map(_.n_parse_errors).sum, all.map(_.n_chars_in).sum, all.map(_.n_chars_out).sum)
+    println(summary.json)
+    summary
   }
 
   def main(argv: Array[String]): Unit = {

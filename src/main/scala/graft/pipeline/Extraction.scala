@@ -2,8 +2,8 @@ package graft.pipeline
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.util.CollectionAccumulator
 
 /** Per-turn extraction: the reference's `visibleText(parse(html))` +
   * provenance-token spans, run distributed via typed `mapPartitions`.
@@ -20,7 +20,11 @@ import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
   *    start-up to noise;
   *  - a poison document can never kill a task: budget violations and any
   *    unexpected error land in the `budget_error` column (north rule:
-  *    per-row guard, reference budget semantics src/public/mod.ts:165-180).
+  *    per-row guard, reference budget semantics src/public/mod.ts:165-180);
+  *  - extraction keeps no counters of its own: every count (rows, failures,
+  *    parse errors, chars in/out) is a column of the per-partition
+  *    [[LineageRow]], folded by [[lineage]] or, in a job's result stage, by
+  *    [[foldLineage]].
   */
 object Extraction {
 
@@ -30,29 +34,6 @@ object Extraction {
     maxNodes = Some(2 * 1024 * 1024),
     maxDepth = Some(65536)
   )
-
-  final case class Metrics(
-      turnsIn: LongAccumulator,
-      turnsOk: LongAccumulator,
-      turnsFailed: LongAccumulator,
-      parseErrors: LongAccumulator,
-      bytesIn: LongAccumulator,
-      bytesOut: LongAccumulator
-  )
-
-  object Metrics {
-    def register(spark: SparkSession): Metrics = {
-      val sc = spark.sparkContext
-      Metrics(
-        turnsIn = sc.longAccumulator("graft.extract.turnsIn"),
-        turnsOk = sc.longAccumulator("graft.extract.turnsOk"),
-        turnsFailed = sc.longAccumulator("graft.extract.turnsFailed"),
-        parseErrors = sc.longAccumulator("graft.extract.parseErrors"),
-        bytesIn = sc.longAccumulator("graft.extract.bytesIn"),
-        bytesOut = sc.longAccumulator("graft.extract.bytesOut")
-      )
-    }
-  }
 
   private val BatchSize = 512
   private val WorkerStackBytes = 64L * 1024 * 1024
@@ -96,7 +77,7 @@ object Extraction {
     * task's first call and closed when the task completes. Outside a task,
     * `f` runs on a worker started and closed for this one call.
     */
-  private def onTaskWorker[T](f: () => T): T = TaskContext.get() match {
+  private[graft] def onTaskWorker[T](f: () => T): T = TaskContext.get() match {
     case null =>
       val worker = new BigStackWorker
       try worker(f) finally worker.close()
@@ -201,42 +182,19 @@ object Extraction {
     }
   }
 
-  /** Shared distributed plumbing: shuffle-free `mapPartitions`, one
-    * amortized deep-stack worker per task, batched handoff, accumulators.
-    */
-  private def extractWith(ds: Dataset[TranscriptTurn], metrics: Option[Metrics])
-                         (rowFn: TranscriptTurn => ExtractedTurn): Dataset[ExtractedTurn] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val out = extractOnTaskWorker(it)(rowFn)
-      metrics.fold(out) { m =>
-        out.map { e =>
-          m.turnsIn.add(1L)
-          if (e.budget_error.isEmpty) m.turnsOk.add(1L) else m.turnsFailed.add(1L)
-          m.parseErrors.add(e.n_parse_errors.toLong)
-          m.bytesIn.add(e.n_chars_in)
-          m.bytesOut.add(e.n_chars_out)
-          e
-        }
-      }
-    }
-  }
-
   /** Distributed extraction. No shuffle; preserves input partitioning. */
-  def extract(ds: Dataset[TranscriptTurn],
-              metrics: Option[Metrics] = None,
-              budgets: Budgets = DefaultBudgets,
-              options: VisibleTextOptions = VisibleTextOptions()): Dataset[ExtractedTurn] =
-    extractWith(ds, metrics)(extractOne(_, budgets, options))
+  def extract(ds: Dataset[TranscriptTurn]): Dataset[ExtractedTurn] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions(extractOnTaskWorker(_)(extractOne(_, DefaultBudgets, VisibleTextOptions())))
+  }
 
   /** Distributed main-content extraction (same plumbing, boilerplate
     * stripped per turn). No shuffle; preserves input partitioning.
     */
-  def extractMain(ds: Dataset[TranscriptTurn],
-                  metrics: Option[Metrics] = None,
-                  budgets: Budgets = DefaultBudgets,
-                  options: MainContentOptions = MainContentOptions()): Dataset[ExtractedTurn] =
-    extractWith(ds, metrics)(extractMainOne(_, budgets, options))
+  def extractMain(ds: Dataset[TranscriptTurn]): Dataset[ExtractedTurn] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions(extractOnTaskWorker(_)(extractMainOne(_, DefaultBudgets, MainContentOptions())))
+  }
 
   // -------------------------------------------------------------------
   // Lineage & digests
@@ -255,26 +213,35 @@ object Extraction {
     h
   }
 
-  /** The lineage fold of one task partition over (conv_id, turn_idx, text,
-    * failed): rows, failed rows and the XOR of [[rowDigest]]. XOR is
-    * order-independent, so the global XOR of all partition digests is the
-    * dataset digest at any parallelism. [[lineage]] and [[foldLineage]] both
-    * build their [[LineageRow]]s here.
+  /** The lineage fold of one task partition over each row's (conv_id,
+    * turn_idx, text, failed, parse errors, chars in, chars out): row and
+    * failed-row counts, the sums of parse errors and chars, and the XOR of
+    * [[rowDigest]]. XOR is order-independent, so the global XOR of all
+    * partition digests is the dataset digest at any parallelism.
+    * [[lineage]] and [[foldLineage]] both build their [[LineageRow]]s here.
     */
   final class LineageFold(partitionId: Int) {
     private var rows = 0L
     private var errors = 0L
+    private var parseErrors = 0L
+    private var charsIn = 0L
+    private var charsOut = 0L
     private var digest = 0L
 
-    def add(convId: String, turnIdx: Int, text: String, failed: Boolean): Unit = {
+    def add(convId: String, turnIdx: Int, text: String, failed: Boolean,
+            nParseErrors: Int, nCharsIn: Long, nCharsOut: Long): Unit = {
       rows += 1
       if (failed) errors += 1
+      parseErrors += nParseErrors
+      charsIn += nCharsIn
+      charsOut += nCharsOut
       digest ^= rowDigest(convId, turnIdx, text)
     }
 
     /** The partition's lineage row; none for a partition without rows. */
     def result: Option[LineageRow] =
-      if (rows == 0L) None else Some(LineageRow(partitionId, rows, errors, Nil, digest))
+      if (rows == 0L) None
+      else Some(LineageRow(partitionId, rows, errors, parseErrors, charsIn, charsOut, Nil, digest))
   }
 
   /** One lineage row per task partition: partition id, files, counts and an
@@ -284,7 +251,8 @@ object Extraction {
     import extracted.sparkSession.implicits._
     extracted.mapPartitions { it =>
       val fold = new LineageFold(TaskContext.getPartitionId())
-      it.foreach(e => fold.add(e.conv_id, e.turn_idx, e.extracted_text, e.budget_error.nonEmpty))
+      it.foreach(e => fold.add(e.conv_id, e.turn_idx, e.extracted_text, e.budget_error.nonEmpty,
+        e.n_parse_errors, e.n_chars_in, e.n_chars_out))
       fold.result.iterator
     }
   }
@@ -302,11 +270,15 @@ object Extraction {
     val turn = schema.fieldIndex("turn_idx")
     val text = schema.fieldIndex("extracted_text")
     val error = schema.fieldIndex("budget_error")
+    val parseErrors = schema.fieldIndex("n_parse_errors")
+    val charsIn = schema.fieldIndex("n_chars_in")
+    val charsOut = schema.fieldIndex("n_chars_out")
     rows.mapPartitions { (it: Iterator[Row]) =>
       val fold = new LineageFold(TaskContext.getPartitionId())
       // `++` evaluates its argument once, when `it` is exhausted
       it.map { r =>
-        fold.add(r.getString(conv), r.getInt(turn), r.getString(text), r.getString(error).nonEmpty)
+        fold.add(r.getString(conv), r.getInt(turn), r.getString(text), r.getString(error).nonEmpty,
+          r.getInt(parseErrors), r.getLong(charsIn), r.getLong(charsOut))
         r
       } ++ { fold.result.foreach(sink.add); Iterator.empty }
     }(Encoders.row(schema))

@@ -44,12 +44,16 @@ final case class ExtractedTurn(
 )
 
 /** One lineage row per task partition (north-rule resumability/observability:
-  * partition id, input files seen, row counts, order-independent digest).
+  * partition id, row and failed-row counts, summed parse errors and chars
+  * in/out, input files seen, order-independent digest).
   */
 final case class LineageRow(
     partition_id: Int,
     n_rows: Long,
     n_errors: Long,
+    n_parse_errors: Long,
+    n_chars_in: Long,
+    n_chars_out: Long,
     input_files: Seq[String],
     digest: Long
 )

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Storage seam for the extraction job (SURVEY §7.5): [[ExtractJob]] talks
   * to this trait only, so the deployment picks Parquet directories or
-  * Iceberg tables by swapping a single format constant (`--format` /
-  * `GRAFT_TABLE_FORMAT`) — no job-logic change.
+  * Iceberg tables by swapping a single format name (ExtractJob's
+  * `--format`, `parquet` by default) — no job-logic change.
   *
   * Contract: `root` is a Parquet directory root or an Iceberg table-name
   * prefix; a "pass" is the job's checkpoint unit (ExtractJob commits one
@@ -28,9 +28,6 @@ trait TableIO {
 }
 
 object TableIO {
-
-  /** Deployment default, overridable per-invocation with `--format`. */
-  def defaultFormat: String = sys.env.getOrElse("GRAFT_TABLE_FORMAT", "parquet")
 
   def resolve(format: String): TableIO = format match {
     case "parquet" => ParquetTableIO

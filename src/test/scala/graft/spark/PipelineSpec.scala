@@ -95,6 +95,11 @@ class PipelineSpec extends AnyFunSuite {
     val extracted = Extraction.extract(ds.repartition(5))
     val lineage = Extraction.lineage(extracted).collect()
     assert(lineage.map(_.n_rows).sum == extracted.count())
+    val rows = extracted.collect()
+    assert(lineage.map(_.n_errors).sum == rows.count(_.budget_error.nonEmpty))
+    assert(lineage.map(_.n_parse_errors).sum == rows.map(_.n_parse_errors.toLong).sum)
+    assert(lineage.map(_.n_chars_in).sum == rows.map(_.n_chars_in).sum)
+    assert(lineage.map(_.n_chars_out).sum == rows.map(_.n_chars_out).sum)
     val global = lineage.map(_.digest).reduce(_ ^ _)
     assert(global == Extraction.datasetDigest(extracted))
   }
@@ -118,9 +123,9 @@ class PipelineSpec extends AnyFunSuite {
       .toDS().toDF().write.parquet(s"$tmp/in")
     for (main <- Seq(false, true)) {
       val out = s"$tmp/out-main-$main"
-      ExtractJob.run(spark, ExtractJob.Args(s"$tmp/in", out, buckets = 8, passes = 2,
-        mainContent = main))
-      var failed = 0L
+      val summary = ExtractJob.run(spark, ExtractJob.Args(s"$tmp/in", out, buckets = 8,
+        passes = 2, mainContent = main))
+      val all = Seq.newBuilder[LineageRow]
       for (pass <- 0 until 2) {
         val lineage = spark.read.parquet(s"$out/_lineage/pass=$pass").as[LineageRow].collect()
         val written = readPass(out, pass)
@@ -129,12 +134,27 @@ class PipelineSpec extends AnyFunSuite {
         assert(lineage.map(_.n_errors).sum == errors, s"main=$main pass=$pass errors")
         assert(lineage.map(_.digest).fold(0L)(_ ^ _) == Extraction.datasetDigest(written),
           s"main=$main pass=$pass digest")
+        val (parseErrors, charsIn, charsOut) = written
+          .agg(sum($"n_parse_errors"), sum($"n_chars_in"), sum($"n_chars_out"))
+          .as[(Long, Long, Long)].head()
+        assert(lineage.map(_.n_parse_errors).sum == parseErrors, s"main=$main pass=$pass parse errors")
+        assert(lineage.map(_.n_chars_in).sum == charsIn, s"main=$main pass=$pass chars in")
+        assert(lineage.map(_.n_chars_out).sum == charsOut, s"main=$main pass=$pass chars out")
         // one writer task per bucket of the pass at most, each with rows
         assert(lineage.map(_.partition_id).distinct.length == lineage.length)
         assert(lineage.length <= 4 && lineage.forall(_.n_rows > 0))
-        failed += errors
+        all ++= lineage
       }
-      assert(failed == 1L, s"main=$main: the poisoned turn is counted once")
+      // the job-done record is the sum of both passes' lineage rows
+      val lin = all.result()
+      val rows = lin.map(_.n_rows).sum
+      assert(summary.turnsIn == rows, s"main=$main turnsIn")
+      assert(summary.turnsFailed == lin.map(_.n_errors).sum && summary.turnsFailed == 1L,
+        s"main=$main: the poisoned turn is counted once")
+      assert(summary.turnsOk == rows - 1L, s"main=$main turnsOk")
+      assert(summary.parseErrors == lin.map(_.n_parse_errors).sum, s"main=$main parseErrors")
+      assert(summary.bytesIn == lin.map(_.n_chars_in).sum, s"main=$main bytesIn")
+      assert(summary.bytesOut == lin.map(_.n_chars_out).sum, s"main=$main bytesOut")
     }
   }
 

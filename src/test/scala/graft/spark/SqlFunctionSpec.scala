@@ -1,8 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{InjectedFunctions, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftExtensions, TextContentExpression, VisibleTextExpression}
@@ -73,12 +73,47 @@ class SqlFunctionSpec extends AnyFunSuite {
       (0 until 4).map(i => s"word$i"))
   }
 
+  test("visible_text of a turn deeper than the task thread's stack equals the typed text") {
+    import spark.implicits._
+    // inside DefaultBudgets.maxDepth, but too deep for the 1 MiB task stack
+    val deep = "<div>" * 20000 + "deep text"
+    Seq((deep, 0)).toDF("html", "id").createOrReplaceTempView("deepdoc")
+    val typed = Extraction.extract(Seq(TranscriptTurn("c", 0, "user", deep, "",
+      new java.sql.Timestamp(0L))).toDS()).collect().head
+    assert(typed.budget_error == "" && typed.extracted_text == "deep text")
+    // a local relation, and a non-foldable input that a Spark task evaluates
+    val html = "concat(repeat('<div>', 20000 + CAST(id AS INT)), 'deep text')"
+    for (query <- Seq("SELECT visible_text(html), text_content(html) FROM deepdoc",
+                      s"SELECT visible_text($html), text_content($html) FROM range(1)")) {
+      val row = spark.sql(query).collect().head
+      assert(row.getString(0) == typed.extracted_text, query)
+      assert(!row.isNullAt(1), s"text_content of the deep turn is not NULL: $query")
+    }
+  }
+
+  test("registered functions reject a call with zero or two arguments") {
+    for (fn <- Seq("visible_text", "text_content"); call <- Seq(s"$fn()", s"$fn('<p>a</p>', 'junk')")) {
+      // raised while the query is analyzed, before anything runs
+      val e = intercept[IllegalArgumentException](spark.sql(s"SELECT $call"))
+      assert(e.getMessage.contains(s"$fn(html) takes exactly one argument"), call)
+    }
+  }
+
   test("GraftExtensions injects both functions") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    // building injected functions directly exercises the builder lambdas
-    val vt = VisibleTextExpression(org.apache.spark.sql.catalyst.expressions.Literal("<p>hi</p>"))
-    assert(vt.prettyName == "visible_text")
+    val registry = InjectedFunctions(ext)
+    val html = Literal("<p>hi</p>")
+    assert(registry.lookupFunction(FunctionIdentifier("visible_text"), Seq(html)) ==
+      VisibleTextExpression(html))
+    assert(registry.lookupFunction(FunctionIdentifier("text_content"), Seq(html)) ==
+      TextContentExpression(html))
+    for (name <- Seq("visible_text", "text_content")) {
+      assert(registry.lookupFunction(FunctionIdentifier(name)).map(_.getName).contains(name))
+      intercept[IllegalArgumentException](registry.lookupFunction(FunctionIdentifier(name), Nil))
+      intercept[IllegalArgumentException](
+        registry.lookupFunction(FunctionIdentifier(name), Seq(html, html)))
+    }
   }
 
   test("Column-side functions.visible_text matches the SQL surface") {
