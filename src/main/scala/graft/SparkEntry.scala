@@ -31,15 +31,10 @@ object SparkEntry {
 
   /** (doc_id, html built by `htmlExpr` over documents) -> core mapper. */
   private def overHtml[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      spark: SparkSession, dir: String, htmlExpr: String)(f: (Long, String) => T): DataFrame = {
-    import spark.implicits._
-    docs(spark, dir)
-      .select(col("doc_id").cast("long"), expr(htmlExpr).as("html"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, html) => f(id, html) })(org.apache.spark.sql.Encoders.product[T])
-      .toDF()
-  }
+      spark: SparkSession, dir: String, htmlExpr: String)(f: (Long, String) => T): DataFrame =
+    overHtmlFlat[T](spark, dir, htmlExpr)((id, html) => Iterator.single(f(id, html)))
 
+  /** (doc_id, html built by `htmlExpr` over documents) -> rows of the core mapper. */
   private def overHtmlFlat[T <: Product : scala.reflect.runtime.universe.TypeTag](
       spark: SparkSession, dir: String, htmlExpr: String)(f: (Long, String) => Iterator[T]): DataFrame = {
     import spark.implicits._

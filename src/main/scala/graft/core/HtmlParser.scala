@@ -79,41 +79,8 @@ object HtmlParser {
 
   // ------------------------------------------------------------------
   /** Parse a complete HTML document. */
-  def parse(html: String, options: ParseOptions = ParseOptions()): DocumentTree = {
-    val startedAt = System.currentTimeMillis()
-    val budgets = options.budgets
-    enforceInt("maxInputBytes", budgets.flatMap(_.maxInputBytes), html.length.toLong)
-    val trace = if (options.trace) new TraceState(html, budgets) else null
-    if (trace != null) trace.pushPreBuild()
-
-    val errors = new ArrayBuffer[ErrRec]
-    val builder = new TreeBuilder(
-      html,
-      options.scriptingEnabled,
-      options.captureSpans,
-      (code, s, e) => errors += new ErrRec(code, s, e, true),
-      if (trace != null) trace.onTransition else null
-    )
-    val dom = builder.parseDocument()
-    if (builder.sawSelect) CompatPatch.patchSelectAdoption(dom)
-
-    val (children, _) = convertChildren(dom.children, options.captureSpans, budgets, errors)
-    // metrics walk only when a budget or trace actually needs it
-    val metrics =
-      if (trace != null || budgets.exists(b => b.maxNodes.isDefined || b.maxDepth.isDefined)) {
-        val m = collectMetrics(children)
-        enforceInt("maxNodes", budgets.flatMap(_.maxNodes), m._1.toLong + 1L)
-        enforceInt("maxDepth", budgets.flatMap(_.maxDepth), m._2.toLong)
-        m
-      } else (0, 0)
-    enforce("maxTimeMs", budgets.flatMap(_.maxTimeMs),
-      System.currentTimeMillis() - startedAt)
-
-    if (trace != null) {
-      trace.pushPostBuild(metrics._1 + 1, metrics._2, errors)
-      DocumentTree(1, children, toParseErrors(errors), Some(trace.buffer.result()))
-    } else DocumentTree(1, children, toParseErrors(errors))
-  }
+  def parse(html: String, options: ParseOptions = ParseOptions()): DocumentTree =
+    build(html, options)(_.parseDocument())(DocumentTree(1, _, _, _))
 
   /** Parse an HTML fragment in the given context tag name. */
   def parseFragment(
@@ -121,11 +88,23 @@ object HtmlParser {
       contextTagName: String,
       options: ParseOptions = ParseOptions()
   ): FragmentTree = {
-    val startedAt = System.currentTimeMillis()
-    val budgets = options.budgets
     // JS trim (mod.ts:647) — an NBSP-padded context name still normalizes
     val normalizedContext = VisibleText.jsTrim(contextTagName).toLowerCase
     require(normalizedContext.nonEmpty, "contextTagName must be a non-empty tag name")
+    build(html, options)(_.parseFragment(normalizedContext))(
+      FragmentTree(1, normalizedContext, _, _, _))
+  }
+
+  /** The build path of [[parse]] and [[parseFragment]]: the input budget
+    * and the trace's pre-build events, the tree build (`run` picks document
+    * or fragment mode), the select/option patch, the conversion, the node,
+    * depth and time budgets, and the trace's post-build replay; `root` makes
+    * the public tree from the children, errors and trace.
+    */
+  private def build[T](html: String, options: ParseOptions)(run: TreeBuilder => DomParent)(
+      root: (Vector[HtmlNode], Vector[ParseError], Option[Vector[TraceEvent]]) => T): T = {
+    val startedAt = System.currentTimeMillis()
+    val budgets = options.budgets
     enforceInt("maxInputBytes", budgets.flatMap(_.maxInputBytes), html.length.toLong)
     val trace = if (options.trace) new TraceState(html, budgets) else null
     if (trace != null) trace.pushPreBuild()
@@ -138,23 +117,24 @@ object HtmlParser {
       (code, s, e) => errors += new ErrRec(code, s, e, true),
       if (trace != null) trace.onTransition else null
     )
-    val root = builder.parseFragment(normalizedContext)
+    val parent = run(builder)
     if (builder.sawSelect) CompatPatch.patchSelectAdoption(builder.document)
 
-    val (children, _) = convertChildren(root.children, options.captureSpans, budgets, errors)
-    val metrics = collectMetrics(children)
-    val totalNodes = metrics._1 + 1
-
+    val state = new ConvertState(options.captureSpans, budgets.orNull, errors)
+    val children = convertChildren(parent.children, state)
+    // the reference's metrics (mod.ts:441-473) count the root node too and
+    // put top-level nodes at depth 2, with 1 for an empty tree
+    val totalNodes = state.nodeCount + 1
+    val maxDepth = state.maxDepth + 2
     enforceInt("maxNodes", budgets.flatMap(_.maxNodes), totalNodes.toLong)
-    enforceInt("maxDepth", budgets.flatMap(_.maxDepth), metrics._2.toLong)
+    enforceInt("maxDepth", budgets.flatMap(_.maxDepth), maxDepth.toLong)
     enforce("maxTimeMs", budgets.flatMap(_.maxTimeMs),
       System.currentTimeMillis() - startedAt)
 
     if (trace != null) {
-      trace.pushPostBuild(totalNodes, metrics._2, errors)
-      FragmentTree(1, normalizedContext, children, toParseErrors(errors),
-        Some(trace.buffer.result()))
-    } else FragmentTree(1, normalizedContext, children, toParseErrors(errors))
+      trace.pushPostBuild(totalNodes, maxDepth, errors)
+      root(children, toParseErrors(errors), Some(trace.buffer.result()))
+    } else root(children, toParseErrors(errors), None)
   }
 
   /** Sniff encoding, decode, parse (reference: src/public/mod.ts:600-634).
@@ -187,31 +167,38 @@ object HtmlParser {
 
   // ------------------------------------------------------------------
   // conversion: internal DOM -> public immutable tree
-  private final class IdAssigner { private var n = 1; def next(): Int = { n += 1; n } }
-
-  private def convertChildren(
-      nodes: ArrayBuffer[DomNode],
-      captureSpans: Boolean,
-      budgets: Option[Budgets],
-      errors: ArrayBuffer[ErrRec]
-  ): (Vector[HtmlNode], Int) = {
-    val assigner = new IdAssigner
-    val state = new ConvertState(captureSpans, budgets.orNull, errors)
+  private def convertChildren(nodes: ArrayBuffer[DomNode], state: ConvertState): Vector[HtmlNode] = {
     val out = Vector.newBuilder[HtmlNode]
     nodes.foreach { n =>
-      val converted = convertNode(n, 0, assigner, state)
+      val converted = convertNode(n, 0, state)
       if (converted != null) out += converted
     }
-    (out.result(), state.nodeCount)
+    out.result()
   }
 
+  /** One conversion's id counter (the root takes id 1), its node count
+    * and deepest node depth (top-level nodes at 0; -1 while no node), and
+    * the tree layer's budget errors.
+    */
   private final class ConvertState(
       val captureSpans: Boolean,
       val budgets: Budgets,
       val errors: ArrayBuffer[ErrRec]
   ) {
+    private var lastId = 1
     var nodeCount = 0
-    def checkBudgets(depth: Int): Unit = {
+    var maxDepth = -1
+
+    def nextId(): Int = { lastId += 1; lastId }
+
+    /** Counts a node at `depth` before its conversion. */
+    def enter(depth: Int): Unit = {
+      nodeCount += 1
+      if (depth > maxDepth) maxDepth = depth
+      checkBudgets(depth)
+    }
+
+    private def checkBudgets(depth: Int): Unit = {
       if (budgets == null) return
       budgets.maxDepth.foreach { md =>
         if (depth > md) errors += new ErrRec("max-depth-exceeded", 0, 0, false)
@@ -263,25 +250,21 @@ object HtmlParser {
   private def convertNode(
       node: DomNode,
       depth: Int,
-      assigner: IdAssigner,
       state: ConvertState
   ): HtmlNode = node match {
     case t: DomText =>
-      state.nodeCount += 1
-      state.checkBudgets(depth)
+      state.enter(depth)
       val sp = spanOf(t, state.captureSpans)
-      TextNode(assigner.next(), t.text, provenanceOf(sp, state.captureSpans), sp)
+      TextNode(state.nextId(), t.text, provenanceOf(sp, state.captureSpans), sp)
     case c: DomComment =>
-      state.nodeCount += 1
-      state.checkBudgets(depth)
+      state.enter(depth)
       val sp = spanOf(c, state.captureSpans)
-      CommentNode(assigner.next(), c.value, provenanceOf(sp, state.captureSpans), sp)
+      CommentNode(state.nextId(), c.value, provenanceOf(sp, state.captureSpans), sp)
     case d: DomDoctype =>
-      state.nodeCount += 1
-      state.checkBudgets(depth)
+      state.enter(depth)
       val sp = spanOf(d, state.captureSpans)
       DoctypeNode(
-        assigner.next(),
+        state.nextId(),
         d.name,
         if (d.publicId.nonEmpty) Some(d.publicId) else None,
         if (d.systemId.nonEmpty) Some(d.systemId) else None,
@@ -289,8 +272,7 @@ object HtmlParser {
         sp
       )
     case el: DomElement =>
-      state.nodeCount += 1
-      state.checkBudgets(depth)
+      state.enter(depth)
       // NOTE: the attribute budgets (maxAttributesPerElement /
       // maxAttributeBytes) exist in the option surface but are silently
       // DROPPED by the reference's public parse — its
@@ -303,14 +285,14 @@ object HtmlParser {
         if (el.children.isEmpty) Vector.empty[HtmlNode]
         else if (el.children.length == 1) {
           // single-child fast path: skip the 32-slot VectorBuilder
-          val c0 = convertNode(el.children(0), depth + 1, assigner, state)
+          val c0 = convertNode(el.children(0), depth + 1, state)
           // Vector0 :+ x builds a Vector1 directly (no varargs wrapping)
           if (c0 == null) Vector.empty[HtmlNode] else Vector.empty[HtmlNode] :+ c0
         } else {
           val b = Vector.newBuilder[HtmlNode]
           var i = 0
           while (i < el.children.length) {
-            val converted = convertNode(el.children(i), depth + 1, assigner, state)
+            val converted = convertNode(el.children(i), depth + 1, state)
             if (converted != null) b += converted
             i += 1
           }
@@ -372,7 +354,7 @@ object HtmlParser {
         else None
       }
       ElementNode(
-        assigner.next(),
+        state.nextId(),
         el.tagName, // public tag name: namespace prefix already absent
         attrs,
         kids,
@@ -380,40 +362,6 @@ object HtmlParser {
         elSpan
       )
     case _ => null
-  }
-
-  /** Node/depth metrics over the public tree (reference: mod.ts:441-473).
-    * Packed-long return (nodes << 32 | maxDepth): this runs once per parsed
-    * document over every node — per-node tuple boxing showed up in the
-    * allocation probe.
-    */
-  private def collectMetrics(children: Vector[HtmlNode]): (Int, Int) = {
-    def walk(n: HtmlNode, depth: Int): Long = n match {
-      case e: ElementNode =>
-        var nodes = 1
-        var maxDepth = depth
-        var i = 0
-        while (i < e.children.length) {
-          val packed = walk(e.children(i), depth + 1)
-          nodes += (packed >>> 32).toInt
-          val cd = (packed & 0xffffffffL).toInt
-          if (cd > maxDepth) maxDepth = cd
-          i += 1
-        }
-        (nodes.toLong << 32) | maxDepth.toLong
-      case _ => (1L << 32) | depth.toLong
-    }
-    var totalNodes = 0
-    var maxDepth = 1
-    var i = 0
-    while (i < children.length) {
-      val packed = walk(children(i), 2)
-      totalNodes += (packed >>> 32).toInt
-      val d = (packed & 0xffffffffL).toInt
-      if (d > maxDepth) maxDepth = d
-      i += 1
-    }
-    (totalNodes, maxDepth)
   }
 
   private def toParseErrors(errors: ArrayBuffer[ErrRec]): Vector[ParseError] =

@@ -35,9 +35,11 @@ import scala.collection.mutable.ArrayBuffer
   *                    (negative evidence wins over positive), else +1 if any
   *                    is in [[PositiveTokens]], else 0.
   *
-  * The winner is the highest-scoring candidate; ties break to the earliest
-  * candidate in document order (pre-order node id). Scoring is one
-  * post-order pass over the tree — O(nodes), no re-walks per candidate — so
+  * The winner is the highest-scoring candidate; ties break to the lowest
+  * node id. Ids are assigned in post-order, so of two tied siblings the
+  * earlier in document order wins, and of a tied element and its
+  * descendant the descendant wins. Scoring is one post-order pass over
+  * the tree — O(nodes), no re-walks per candidate — so
   * the per-document cost stays linear at 100 TB scale, and the operator is
   * embarrassingly parallel inside `mapPartitions` like the rest of the
   * extraction layer (no shuffle, no driver involvement).
@@ -168,10 +170,10 @@ object MainContent {
     val candidates = ArrayBuffer.empty[Candidate]
 
     // One post-order pass: accumulate (textChars, linkChars, nElements) per
-    // subtree, recording candidates on the way down (pre-order order is the
-    // tie-break order). Skipped subtrees (script/style/head/noscript/hidden)
-    // contribute nothing — identical invisibility rules to the extraction
-    // walk (reference skip set: src/public/mod.ts:1046-1101).
+    // subtree, recording each candidate once its subtree is done. Skipped
+    // subtrees (script/style/head/noscript/hidden) contribute nothing —
+    // identical invisibility rules to the extraction walk (reference skip
+    // set: src/public/mod.ts:1046-1101).
     def visit(node: HtmlNode, inLink: Boolean, acc: Stats): Unit = node match {
       case t: TextNode =>
         val n = collapsedLen(t.value)
@@ -205,8 +207,8 @@ object MainContent {
 
     if (candidates.isEmpty) return None
 
-    // Candidates were appended in post-order; the tie-break needs document
-    // order, which the pre-order-assigned node ids give directly.
+    // The tie-break is the lowest node id: ids are post-order, so a tied
+    // descendant beats its ancestor and an earlier sibling a later one.
     val ordered = candidates.sortInPlaceBy(_.el.id)
     var best: Candidate = null
     var bestScore = Double.NegativeInfinity

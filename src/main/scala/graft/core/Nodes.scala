@@ -3,8 +3,9 @@ package graft.core
 /** Public immutable HTML tree model.
   *
   * Mirrors the reference's public node shape (reference:
-  * src/public/types.ts:167-223): every node carries a monotonically
-  * pre-order-assigned id, an optional UTF-16 code-unit span into the
+  * src/public/types.ts:167-223): every node carries an id from a monotone
+  * counter assigned in post-order (the document takes 1, each element its
+  * id after its children), an optional UTF-16 code-unit span into the
   * ORIGINAL input string, and a span provenance marker ("input" for
   * spans observed in the source, "inferred" for implied wrappers like
   * <html>/<body>, "none" when spans were not captured).

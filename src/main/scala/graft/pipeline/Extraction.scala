@@ -120,16 +120,32 @@ object Extraction {
     guarded(body)(error => ExtractedTurn(t.conv_id, t.turn_idx, t.role, "", Nil,
       0, "", error, htmlLen, 0L))
 
-  def extractOne(t: TranscriptTurn, budgets: Budgets,
-                 options: VisibleTextOptions): ExtractedTurn = {
+  /** The guarded per-turn body both extractions share: parse `t`'s HTML
+    * with spans under `budgets`, take `(text, spans)` from the tree with
+    * `select`, and fill in the turn's parse-error and char counts.
+    */
+  private def extractTurn(t: TranscriptTurn, budgets: Budgets)
+                         (select: DocumentTree => (String, Seq[TokenSpan])): ExtractedTurn = {
     val html = if (t.text == null) "" else t.text
     guardedExtract(t, html.length.toLong) {
       val tree = HtmlParser.parse(html,
         ParseOptions(captureSpans = true, budgets = Some(budgets)))
+      val (text, spans) = select(tree)
+      ExtractedTurn(t.conv_id, t.turn_idx, t.role, text, spans,
+        tree.errors.length,
+        tree.errors.headOption.map(_.parseErrorId).getOrElse(""),
+        "", html.length.toLong, text.length.toLong)
+    }
+  }
+
+  def extractOne(t: TranscriptTurn, budgets: Budgets,
+                 options: VisibleTextOptions): ExtractedTurn =
+    extractTurn(t, budgets) { tree =>
       val (text, provTokens) = VisibleText.extractWithProvenance(tree.children, options)
       // node id -> input span, for provenance-token char spans (direct
       // recursion: the generic walk's per-node closure showed up at ~9% of
-      // extraction in profiles)
+      // extraction in profiles). Noscript-fallback tokens carry node ids of
+      // the fragment VisibleText parses, resolved here against this map.
       val spanById = scala.collection.mutable.HashMap.empty[Int, Span]
       def collectSpans(n: HtmlNode): Unit = {
         if (n.spanProvenance == "input" && n.span.isDefined)
@@ -149,12 +165,8 @@ object Extraction {
           sp.map(_.start).getOrElse(-1), sp.map(_.end).getOrElse(-1),
           tok.sourceNodeId.getOrElse(-1))
       }
-      ExtractedTurn(t.conv_id, t.turn_idx, t.role, text, spans,
-        tree.errors.length,
-        tree.errors.headOption.map(_.parseErrorId).getOrElse(""),
-        "", html.length.toLong, text.length.toLong)
+      (text, spans)
     }
-  }
 
   /** Extract one turn, keeping only the main-content block (north-star
     * boilerplate strip: text-density, link-density, tag/class scoring —
@@ -163,24 +175,16 @@ object Extraction {
     * qualifying block fall back to whole-document extraction (empty spans).
     */
   def extractMainOne(t: TranscriptTurn, budgets: Budgets,
-                     options: MainContentOptions): ExtractedTurn = {
-    val html = if (t.text == null) "" else t.text
-    guardedExtract(t, html.length.toLong) {
-      val tree = HtmlParser.parse(html,
-        ParseOptions(captureSpans = true, budgets = Some(budgets)))
-      val (text, spans) = MainContent.extract(tree, options) match {
+                     options: MainContentOptions): ExtractedTurn =
+    extractTurn(t, budgets) { tree =>
+      MainContent.extract(tree, options) match {
         case Some(r) =>
           (r.text, r.span.map(sp =>
             TokenSpan("mainContent", r.tagName, sp.start, sp.end, r.nodeId)).toSeq)
         case None =>
           (VisibleText.ofDocument(tree, options.visibleText), Nil)
       }
-      ExtractedTurn(t.conv_id, t.turn_idx, t.role, text, spans,
-        tree.errors.length,
-        tree.errors.headOption.map(_.parseErrorId).getOrElse(""),
-        "", html.length.toLong, text.length.toLong)
     }
-  }
 
   /** Distributed extraction. No shuffle; preserves input partitioning. */
   def extract(ds: Dataset[TranscriptTurn]): Dataset[ExtractedTurn] = {

@@ -48,10 +48,23 @@ class MainContentSpec extends AnyFunSuite {
 
   test("tie-break: equal scores go to the earliest candidate in document order") {
     val r = mc(s"<div><p>$long</p></div><div><p>$long</p></div>").get
-    // both candidates identical => first one (lower pre-order node id) wins
+    // both candidates identical => first one (lower node id) wins
     val first = Traversal.findAllByTagName(
       HtmlParser.parse(s"<div><p>$long</p></div><div><p>$long</p></div>").children, "div").next()
     assert(r.nodeId == first.id)
+  }
+
+  test("tie-break: a tied descendant beats its ancestor (node ids are post-order)") {
+    // outer: 120 / (1 + 2 elements) + 20 * (+1 for "content") = 60.0;
+    // inner: 120 / (1 + 1 element) + 20 * 0 = 60.0, an exact tie
+    val text = "x" * 120
+    val html = s"""<div class="content"><div id="inner"><p>$text</p></div></div>"""
+    val r = mc(html, MainContentOptions(classIdWeight = 20.0)).get
+    assert(r.score == 60.0 && r.nCandidates == 2)
+    val inner = Traversal.findAllByTagName(HtmlParser.parse(html).children, "div")
+      .find(_.attr("id").contains("inner")).get
+    assert(r.nodeId == inner.id)
+    assert(r.nElements == 1)
   }
 
   test("hidden and script subtrees contribute nothing to scoring") {

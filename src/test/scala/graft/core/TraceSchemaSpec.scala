@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Trace observability schema (reference: test/control/trace-schema.test.js):
   * structured events across tokenization/tree phases, parseError events for
-  * malformed input, and maxTraceEvents/maxTraceBytes budget enforcement.
+  * malformed input, maxTraceEvents/maxTraceBytes budget enforcement, and the
+  * node count and depth the trace and the node/depth budgets report.
   */
 class TraceSchemaSpec extends AnyFunSuite {
 
@@ -105,6 +106,31 @@ class TraceSchemaSpec extends AnyFunSuite {
       assert(e.seq == i + 1)
       val json = e.toJson
       assert(json.startsWith(s"""{"seq":${i + 1},"kind":"${e.kind}"""), json)
+    }
+  }
+
+  test("traced parse reports the tree's node count and depth") {
+    // the document node counts, and <html> sits at depth 2
+    Seq("" -> (4, 3L), "<div><div><div>x</div></div></div>" -> (8, 7L)).foreach {
+      case (html, (nodes, depth)) =>
+        val events = traced(html)
+        assert(events.collect { case t: TraceTreeMutationEvent => t.nodeCount } == Vector(nodes), html)
+        val actual = events.collect { case b: TraceBudgetEvent => b.budget -> b.actual }.toMap
+        assert(actual("maxNodes") == nodes.toLong && actual("maxDepth") == depth, html)
+    }
+  }
+
+  test("parseFragment's node and depth budgets report the fragment's size") {
+    def actual(html: String, budgets: Budgets): Long =
+      intercept[BudgetExceededException] {
+        HtmlParser.parseFragment(html, "body", ParseOptions(budgets = Some(budgets)))
+      }.payload.actual
+    // the fragment root counts, top-level nodes sit at depth 2, and an
+    // empty fragment has depth 1
+    Seq("" -> (1L, 1L), "hello" -> (2L, 2L), "<div><p><b>x</b></p></div>" -> (5L, 5L)).foreach {
+      case (html, (nodes, depth)) =>
+        assert(actual(html, Budgets(maxNodes = Some(0))) == nodes, html)
+        assert(actual(html, Budgets(maxDepth = Some(0))) == depth, html)
     }
   }
 

@@ -90,6 +90,9 @@ class VisibleTextFixtureSpec extends AnyFunSuite {
     assert(VisibleText.ofDocument(tree3) == "")
     assert(VisibleText.tokensOfDocument(tree3).isEmpty)
     assert(VisibleText.tokensWithProvenance(tree3.children).isEmpty)
+    // as do an empty and an ASCII-whitespace-only document
+    assert(VisibleText.ofDocument(HtmlParser.parse("")) == "")
+    assert(VisibleText.ofDocument(HtmlParser.parse("   \n\t  ")) == "")
     val prov = VisibleText.tokensWithProvenance(tree.children)
     assert(prov.map(_.value).mkString == "trail va∉")
     // U+2028/U+202F/U+FEFF edges trim; U+001C (Java-ws, not JS-ws) stays
