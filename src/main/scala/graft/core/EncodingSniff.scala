@@ -1,6 +1,7 @@
 package graft.core
 
-import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction, StandardCharsets}
 
 /** HTML encoding sniffing: BOM > transport label > `<meta charset>` prescan
   * > windows-1252 default (reference: src/internal/encoding/sniff.ts:271-292).
@@ -234,16 +235,6 @@ object EncodingSniff {
     SniffResult(if (fallback != null) fallback else "windows-1252", "default")
   }
 
-  private def charsetFor(encoding: String): Charset = encoding match {
-    case "utf-8"        => StandardCharsets.UTF_8
-    case "windows-1252" => Charset.forName("windows-1252")
-    case "utf-16le"     => StandardCharsets.UTF_16LE
-    case "utf-16be"     => StandardCharsets.UTF_16BE
-    case other =>
-      try Charset.forName(other)
-      catch { case _: Exception => StandardCharsets.UTF_8 }
-  }
-
   // --- WHATWG Encoding Standard decoders (TextDecoder semantics) ---------
   // The reference decodes with `new TextDecoder(encoding)` — its error
   // handling differs from the JVM's: malformed UTF-8 replaces each maximal
@@ -382,33 +373,73 @@ object EncodingSniff {
     }
   }
 
-  /** Decode bytes after sniffing; strips the BOM when one was detected
-    * (TextDecoder semantics).
+  /** The one bytes-to-text step behind [[decodeHtmlBytes]] (a whole buffer
+    * is the one-chunk case) and [[Streaming.decodeStreamToText]] (chunks):
+    * sniffs `head`, skips the sniffed BOM, decodes with the WHATWG decoder
+    * where the encoding has one and with the JVM charset otherwise (UTF-8
+    * when the JVM lacks it), keeping decoder state across chunk boundaries,
+    * and strips a leading U+FEFF only for utf-8 and utf-16 (TextDecoder
+    * semantics). Feed `head` first, then any further chunks, the last one
+    * with `last = true`; then read [[text]].
     */
-  def decodeHtmlBytes(
-      bytes: Array[Byte],
-      transportEncodingLabel: Option[String] = None
-  ): (String, SniffResult) = {
-    val sniff = sniffHtmlEncoding(bytes, transportEncodingLabel)
-    val skip = sniff.source match {
+  private[core] final class HtmlByteDecoder(head: Array[Byte], transportEncodingLabel: Option[String]) {
+    val sniff: SniffResult = sniffHtmlEncoding(head, transportEncodingLabel)
+    private val bomLength = sniff.source match {
       case "bom" if sniff.encoding == "utf-8" => 3
       case "bom"                              => 2
       case _                                  => 0
     }
-    val dec = new WhatwgStreamDecoder(sniff.encoding)
-    val text =
-      if (dec.isWhatwgNative) {
-        val sb = new java.lang.StringBuilder(bytes.length - skip)
-        dec.feed(bytes, skip, bytes.length, sb)
-        dec.finish(sb)
-        sb.toString
-      } else new String(bytes, skip, bytes.length - skip, charsetFor(sniff.encoding))
-    // the decoder also strips a leading BOM char per TextDecoder semantics
-    val cleaned =
-      if (skip == 0 && text.nonEmpty && text.charAt(0) == '﻿' &&
+    private var toSkip = bomLength
+    private val whatwg = new WhatwgStreamDecoder(sniff.encoding)
+    private val jvm: CharsetDecoder =
+      if (whatwg.isWhatwgNative) null
+      else {
+        val charset =
+          try Charset.forName(sniff.encoding)
+          catch { case _: Exception => StandardCharsets.UTF_8 }
+        charset.newDecoder()
+          .onMalformedInput(CodingErrorAction.REPLACE)
+          .onUnmappableCharacter(CodingErrorAction.REPLACE)
+      }
+    private val out = new java.lang.StringBuilder(head.length)
+    // JVM path: the undecoded tail of a sequence a chunk boundary cut
+    private var pending: ByteBuffer = null
+
+    def feed(chunk: Array[Byte], last: Boolean): Unit = {
+      val from = math.min(toSkip, chunk.length)
+      toSkip -= from
+      if (jvm == null) {
+        whatwg.feed(chunk, from, chunk.length, out)
+        if (last) whatwg.finish(out)
+      } else {
+        val in =
+          if (pending == null) ByteBuffer.wrap(chunk, from, chunk.length - from)
+          else ByteBuffer.allocate(pending.remaining + chunk.length - from)
+            .put(pending).put(chunk, from, chunk.length - from).flip()
+        val cb = CharBuffer.allocate(in.remaining + 16)
+        def drain(): Unit = { cb.flip(); out.append(cb); cb.clear() }
+        while (jvm.decode(in, cb, last).isOverflow) drain()
+        if (last) while (jvm.flush(cb).isOverflow) drain()
+        drain()
+        pending =
+          if (in.hasRemaining) ByteBuffer.allocate(in.remaining).put(in).flip() else null
+      }
+    }
+
+    def text: String =
+      if (bomLength == 0 && out.length > 0 && out.charAt(0) == '\uFEFF' &&
         (sniff.encoding == "utf-8" || sniff.encoding == "utf-16le" ||
-          sniff.encoding == "utf-16be")) text.substring(1)
-      else text
-    (cleaned, sniff)
+          sniff.encoding == "utf-16be")) out.substring(1)
+      else out.toString
+  }
+
+  /** Sniff and decode a whole buffer ([[HtmlByteDecoder]] with one chunk). */
+  def decodeHtmlBytes(
+      bytes: Array[Byte],
+      transportEncodingLabel: Option[String] = None
+  ): (String, SniffResult) = {
+    val decoder = new HtmlByteDecoder(bytes, transportEncodingLabel)
+    decoder.feed(bytes, last = true)
+    (decoder.text, decoder.sniff)
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** WHATWG named character references + numeric reference decoding.
   *
   * Data: the public WHATWG `entities.json` table (2231 names, including the
@@ -38,7 +36,7 @@ object Entities {
               case 'n'   => sb.append('\n'); i += 2
               case 'r'   => sb.append('\r'); i += 2
               case '\\'  => sb.append('\\'); i += 2
-              case other => sb.append(c); i += 1
+              case _     => sb.append(c); i += 1
             }
           } else { sb.append(c); i += 1 }
         }
@@ -112,15 +110,6 @@ object Entities {
 
   def replacementAt(idx: Int): String = sortedReps(idx)
 
-  /** Longest named-reference match at `pos` in `input` (pos points just
-    * after the '&'). Returns (nameLength, replacement) or null.
-    */
-  def matchNamed(input: CharSequence, pos: Int): (Int, String) = {
-    val packed = matchNamedPacked(input, pos)
-    if (packed < 0L) null
-    else ((packed >>> 32).toInt, sortedReps((packed & 0xffffffffL).toInt))
-  }
-
   /** windows-1252 overrides for numeric references in the C1 control range. */
   val numericOverrides: Map[Int, Int] = Map(
     0x00 -> 0xfffd, 0x80 -> 0x20ac, 0x82 -> 0x201a, 0x83 -> 0x0192,
@@ -149,13 +138,5 @@ object Entities {
       val v = c1Overrides(cp - 0x80)
       if (v != 0) v else cp
     } else cp
-  }
-
-  def appendCodePoint(sb: mutable.StringBuilder, cp: Int): Unit = {
-    if (cp > 0xffff) {
-      val v = cp - 0x10000
-      sb.append((0xd800 | (v >>> 10)).toChar)
-      sb.append((0xdc00 | (v & 0x3ff)).toChar)
-    } else sb.append(cp.toChar)
   }
 }

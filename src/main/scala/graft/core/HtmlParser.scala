@@ -29,15 +29,6 @@ object HtmlParser {
   def parseErrorSpecRef(parseErrorId: String): String =
     "https://html.spec.whatwg.org/multipage/parsing.html#parse-errors"
 
-  private def enforce(budget: String, limit: Option[Long], actual: Long): Unit =
-    limit.foreach { l =>
-      if (actual > l)
-        throw new BudgetExceededException(BudgetExceededPayload(budget, l, actual))
-    }
-
-  private def enforceInt(budget: String, limit: Option[Int], actual: Long): Unit =
-    enforce(budget, limit.map(_.toLong), actual)
-
   /** Shared trace plumbing for parse/parseFragment: pre-build events
     * (decode/input, maxInputBytes budget, token count) and the post-build
     * replay (tree-mutation, transitions, parse errors, node/depth budgets),
@@ -95,30 +86,41 @@ object HtmlParser {
       FragmentTree(1, normalizedContext, _, _, _))
   }
 
+  /** The one tree build: a [[TreeBuilder]] over `html`, `run` (document or
+    * fragment mode), then the select/option patch on the builder's
+    * document. Returns the parent `run` returned, whose children are the
+    * tree. The `.dat` normalizer ([[Serializer.normalizedParse]]) uses it
+    * directly; [[parse]] and [[parseFragment]] through [[build]].
+    */
+  private[core] def buildDom(html: String, options: ParseOptions,
+                             onError: (String, Int, Int) => Unit,
+                             onTransition: TreeBuilder.ModeTransition => Unit)(
+      run: TreeBuilder => DomParent): DomParent = {
+    val builder = new TreeBuilder(html, options.scriptingEnabled, options.captureSpans,
+      onError, onTransition)
+    val parent = run(builder)
+    if (builder.sawSelect) CompatPatch.patchSelectAdoption(builder.document)
+    parent
+  }
+
   /** The build path of [[parse]] and [[parseFragment]]: the input budget
-    * and the trace's pre-build events, the tree build (`run` picks document
-    * or fragment mode), the select/option patch, the conversion, the node,
-    * depth and time budgets, and the trace's post-build replay; `root` makes
-    * the public tree from the children, errors and trace.
+    * and the trace's pre-build events, [[buildDom]], the conversion, the
+    * node, depth and time budgets, and the trace's post-build replay; `root`
+    * makes the public tree from the children, errors and trace.
     */
   private def build[T](html: String, options: ParseOptions)(run: TreeBuilder => DomParent)(
       root: (Vector[HtmlNode], Vector[ParseError], Option[Vector[TraceEvent]]) => T): T = {
     val startedAt = System.currentTimeMillis()
     val budgets = options.budgets
-    enforceInt("maxInputBytes", budgets.flatMap(_.maxInputBytes), html.length.toLong)
+    BudgetExceededException.check("maxInputBytes",
+      budgets.flatMap(_.maxInputBytes).map(_.toLong), html.length.toLong)
     val trace = if (options.trace) new TraceState(html, budgets) else null
     if (trace != null) trace.pushPreBuild()
 
     val errors = new ArrayBuffer[ErrRec]
-    val builder = new TreeBuilder(
-      html,
-      options.scriptingEnabled,
-      options.captureSpans,
+    val parent = buildDom(html, options,
       (code, s, e) => errors += new ErrRec(code, s, e, true),
-      if (trace != null) trace.onTransition else null
-    )
-    val parent = run(builder)
-    if (builder.sawSelect) CompatPatch.patchSelectAdoption(builder.document)
+      if (trace != null) trace.onTransition else null)(run)
 
     val state = new ConvertState(options.captureSpans, budgets.orNull, errors)
     val children = convertChildren(parent.children, state)
@@ -126,9 +128,11 @@ object HtmlParser {
     // put top-level nodes at depth 2, with 1 for an empty tree
     val totalNodes = state.nodeCount + 1
     val maxDepth = state.maxDepth + 2
-    enforceInt("maxNodes", budgets.flatMap(_.maxNodes), totalNodes.toLong)
-    enforceInt("maxDepth", budgets.flatMap(_.maxDepth), maxDepth.toLong)
-    enforce("maxTimeMs", budgets.flatMap(_.maxTimeMs),
+    BudgetExceededException.check("maxNodes",
+      budgets.flatMap(_.maxNodes).map(_.toLong), totalNodes.toLong)
+    BudgetExceededException.check("maxDepth",
+      budgets.flatMap(_.maxDepth).map(_.toLong), maxDepth.toLong)
+    BudgetExceededException.check("maxTimeMs", budgets.flatMap(_.maxTimeMs),
       System.currentTimeMillis() - startedAt)
 
     if (trace != null) {
@@ -141,15 +145,26 @@ object HtmlParser {
     * Under trace, a decode(sniff) event is appended after the parse events.
     */
   def parseBytes(bytes: Array[Byte], options: ParseOptions = ParseOptions()): DocumentTree = {
-    enforceInt("maxInputBytes", options.budgets.flatMap(_.maxInputBytes), bytes.length.toLong)
-    val decoded = EncodingSniff.decodeHtmlBytes(bytes, options.transportEncodingLabel)
-    val parsed = parse(decoded._1, options)
+    BudgetExceededException.check("maxInputBytes",
+      options.budgets.flatMap(_.maxInputBytes).map(_.toLong), bytes.length.toLong)
+    val (text, sniff) = EncodingSniff.decodeHtmlBytes(bytes, options.transportEncodingLabel)
+    parseDecoded(text, sniff, options)(_ => ())
+  }
+
+  /** [[parse]] of text decoded from bytes ([[parseBytes]],
+    * [[Streaming.parseStream]]). Under trace, the parse events are copied
+    * into a fresh buffer (re-checking the trace budgets), then the
+    * decode(sniff) event is pushed, then whatever `more` pushes.
+    */
+  private[core] def parseDecoded(text: String, sniff: EncodingSniff.SniffResult,
+                                 options: ParseOptions)(more: TraceBuffer => Unit): DocumentTree = {
+    val parsed = parse(text, options)
     parsed.trace match {
       case Some(events) =>
         val buf = new TraceBuffer(options.budgets)
         events.foreach(e => buf.push(_ => e))
-        buf.push(seq => TraceDecodeEvent(seq, "sniff",
-          decoded._2.encoding, decoded._2.source))
+        buf.push(seq => TraceDecodeEvent(seq, "sniff", sniff.encoding, sniff.source))
+        more(buf)
         parsed.copy(trace = Some(buf.result()))
       case None => parsed
     }

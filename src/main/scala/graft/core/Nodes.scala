@@ -136,6 +136,20 @@ final class BudgetExceededException(val payload: BudgetExceededPayload)
       s"Budget exceeded: ${payload.budget} limit=${payload.limit} actual=${payload.actual}"
     )
 
+object BudgetExceededException {
+
+  /** The one budget trip rule, shared by the parse, stream-decode and trace
+    * budgets: a set limit is exceeded only when `actual` is strictly greater.
+    */
+  private[core] def exceeds(limit: Option[Long], actual: Long): Boolean =
+    limit.isDefined && actual > limit.get
+
+  /** Throws for `budget` when [[exceeds]] holds. */
+  private[core] def check(budget: String, limit: Option[Long], actual: Long): Unit =
+    if (exceeds(limit, actual))
+      throw new BudgetExceededException(BudgetExceededPayload(budget, limit.get, actual))
+}
+
 final case class ParseOptions(
     captureSpans: Boolean = false,
     budgets: Option[Budgets] = None,

@@ -28,7 +28,7 @@ final class PatchPlanningException(val payload: PatchPlanningPayload)
 
 object Patch {
 
-  private def fail(code: String, target: Int = -1, detail: String = null): Nothing =
+  private def fail(code: String, target: Int, detail: String = null): Nothing =
     throw new PatchPlanningException(
       PatchPlanningPayload(code, if (target >= 0) Some(target) else None, Option(detail))
     )

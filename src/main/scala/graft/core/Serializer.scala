@@ -1,9 +1,8 @@
 package graft.core
 
-/** Deterministic serialization of public trees plus the internal-tree
-  * serializer and the html5lib `.dat` normalizer used as the tree-conformance
-  * comparator (reference: src/public/mod.ts:938-984,
-  * src/internal/serializer/serialize.ts:36-95, src/internal/tree/normalize.ts).
+/** Deterministic serialization of public trees plus the html5lib `.dat`
+  * normalizer used as the tree-conformance comparator (reference:
+  * src/public/mod.ts:938-984, src/internal/tree/normalize.ts).
   */
 object Serializer {
 
@@ -67,54 +66,6 @@ object Serializer {
   }
 
   // ------------------------------------------------------------------
-  // internal serializer with smart quote choice (serialize.ts:36-95)
-  private val UnquotedSafe = "^[^\\s\"'=<>`]+$".r
-
-  private def chooseQuote(value: String): Option[Char] = {
-    if (UnquotedSafe.pattern.matcher(value).matches()) None
-    else if (!value.contains("\"")) Some('"')
-    else if (!value.contains("'")) Some('\'')
-    else Some('"')
-  }
-
-  private def escapeAttributeWith(value: String, quote: Char): String = {
-    val amp = value.replace("&", "&amp;")
-    if (quote == '"') amp.replace("\"", "&quot;") else amp.replace("'", "&#39;")
-  }
-
-  private def serializeInternalNode(node: DomNode, sb: java.lang.StringBuilder): Unit =
-    node match {
-      case t: DomText => sb.append(escapeText(t.text))
-      case c: DomComment =>
-        sb.append("<!--").append(c.value).append("-->")
-      case d: DomDoctype =>
-        sb.append("<!DOCTYPE ").append(d.name).append('>')
-      case el: DomElement =>
-        sb.append('<').append(el.internalName)
-        var ai = 0; while (ai < el.attrCount) { val a = el.attrAt(ai); ai += 1;
-          sb.append(' ').append(a.name)
-          chooseQuote(a.value) match {
-            case None => sb.append('=').append(escapeAttributeWith(a.value, '"'))
-            case Some(q) =>
-              sb.append('=').append(q)
-                .append(escapeAttributeWith(a.value, q)).append(q)
-          }
-        }
-        sb.append('>')
-        if (!(el.namespace == Ns.Html && VoidElements.contains(el.tagName))) {
-          el.children.foreach(c => serializeInternalNode(c, sb))
-          sb.append("</").append(el.internalName).append('>')
-        }
-      case _ =>
-    }
-
-  def serializeInternal(root: DomParent): String = {
-    val sb = new java.lang.StringBuilder
-    root.children.foreach(c => serializeInternalNode(c, sb))
-    sb.toString
-  }
-
-  // ------------------------------------------------------------------
   // html5lib "| "-indented fixture format (normalize.ts:11-52)
   private def indent(level: Int): String = "  " * level
 
@@ -146,18 +97,14 @@ object Serializer {
     lines.result().mkString("\n")
   }
 
-  /** Parse + normalize in one step (for conformance tests). */
-  def normalizedParse(html: String, scriptingEnabled: Boolean = true): String = {
-    val builder = new TreeBuilder(html, scriptingEnabled, false, (_, _, _) => ())
-    val dom = builder.parseDocument()
-    if (builder.sawSelect) CompatPatch.patchSelectAdoption(dom)
-    normalizeTree(dom)
-  }
+  /** Parse + normalize in one step (for conformance tests): the
+    * select-patched DOM of [[HtmlParser.buildDom]], parse errors dropped.
+    */
+  def normalizedParse(html: String, scriptingEnabled: Boolean = true): String =
+    normalizeTree(HtmlParser.buildDom(html, ParseOptions(scriptingEnabled = scriptingEnabled),
+      (_, _, _) => (), null)(_.parseDocument()))
 
-  def normalizedParseFragment(html: String, context: String, scriptingEnabled: Boolean = true): String = {
-    val builder = new TreeBuilder(html, scriptingEnabled, false, (_, _, _) => ())
-    val root = builder.parseFragment(VisibleText.jsTrim(context).toLowerCase)
-    if (builder.sawSelect) CompatPatch.patchSelectAdoption(builder.document)
-    normalizeTree(root)
-  }
+  def normalizedParseFragment(html: String, context: String, scriptingEnabled: Boolean = true): String =
+    normalizeTree(HtmlParser.buildDom(html, ParseOptions(scriptingEnabled = scriptingEnabled),
+      (_, _, _) => (), null)(_.parseFragment(VisibleText.jsTrim(context).toLowerCase)))
 }

@@ -1,15 +1,14 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Chunked-bytes ingestion: the reference's `parseStream` / `tokenizeStream`
   * surface (reference: src/public/mod.ts:774-936). Semantics preserved:
   *
   *  - buffer until 16 KiB (STREAM_ENCODING_PRESCAN_BYTES, mod.ts:103) or
   *    end-of-stream, then sniff the encoding once (BOM > transport label >
   *    meta prescan > windows-1252 default);
-  *  - decode the remaining chunks incrementally with a stateful decoder
-  *    (multi-byte sequences may straddle chunk boundaries);
+  *  - decode the head and the remaining chunks incrementally with
+  *    [[EncodingSniff.HtmlByteDecoder]], the decoder `parseBytes` uses for a
+  *    whole buffer (multi-byte sequences may straddle chunk boundaries);
   *  - budget checks per chunk: maxInputBytes against total bytes read;
   *    maxBufferedBytes pre-sniff against the accumulating head buffer and
   *    post-sniff against each individual chunk's byte length (the decoder
@@ -34,100 +33,44 @@ object Streaming {
       budgets: Option[Budgets] = None
   ): DecodedStream = {
     val startedAt = System.currentTimeMillis()
-    def checkTime(): Unit =
-      budgets.flatMap(_.maxTimeMs).foreach { limit =>
-        val elapsed = System.currentTimeMillis() - startedAt
-        if (elapsed > limit)
-          throw new BudgetExceededException(BudgetExceededPayload("maxTimeMs", limit, elapsed))
-      }
-    def checkBytes(budget: String, limit: Option[Int], actual: Long): Unit =
-      limit.foreach { l =>
-        if (actual > l)
-          throw new BudgetExceededException(BudgetExceededPayload(budget, l.toLong, actual))
-      }
+    val maxInputBytes = budgets.flatMap(_.maxInputBytes).map(_.toLong)
+    val maxBufferedBytes = budgets.flatMap(_.maxBufferedBytes).map(_.toLong)
+    val maxTimeMs = budgets.flatMap(_.maxTimeMs)
+    def checkTime(): Unit = BudgetExceededException.check("maxTimeMs", maxTimeMs,
+      System.currentTimeMillis() - startedAt)
 
     // phase 1: buffer up to the prescan waterline
-    val head = new ArrayBuffer[Byte](PrescanBytes)
+    val head = new java.io.ByteArrayOutputStream(PrescanBytes)
     var bytesIn = 0L
-    var rest: Iterator[Array[Byte]] = Iterator.empty
-    var reachedEnd = true
-    val it = chunks
-    while (it.hasNext && head.length < PrescanBytes) {
-      val chunk = it.next()
+    while (chunks.hasNext && head.size < PrescanBytes) {
+      val chunk = chunks.next()
       bytesIn += chunk.length
-      checkBytes("maxInputBytes", budgets.flatMap(_.maxInputBytes), bytesIn)
-      checkBytes("maxBufferedBytes", budgets.flatMap(_.maxBufferedBytes), head.length.toLong + chunk.length)
-      head ++= chunk
-      checkTime()
-    }
-    if (it.hasNext) { rest = it; reachedEnd = false }
-
-    val headBytes = head.toArray
-    val sniff = EncodingSniff.sniffHtmlEncoding(headBytes, transportEncodingLabel)
-
-    // phase 2: incremental decode (stateful across chunk boundaries).
-    // WHATWG-native encodings use the exact TextDecoder-semantics state
-    // machine (same one as the batch path, so parseStream == parseBytes on
-    // malformed input); anything else goes through a JVM CharsetDecoder.
-    val whatwg = new EncodingSniff.WhatwgStreamDecoder(sniff.encoding)
-    val jvmDecoder =
-      if (whatwg.isWhatwgNative) null
-      else (try java.nio.charset.Charset.forName(sniff.encoding)
-      catch { case _: Throwable => java.nio.charset.Charset.forName("windows-1252") })
-        .newDecoder()
-        .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-        .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-    val out = new java.lang.StringBuilder(headBytes.length)
-    var pending = java.nio.ByteBuffer.allocate(0)
-
-    def feed(bytes: Array[Byte], offset: Int, endOfInput: Boolean): Unit = {
-      if (whatwg.isWhatwgNative) {
-        whatwg.feed(bytes, offset, bytes.length, out)
-        if (endOfInput) whatwg.finish(out)
-        checkTime()
-        return
-      }
-      val in =
-        if (pending.hasRemaining) {
-          val merged = java.nio.ByteBuffer.allocate(pending.remaining + bytes.length - offset)
-          merged.put(pending).put(bytes, offset, bytes.length - offset)
-          merged.flip(); merged
-        } else java.nio.ByteBuffer.wrap(bytes, offset, bytes.length - offset)
-      val cb = java.nio.CharBuffer.allocate(in.remaining + 16)
-      jvmDecoder.decode(in, cb, endOfInput)
-      if (endOfInput) { jvmDecoder.flush(cb); () }
-      cb.flip()
-      out.append(cb)
-      pending = if (in.hasRemaining) {
-        val keep = java.nio.ByteBuffer.allocate(in.remaining)
-        keep.put(in); keep.flip(); keep
-      } else java.nio.ByteBuffer.allocate(0)
+      BudgetExceededException.check("maxInputBytes", maxInputBytes, bytesIn)
+      BudgetExceededException.check("maxBufferedBytes", maxBufferedBytes,
+        head.size.toLong + chunk.length)
+      head.write(chunk, 0, chunk.length)
       checkTime()
     }
 
-    val bomSkip = sniff.source match {
-      case "bom" if sniff.encoding == "utf-8" => 3
-      case "bom"                              => 2
-      case _                                  => 0
-    }
-    feed(headBytes, bomSkip, endOfInput = reachedEnd)
+    // phase 2: sniff the head, then decode it and the remaining chunks
+    // incrementally through the same decoder as the whole-buffer path
+    val headBytes = head.toByteArray
+    val decoder = new EncodingSniff.HtmlByteDecoder(headBytes, transportEncodingLabel)
+    decoder.feed(headBytes, last = !chunks.hasNext)
+    checkTime()
     var maxBuffered = headBytes.length.toLong
-    while (rest.hasNext) {
-      val chunk = rest.next()
+    while (chunks.hasNext) {
+      val chunk = chunks.next()
       bytesIn += chunk.length
-      checkBytes("maxInputBytes", budgets.flatMap(_.maxInputBytes), bytesIn)
+      BudgetExceededException.check("maxInputBytes", maxInputBytes, bytesIn)
       // post-sniff the reference bounds only the single in-flight chunk
       // (mod.ts:845), not the cumulative decoded text
-      checkBytes("maxBufferedBytes", budgets.flatMap(_.maxBufferedBytes), chunk.length.toLong)
+      BudgetExceededException.check("maxBufferedBytes", maxBufferedBytes, chunk.length.toLong)
       if (chunk.length.toLong > maxBuffered) maxBuffered = chunk.length.toLong
-      feed(chunk, 0, endOfInput = !rest.hasNext)
+      decoder.feed(chunk, last = !chunks.hasNext)
+      checkTime()
     }
-
-    var text = out.toString
-    // a leading BOM char decoded from content is stripped (TextDecoder parity)
-    if (bomSkip == 0 && text.nonEmpty && text.charAt(0) == '﻿')
-      text = text.substring(1)
-    DecodedStream(text, sniff, bytesIn, maxBuffered)
+    DecodedStream(decoder.text, decoder.sniff, bytesIn, maxBuffered)
   }
 
   /** Chunked bytes → DocumentTree (reference parseStream, mod.ts:902-936).
@@ -140,19 +83,11 @@ object Streaming {
       transportEncodingLabel: Option[String] = None
   ): DocumentTree = {
     val decoded = decodeStreamToText(chunks, transportEncodingLabel, options.budgets)
-    val parsed = HtmlParser.parse(decoded.text, options)
-    parsed.trace match {
-      case Some(events) =>
-        val buf = new TraceBuffer(options.budgets)
-        events.foreach(e => buf.push(_ => e))
-        buf.push(seq => TraceDecodeEvent(seq, "sniff",
-          decoded.sniff.encoding, decoded.sniff.source))
-        buf.push(seq => TraceStreamEvent(seq, decoded.bytesIn))
-        buf.pushBudget("maxBufferedBytes",
-          options.budgets.flatMap(_.maxBufferedBytes).map(_.toLong),
-          decoded.maxBufferedObserved)
-        parsed.copy(trace = Some(buf.result()))
-      case None => parsed
+    HtmlParser.parseDecoded(decoded.text, decoded.sniff, options) { buf =>
+      buf.push(seq => TraceStreamEvent(seq, decoded.bytesIn))
+      buf.pushBudget("maxBufferedBytes",
+        options.budgets.flatMap(_.maxBufferedBytes).map(_.toLong),
+        decoded.maxBufferedObserved)
     }
   }
 

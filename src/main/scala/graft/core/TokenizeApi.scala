@@ -240,20 +240,4 @@ object TokenizeApi {
     }
     sb.toString
   }
-
-  /** Per-document byte-stream tokenization: chunked bytes are decoded after
-    * a bounded-prescan encoding sniff, then tokenized once (the reference's
-    * `tokenizeStream`, src/public/mod.ts:886-896 — per-document bounded
-    * buffering, NOT dataflow streaming).
-    */
-  def tokenizeBytes(
-      chunks: Iterator[Array[Byte]],
-      transportEncodingLabel: Option[String] = None,
-      opts: TokenizeOpts = TokenizeOpts()
-  ): TokenizeResult = {
-    val all = new java.io.ByteArrayOutputStream()
-    chunks.foreach(c => all.write(c, 0, c.length))
-    val (text, _) = EncodingSniff.decodeHtmlBytes(all.toByteArray, transportEncodingLabel)
-    tokenize(text, opts)
-  }
 }

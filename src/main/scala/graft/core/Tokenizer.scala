@@ -157,7 +157,6 @@ final class Tokenizer(input: String, sink: TokenSink) {
 
   var state: Int = Data
   var lastStartTagName: String = ""
-  private var returnToState: Int = Data // for bogus comment origin bookkeeping
 
   // --- character accumulation (homogeneous runs: ws vs other) ---
   // The pending run is a hybrid: a clean TAIL SLICE of the input
@@ -214,16 +213,13 @@ final class Tokenizer(input: String, sink: TokenSink) {
   private var tag: TagToken = null
   private val nameBuf = new StringBuilder(16)
   private var attrNameBuf = new StringBuilder(16)
-  private var attrValueBuf = new StringBuilder(32)
+  private val attrValueBuf = new StringBuilder(32)
   private var attrStart = 0
-  private var attrValueEnd = 0
   private var attrSkip = false
-  private var attrHasValue = false
   private val commentBuf = new StringBuilder(32)
   private var tokenStart = 0 // '<' or '<!--' start offset
   private var doctype: DoctypeTok = null
   private val tempBuf = new StringBuilder(16)
-  private var tempBufStart = 0
 
   private def isWsChar(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\f'
@@ -618,7 +614,6 @@ final class Tokenizer(input: String, sink: TokenSink) {
       tag.addAttr(n, attrStart, pos - 1)
     }
     attrValueBuf.clear()
-    attrHasValue = false
   }
 
   /** Store the pending value on the current attribute. The attribute's end
@@ -693,15 +688,6 @@ final class Tokenizer(input: String, sink: TokenSink) {
 
   private def isAppropriateEndTag: Boolean =
     nameBuf.toString == lastStartTagName
-
-  /** `</x` sequences in RCDATA/RAWTEXT/script: emit buffered `</` + name. */
-  private def flushTempAsChars(prefix: String): Unit = {
-    var i = 0
-    while (i < prefix.length) { emitChar(prefix.charAt(i)); i += 1 }
-    i = 0
-    while (i < tempBuf.length) { emitChar(tempBuf.charAt(i)); i += 1 }
-    tempBuf.clear()
-  }
 
   // --- character references (spec §13.2.5.72-80, resolved inline) ---
   /** '&' has been consumed (curStart at '&'). Returns decoded text to emit

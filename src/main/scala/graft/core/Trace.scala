@@ -103,26 +103,22 @@ final case class TraceStreamEvent(seq: Int, bytesRead: Long) extends TraceEvent 
 final class TraceBuffer(budgets: Option[Budgets]) {
   private val events = new ArrayBuffer[TraceEvent]
   private var bytes = 0L
-
-  private def enforce(budget: String, limit: Option[Int], actual: Long): Unit =
-    limit.foreach { l =>
-      if (actual > l)
-        throw new BudgetExceededException(BudgetExceededPayload(budget, l.toLong, actual))
-    }
+  private val maxEvents = budgets.flatMap(_.maxTraceEvents).map(_.toLong)
+  private val maxBytes = budgets.flatMap(_.maxTraceBytes).map(_.toLong)
 
   /** Append the event built from the next seq; enforces trace budgets. */
   def push(mk: Int => TraceEvent): Unit = {
     val e = mk(events.length + 1)
     events += e
-    enforce("maxTraceEvents", budgets.flatMap(_.maxTraceEvents), events.length.toLong)
+    BudgetExceededException.check("maxTraceEvents", maxEvents, events.length.toLong)
     bytes += e.toJson.length.toLong
-    enforce("maxTraceBytes", budgets.flatMap(_.maxTraceBytes), bytes)
+    BudgetExceededException.check("maxTraceBytes", maxBytes, bytes)
   }
 
   /** Budget event with ok/exceeded status (reference pushBudgetTrace). */
   def pushBudget(budget: String, limit: Option[Long], actual: Long): Unit =
     push(seq => TraceBudgetEvent(seq, budget, limit, actual,
-      if (limit.isEmpty || actual <= limit.get) "ok" else "exceeded"))
+      if (BudgetExceededException.exceeds(limit, actual)) "exceeded" else "ok"))
 
   def result(): Vector[TraceEvent] = events.toVector
 }

@@ -113,7 +113,6 @@ final class TreeBuilder(
 
   // fragment parsing support
   private var fragmentContext: DomElement = null
-  private var fragmentRoot: DomElement = null
 
   private var modeVar: Int = Initial
 
@@ -622,9 +621,8 @@ final class TreeBuilder(
     val lastIdx = afe.length - 1
     val last = afe(lastIdx)
     if (last.isMarker || onStack(last.element)) return
-    var i = lastIdx
     // rewind
-    var entryIdx = i
+    var entryIdx = lastIdx
     var rewound = false
     while (!rewound) {
       if (entryIdx == 0) rewound = true
@@ -2569,7 +2567,6 @@ final class TreeBuilder(
     // a script-context fragment never terminates its script data on
     // `</script>`.
     val root = createFakeElement("html")
-    fragmentRoot = root
     document.appendChild(root)
     push(root)
     if (contextTagName == "template") templateModes += InTemplate

@@ -37,7 +37,6 @@ object VisibleText {
 
   // ---- source chunk bookkeeping for the provenance variant ----
   private final case class SourceMeta(nodeId: Int, nodeKind: String, role: String)
-  private val DefaultSource = SourceMeta(-1, "document", "text-node")
   private final case class SourceChunk(value: String, meta: SourceMeta)
 
   /** CRLF/CR → LF. Allocation-free when the input has no '\r'. */

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * image and PDF legs: one corrupt blob never kills a task.
   *
   * Scale notes:
-  *  - decode is shuffle-free batched `mapPartitions`, partitioning is the
+  *  - decode is a shuffle-free per-row map, partitioning is the
   *    caller's choice (same shape as [[Multimodal.decode]]);
   *  - a declared-size bomb (tiny header, huge `data` chunk) is caught
   *    before sample iteration: frames beyond [[MaxFrames]] report
@@ -243,18 +243,15 @@ object Audio {
     }
   }
 
-  /** Decode stage over (doc_id: long, payload: binary): batched
-    * mapPartitions, no shuffle, bounded memory per batch — identical shape
-    * to [[Multimodal.decode]].
+  /** Decode stage over (doc_id: long, payload: binary): a per-row map, no
+    * shuffle — identical shape to [[Multimodal.decode]].
     */
   def decode(media: DataFrame): Dataset[DecodedAudio] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(256).flatMap(_.map { case (id, bytes) =>
-        decodeOne(id, bytes)
-      }))
+      .map { case (id, bytes) => decodeOne(id, bytes) }
   }
 
   // -------------------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for web-scale corpora.
@@ -212,7 +212,6 @@ object Dedup {
     * node, `comp` = min reachable id.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
     val edges = {
       val p = pairs.select(col("id_a").cast("long").as("src"),
         col("id_b").cast("long").as("dst"))

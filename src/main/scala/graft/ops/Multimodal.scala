@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column handling: opaque `binary` payloads + typed metadata,
-  * with batched per-partition decode/feature stages.
+  * with per-row decode/feature stages.
   *
   * The image decode is REAL: `javax.imageio` ships with the JDK's
   * `java.desktop` module (PNG/JPEG/GIF/BMP/TIFF/WBMP readers — no external
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * as the HTML extraction path).
   *
   * Scale notes:
-  *  - decode is shuffle-free batched `mapPartitions`; partitioning is the
+  *  - decode is a shuffle-free per-row map; partitioning is the
   *    caller's choice, exactly like [[graft.pipeline.Extraction]];
   *  - a decompression bomb (tiny PNG declaring a huge raster) is caught
   *    BEFORE pixel allocation: header width/height are read without
@@ -176,17 +176,15 @@ object Multimodal {
     }
   }
 
-  /** Decode stage over (doc_id: long, payload: binary): batched
-    * mapPartitions, no shuffle, bounded memory per batch.
+  /** Decode stage over (doc_id: long, payload: binary): a per-row map, no
+    * shuffle.
     */
   def decode(media: DataFrame): Dataset[DecodedMedia] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(256).flatMap(_.map { case (id, bytes) =>
-        decodeOne(id, bytes)
-      }))
+      .map { case (id, bytes) => decodeOne(id, bytes) }
   }
 
   // -------------------------------------------------------------------

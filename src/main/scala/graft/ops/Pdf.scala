@@ -439,7 +439,7 @@ object Pdf {
     * a final partial group of n digits is padded with 'u' and yields n-1
     * bytes. Whitespace is skipped anywhere.
     */
-  private def ascii85Decode(data: Array[Byte], cap: Int): Array[Byte] = {
+  private[graft] def ascii85Decode(data: Array[Byte], cap: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length * 4 / 5 + 4)
     val group = new Array[Int](5)
     var n = 0
@@ -481,7 +481,7 @@ object Pdf {
     * next L+1 bytes; L in 129..255 repeats the next byte 257-L times; 128 is
     * EOD. Truncated input keeps what decoded (lenient, like flate).
     */
-  private def runLengthDecode(data: Array[Byte], cap: Int): Array[Byte] = {
+  private[graft] def runLengthDecode(data: Array[Byte], cap: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length * 2 + 16)
     var i = 0
     var done = false
@@ -509,10 +509,10 @@ object Pdf {
     * EarlyChange=1 (default) the width grows one code early (at table size
     * 2^w - 1, else at 2^w). Max width 12 bits.
     */
-  private def lzwDecode(data: Array[Byte], earlyChange: Int, cap: Int): Array[Byte] = {
+  private[graft] def lzwDecode(data: Array[Byte], earlyChange: Int, cap: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length * 3 + 16)
     // table entries 258+; literals 0-255 are implicit
-    var entries = new Array[Array[Byte]](4096)
+    val entries = new Array[Array[Byte]](4096)
     var next = 258
     var width = 9
     var prev: Array[Byte] = null
@@ -559,19 +559,6 @@ object Pdf {
     }
     out.toByteArray
   }
-
-  /** Test seam: run one filter decoder directly (PdfSpec lives in
-    * graft.core; the workers above are private).
-    */
-  private[graft] def decodeFilterForTest(name: String, data: Array[Byte],
-                                         earlyChange: Int = 1): Array[Byte] =
-    name match {
-      case "LZW" => lzwDecode(data, earlyChange, MaxStreamBytes)
-      case "A85" => ascii85Decode(data, MaxStreamBytes)
-      case "RL"  => runLengthDecode(data, MaxStreamBytes)
-      case "AHx" => asciiHexDecode(data)
-      case other => throw new IllegalArgumentException(other)
-    }
 
   // ------------------------------------------------------------------
   // Document (xref + object access)
@@ -685,8 +672,7 @@ object Pdf {
 
     private def loadXrefStream(lx: Lexer, depth: Int): Unit = {
       lx.skipWs()
-      val n1 = lx.parseNonNegInt(); val _ = n1
-      val n2 = lx.parseNonNegInt(); val _2 = n2
+      lx.parseNonNegInt(); lx.parseNonNegInt() // object number, generation
       if (!lx.tryKeyword("obj")) throw new PdfParseException("bad_xref")
       parseObject(lx, allowRefs = true, resolveLen = o => Some(resolve(o))) match {
         case ps @ PStream(dict, _) if dict.get("Type").contains(PName("XRef")) =>
@@ -707,7 +693,7 @@ object Pdf {
           for ((start, count) <- index) {
             var i = 0
             while (i < count && p + rowLen <= data.length) {
-              var f = 0; var j = 0
+              var j = 0
               def field(width: Int): Long = {
                 var v = 0L; var k = 0
                 while (k < width) { v = (v << 8) | (data(p + j + k) & 0xff); k += 1 }
@@ -716,7 +702,6 @@ object Pdf {
               val t = if (w(0) == 0) 1L else field(w(0))
               val f2 = field(w(1))
               val f3 = field(w(2))
-              f = t.toInt; val _3 = f
               val num = start + i
               if (!xref.contains(num)) {
                 t match {

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.control.NonFatal
 
-/** Spark stage for the PDF leg of the main-content pipeline: batched,
-  * shuffle-free `mapPartitions` over an opaque `binary` payload column —
+/** Spark stage for the PDF leg of the main-content pipeline: a per-row,
+  * shuffle-free map over an opaque `binary` payload column —
   * the same shape as [[Multimodal.decode]] and
   * [[graft.pipeline.Extraction]], so partitioning stays the caller's
   * choice and the operator composes with the bucketed/salted routing of
@@ -38,13 +38,13 @@ object PdfOps {
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(256).flatMap(_.map { case (id, bytes) =>
+      .map { case (id, bytes) =>
         val n = if (bytes == null) 0L else bytes.length.toLong
         guarded {
           val d = Pdf.parse(bytes)
           PdfRow(id, n, d.pages.length.toLong, d.text, null)
         }(err => PdfRow(id, n, 0L, null, err))
-      }))
+      }
   }
 
   /** Per-page layout rows (line count + top/bottom baseline y + first line
@@ -56,7 +56,7 @@ object PdfOps {
     import spark.implicits._
     df.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.grouped(256).flatMap(_.flatMap { case (id, bytes) =>
+      .flatMap { case (id, bytes) =>
         guarded {
           Pdf.parse(bytes).pages.map { pg =>
             val nl = pg.lines.length.toLong
@@ -66,6 +66,6 @@ object PdfOps {
             PdfPageRow(id, pg.index.toLong, nl, top, bot, first)
           }
         }(_ => Vector.empty[PdfPageRow])
-      }))
+      }
   }
 }

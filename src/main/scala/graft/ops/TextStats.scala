@@ -19,7 +19,6 @@ object TextStats {
   def nWords(text: Column): Column = size(wordsCol(text)).cast("long")
 
   def stopwordCount(text: Column): Column = {
-    val list = EnStopwords.map(w => s"'$w'").mkString("(", ",", ")")
     size(filter(wordsCol(text), w => w.isin(EnStopwords: _*))).cast("long")
   }
 

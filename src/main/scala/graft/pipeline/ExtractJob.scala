@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 

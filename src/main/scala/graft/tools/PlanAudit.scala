@@ -93,7 +93,7 @@ object PlanAudit {
         !qualPlan.contains("BatchEvalPython"),
       qualPlan)
 
-    // 10. multimodal decode: shuffle-free mapPartitions over a scan pruned
+    // 10. multimodal decode: shuffle-free per-row map over a scan pruned
     //     to (doc_id, text) — feature/meta work is map-side everywhere
     val mm = graft.SparkEntry.queries("q_multimodal")(spark, sfDir)
     val mmPlan = mm.queryExecution.executedPlan.toString

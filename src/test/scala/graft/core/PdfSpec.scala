@@ -279,7 +279,7 @@ class PdfSpec extends AnyFunSuite {
     val encoded = Array(0x80, 0x0B, 0x60, 0x50, 0x22, 0x0C, 0x0C, 0x85, 0x01).map(_.toByte)
     // the worked example's input bytes are DECIMAL 45/65/66
     val expect = Array(45, 45, 45, 45, 45, 65, 45, 45, 45, 66).map(_.toByte)
-    assert(Pdf.decodeFilterForTest("LZW", encoded).toSeq == expect.toSeq)
+    assert(Pdf.lzwDecode(encoded, 1, Pdf.MaxStreamBytes).toSeq == expect.toSeq)
   }
 
   test("LZW round-trips across 9->12-bit widths and a mid-stream clear, both EarlyChange values") {
@@ -289,43 +289,43 @@ class PdfSpec extends AnyFunSuite {
     for (early <- Seq(1, 0)) {
       val enc = PdfGen.lzwEncode(data, early)
       assert(enc.length < data.length, s"early=$early should compress")
-      assert(Pdf.decodeFilterForTest("LZW", enc, early).toSeq == data.toSeq, s"early=$early")
+      assert(Pdf.lzwDecode(enc, early, Pdf.MaxStreamBytes).toSeq == data.toSeq, s"early=$early")
     }
     // EarlyChange must actually change the wire: decoding with the wrong
     // flag desyncs the width schedule past entry 510
-    val wrong = scala.util.Try(Pdf.decodeFilterForTest("LZW", PdfGen.lzwEncode(data, 1), 0))
+    val wrong = scala.util.Try(Pdf.lzwDecode(PdfGen.lzwEncode(data, 1), 0, Pdf.MaxStreamBytes))
     assert(wrong.isFailure || wrong.get.toSeq != data.toSeq)
     // tiny inputs round-trip too (incl. empty and the KwKwK pattern)
     for (s <- Seq("", "a", "ab", "aaaa", "abababab")) {
       val b = s.getBytes(StandardCharsets.ISO_8859_1)
-      assert(Pdf.decodeFilterForTest("LZW", PdfGen.lzwEncode(b)).toSeq == b.toSeq, s)
+      assert(Pdf.lzwDecode(PdfGen.lzwEncode(b), 1, Pdf.MaxStreamBytes).toSeq == b.toSeq, s)
     }
   }
 
   test("ASCII85Decode: classic vector, z-group, partial finals, whitespace, overflow") {
-    assert(new String(Pdf.decodeFilterForTest("A85", ascii("9jqo^~>")),
+    assert(new String(Pdf.ascii85Decode(ascii("9jqo^~>"), Pdf.MaxStreamBytes),
       StandardCharsets.ISO_8859_1) == "Man ")
-    assert(Pdf.decodeFilterForTest("A85", ascii("z~>")).toSeq == Seq[Byte](0, 0, 0, 0))
+    assert(Pdf.ascii85Decode(ascii("z~>"), Pdf.MaxStreamBytes).toSeq == Seq[Byte](0, 0, 0, 0))
     val rnd = new java.util.Random(11)
     for (n <- 0 to 9) { // every final-group residue; '<~' prefix; whitespace
       val b = new Array[Byte](40 + n); rnd.nextBytes(b)
       val enc = PdfGen.ascii85Encode(b)
-      assert(Pdf.decodeFilterForTest("A85", enc).toSeq == b.toSeq, s"n=$n")
+      assert(Pdf.ascii85Decode(enc, Pdf.MaxStreamBytes).toSeq == b.toSeq, s"n=$n")
       val spaced = ascii("<~" + new String(enc, StandardCharsets.ISO_8859_1).grouped(3).mkString("\n"))
-      assert(Pdf.decodeFilterForTest("A85", spaced).toSeq == b.toSeq, s"n=$n spaced")
+      assert(Pdf.ascii85Decode(spaced, Pdf.MaxStreamBytes).toSeq == b.toSeq, s"n=$n spaced")
     }
-    intercept[PdfParseException](Pdf.decodeFilterForTest("A85", ascii("uuuuu~>")))
+    intercept[PdfParseException](Pdf.ascii85Decode(ascii("uuuuu~>"), Pdf.MaxStreamBytes))
   }
 
   test("RunLengthDecode: direct vectors and round-trip across the 128-byte caps") {
     val direct = Array[Byte](2, 'a', 'b', 'c', (257 - 3).toByte, 'x', 128.toByte, 'Z')
-    assert(new String(Pdf.decodeFilterForTest("RL", direct),
+    assert(new String(Pdf.runLengthDecode(direct, Pdf.MaxStreamBytes),
       StandardCharsets.ISO_8859_1) == "abcxxx") // trailing 'Z' is after EOD
     val rnd = new java.util.Random(13)
     val b = new Array[Byte](5000)
     rnd.nextBytes(b)
     java.util.Arrays.fill(b, 1000, 1400, 'r'.toByte) // run longer than 128
-    assert(Pdf.decodeFilterForTest("RL", PdfGen.runLengthEncode(b)).toSeq == b.toSeq)
+    assert(Pdf.runLengthDecode(PdfGen.runLengthEncode(b), Pdf.MaxStreamBytes).toSeq == b.toSeq)
   }
 
   test("generator filter variants hit the wire and parse (LZW / RunLength / A85+Flate chain)") {

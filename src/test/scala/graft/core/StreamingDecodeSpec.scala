@@ -13,13 +13,21 @@ class StreamingDecodeSpec extends AnyFunSuite {
     bytes.grouped(size)
 
   test("chunked decode equals whole-buffer parse for every chunk size") {
-    val html = "<meta charset=utf-8><p>café 中文 &amp; plain</p><pre>a\r\nb</pre>"
-    val bytes = html.getBytes("UTF-8")
-    val whole = VisibleText.ofDocument(HtmlParser.parseBytes(bytes))
-    for (size <- Seq(1, 2, 3, 7, 16, 1024)) {
-      val streamed = VisibleText.ofDocument(
-        Streaming.parseStream(chunksOf(bytes, size)))
-      assert(streamed == whole, s"chunk size $size")
+    val inputs: Seq[(Array[Byte], Option[String])] = Seq(
+      "<meta charset=utf-8><p>café 中文 &amp; plain</p><pre>a\r\nb</pre>".getBytes("UTF-8") -> None,
+      // a mapped label the JVM cannot decode: both paths fall back to UTF-8
+      ("<meta charset=iso-8859-10><p>".getBytes("US-ASCII") :+ 0xE9.toByte) -> None,
+      // gb18030's encoding of U+FEFF leads: TextDecoder keeps it (it strips a
+      // leading U+FEFF only for utf-8 and utf-16)
+      (Array(0x84, 0x31, 0x95, 0x33).map(_.toByte) ++ "<p>x</p>".getBytes("US-ASCII")) ->
+        Some("gb18030"))
+    for ((bytes, label) <- inputs) {
+      val whole = HtmlParser.parseBytes(bytes, ParseOptions(transportEncodingLabel = label))
+      for (size <- Seq(1, 2, 3, 7, 16, 1024)) {
+        val streamed = Streaming.parseStream(chunksOf(bytes, size), transportEncodingLabel = label)
+        assert(Serializer.serialize(streamed) == Serializer.serialize(whole),
+          s"${new String(bytes, "ISO-8859-1")} chunk size $size")
+      }
     }
   }
 
@@ -51,7 +59,17 @@ class StreamingDecodeSpec extends AnyFunSuite {
       Streaming.parseStream(chunksOf(bytes, 100),
         ParseOptions(budgets = Some(Budgets(maxInputBytes = Some(500)))))
     }
-    assert(e.payload.budget == "maxInputBytes")
+    // checked per chunk: the sixth 100-byte chunk is the first past 500
+    assert(e.payload == BudgetExceededPayload("maxInputBytes", 500L, 600L))
+  }
+
+  test("parseBytes maxInputBytes trips only above the limit") {
+    val bytes = ("<p>" + "x" * 1000 + "</p>").getBytes("UTF-8")
+    def parse(limit: Int) =
+      HtmlParser.parseBytes(bytes, ParseOptions(budgets = Some(Budgets(maxInputBytes = Some(limit)))))
+    val e = intercept[BudgetExceededException](parse(1006))
+    assert(e.payload == BudgetExceededPayload("maxInputBytes", 1006L, 1007L))
+    assert(VisibleText.ofDocument(parse(1007)) == "x" * 1000)
   }
 
   test("tokenizeStream yields the same tokens as tokenize") {
@@ -77,7 +95,8 @@ class StreamingDecodeSpec extends AnyFunSuite {
       Streaming.decodeStreamToText(chunksOf(bytes, 8192),
         budgets = Some(Budgets(maxBufferedBytes = Some(8192))))
     }
-    assert(e.payload.budget == "maxBufferedBytes")
+    // the second chunk would grow the head buffer to all 9007 bytes
+    assert(e.payload == BudgetExceededPayload("maxBufferedBytes", 8192L, 9007L))
   }
 
   test("maxBufferedBytes rejects an oversized post-sniff chunk") {
@@ -89,7 +108,7 @@ class StreamingDecodeSpec extends AnyFunSuite {
       Streaming.decodeStreamToText(chunks,
         budgets = Some(Budgets(maxBufferedBytes = Some(16384))))
     }
-    assert(e.payload.budget == "maxBufferedBytes")
+    assert(e.payload == BudgetExceededPayload("maxBufferedBytes", 16384L, 20000L))
   }
 
   test("tokenizeStream honors decode budgets") {
@@ -98,6 +117,6 @@ class StreamingDecodeSpec extends AnyFunSuite {
       Streaming.tokenizeStream(chunksOf(bytes, 100),
         budgets = Some(Budgets(maxInputBytes = Some(500)))).toVector
     }
-    assert(e.payload.budget == "maxInputBytes")
+    assert(e.payload == BudgetExceededPayload("maxInputBytes", 500L, 600L))
   }
 }

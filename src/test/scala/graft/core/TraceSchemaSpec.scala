@@ -54,7 +54,8 @@ class TraceSchemaSpec extends AnyFunSuite {
       HtmlParser.parse("<p>a</p>", ParseOptions(trace = true,
         budgets = Some(Budgets(maxTraceEvents = Some(3), maxTraceBytes = Some(4096)))))
     }
-    assert(e.payload.budget == "maxTraceEvents")
+    // the fourth event (tree-mutation, after decode, budget and token) trips
+    assert(e.payload == BudgetExceededPayload("maxTraceEvents", 3L, 4L))
   }
 
   test("trace is bounded by maxTraceBytes") {
@@ -62,7 +63,8 @@ class TraceSchemaSpec extends AnyFunSuite {
       HtmlParser.parse("<p>a</p>", ParseOptions(trace = true,
         budgets = Some(Budgets(maxTraceBytes = Some(64)))))
     }
-    assert(e.payload.budget == "maxTraceBytes")
+    // the first event's JSON alone is 83 characters
+    assert(e.payload == BudgetExceededPayload("maxTraceBytes", 64L, 83L))
   }
 
   test("well-formed document produces the expected event sequence") {

@@ -298,7 +298,6 @@ class PipelineSpec extends AnyFunSuite {
     val df = spark.createDataset(turns).toDF()
     val salted = df.repartition(8, col("conv_id"),
       pmod(xxhash64(col("conv_id"), expr("turn_idx DIV 100")), lit(8)))
-    import org.apache.spark.sql.Row
     val counts = salted.rdd.mapPartitionsWithIndex { (i, it) =>
       Iterator.single(i -> it.size)
     }.collect().filter(_._2 > 0)
@@ -326,7 +325,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("ExtractJob progress markers work with a scheme-qualified output URI") {
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-uri").toString
     val in = s"$tmp/in"
     Transcripts.generate(spark, 6, seed = 3L).toDF().write.parquet(in)
