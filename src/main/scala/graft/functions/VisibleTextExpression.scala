@@ -18,25 +18,23 @@ object VisibleTextEval {
   // NULL (never "", which would read as an empty page), so one poison row
   // never kills a task; genuinely fatal errors (OOM etc.) still fail the
   // task. The typed pipeline's guard, with its failure class dropped: a SQL
-  // string column has nowhere to carry it. A document that overflows the
-  // task thread's stack runs once more on the task's 64 MiB-stack worker,
-  // as the typed path runs every document; only such a document pays for
-  // that hand-off, and one that overflows there too is NULL.
-  private def guard(body: () => String): UTF8String =
-    Extraction.guarded(UTF8String.fromString(
-      try body() catch { case _: StackOverflowError => Extraction.onTaskWorker(body) }))(_ => null)
+  // string column has nowhere to carry it. A document is parsed on the
+  // caller's thread; a document that overflows it is parsed once more on a
+  // 64 MiB-stack thread, and is NULL only if it overflows there too.
+  private def guard(body: => String): UTF8String =
+    Extraction.guarded(UTF8String.fromString(body))(_ => null)
 
   private def parse(html: UTF8String) =
     HtmlParser.parse(html.toString, ParseOptions(budgets = Some(budgets)))
 
   def visibleText(html: UTF8String): UTF8String = {
     if (html == null) return null
-    guard(() => VisibleText.ofDocument(parse(html), VisibleTextOptions()))
+    guard(VisibleText.ofDocument(parse(html), VisibleTextOptions()))
   }
 
   def textContent(html: UTF8String): UTF8String = {
     if (html == null) return null
-    guard(() => graft.core.Traversal.textContent(parse(html).children))
+    guard(graft.core.Traversal.textContent(parse(html).children))
   }
 }
 

@@ -73,14 +73,26 @@ object ExtractJob {
   def parseArgs(argv: Array[String]): Args = {
     var a = Args()
     var i = 0
+    // the value after the flag at `i`; a flag given last has none
+    def value(): String = {
+      require(i + 1 < argv.length, s"${argv(i)} needs a value")
+      i += 2
+      argv(i - 1)
+    }
+    def positive(): Int = {
+      val flag = argv(i)
+      val n = value().toIntOption.getOrElse(0)
+      require(n > 0, s"$flag must be a positive integer")
+      n
+    }
     while (i < argv.length) {
       argv(i) match {
-        case "--input"   => a = a.copy(input = argv(i + 1)); i += 2
-        case "--output"  => a = a.copy(output = argv(i + 1)); i += 2
-        case "--buckets" => a = a.copy(buckets = argv(i + 1).toInt); i += 2
-        case "--passes"  => a = a.copy(passes = argv(i + 1).toInt); i += 2
-        case "--salt"    => a = a.copy(salt = argv(i + 1).toInt); i += 2
-        case "--format"  => a = a.copy(format = argv(i + 1)); i += 2
+        case "--input"   => a = a.copy(input = value())
+        case "--output"  => a = a.copy(output = value())
+        case "--buckets" => a = a.copy(buckets = positive())
+        case "--passes"  => a = a.copy(passes = positive())
+        case "--salt"    => a = a.copy(salt = value().toInt)
+        case "--format"  => a = a.copy(format = value())
         case "--resume"  => a = a.copy(resume = true); i += 1
         case "--main-content" => a = a.copy(mainContent = true); i += 1
         case other        => throw new IllegalArgumentException(s"unknown arg $other")

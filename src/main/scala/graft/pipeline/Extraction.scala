@@ -6,18 +6,15 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.util.CollectionAccumulator
 
 /** Per-turn extraction: the reference's `visibleText(parse(html))` +
-  * provenance-token spans, run distributed via typed `mapPartitions`.
+  * provenance-token spans, run distributed via a typed per-row `map`.
   *
   * Design notes (scale):
   *  - extraction is embarrassingly parallel — no shuffle is introduced here;
   *    callers choose partitioning (`repartition(conv_id)` only when a
   *    downstream per-conversation stage needs co-location);
-  *  - rows are processed in batches on a dedicated 64 MiB-stack worker
-  *    thread: the tree builder and the node converter recurse over the DOM
-  *    (reference recursion: src/internal/tree/build.ts:420-490), and
-  *    adversarial deeply-nested inputs overflow executor default stacks.
-  *    One worker thread per task, fed ~512-row batches, amortizes thread
-  *    start-up to noise;
+  *  - each turn is parsed on the caller's thread; a document that
+  *    overflows it is parsed once more on a 64 MiB-stack thread (see
+  *    [[guarded]]): only adversarially deep documents pay for a thread;
   *  - a poison document can never kill a task: budget violations and any
   *    unexpected error land in the `budget_error` column (north rule:
   *    per-row guard, reference budget semantics src/public/mod.ts:165-180);
@@ -35,78 +32,37 @@ object Extraction {
     maxDepth = Some(65536)
   )
 
-  private val BatchSize = 512
-  private val WorkerStackBytes = 64L * 1024 * 1024
+  private val DeepStackBytes = 64L * 1024 * 1024
 
-  /** One long-lived deep-stack worker thread per task: batches of work are
-    * handed over via synchronous queues. A thread PER BATCH would re-mmap a
-    * 64 MiB stack thousands of times per task and serialize on the process
-    * memory-map lock at high core counts — one thread per task amortizes it
-    * to nothing while keeping the deep stack for recursive tree work.
+  /** Runs `body` on a freshly started daemon thread with a 64 MiB stack and
+    * joins it: its result, or its failure rethrown here.
     */
-  final class BigStackWorker {
-    private val in = new java.util.concurrent.SynchronousQueue[AnyRef]
-    private val out = new java.util.concurrent.SynchronousQueue[AnyRef]
-    private object Poison
-    private val thread = new Thread(null, () => {
-      var running = true
-      while (running) {
-        in.take() match {
-          case f: Function0[_] =>
-            out.put(try Right(f()) catch { case t: Throwable => Left(t) })
-          case _ => running = false
-        }
-      }
-    }, "graft-extract-worker", WorkerStackBytes)
+  private def onDeepStack[T](body: => T): T = {
+    var result: Either[Throwable, T] = null
+    val thread = new Thread(null, () => {
+      result = try Right(body) catch { case t: Throwable => Left(t) }
+    }, "graft-deep-stack", DeepStackBytes)
     thread.setDaemon(true)
     thread.start()
-
-    def apply[T](f: () => T): T =
-      { in.put(f); out.take() } match {
-        case Right(v) => v.asInstanceOf[T]
-        case Left(t: Throwable) => throw t
-        case other => throw new IllegalStateException(s"unexpected $other")
-      }
-
-    def close(): Unit = in.offer(Poison, 1, java.util.concurrent.TimeUnit.SECONDS)
+    thread.join()
+    result.fold(throw _, identity)
   }
 
-  private val taskWorkers = new java.util.concurrent.ConcurrentHashMap[Long, BigStackWorker]
-
-  /** Runs `f` on the current task's [[BigStackWorker]], started on the
-    * task's first call and closed when the task completes. Outside a task,
-    * `f` runs on a worker started and closed for this one call.
-    */
-  private[graft] def onTaskWorker[T](f: () => T): T = TaskContext.get() match {
-    case null =>
-      val worker = new BigStackWorker
-      try worker(f) finally worker.close()
-    case tc =>
-      val id = tc.taskAttemptId()
-      val worker = Option(taskWorkers.get(id)).getOrElse {
-        val started = new BigStackWorker
-        taskWorkers.put(id, started)
-        tc.addTaskCompletionListener[Unit] { _ => taskWorkers.remove(id); started.close() }
-        started
-      }
-      worker(f)
-  }
-
-  /** `rowFn` over `turns`, in batches, on the task's deep-stack worker. */
-  private[pipeline] def extractOnTaskWorker(turns: Iterator[TranscriptTurn])
-                                           (rowFn: TranscriptTurn => ExtractedTurn): Iterator[ExtractedTurn] =
-    turns.grouped(BatchSize).flatMap(batch => onTaskWorker(() => batch.map(rowFn)))
-
-  /** The one failure guard of per-document work: `body`, or `failed` with
-    * the failure's class — `budget:<budget>` for a budget trip,
-    * `internal:<exception>` for parse surprises and recursion overflow.
-    * Genuinely fatal VM errors (OOM, internal JVM errors) propagate and fail
-    * the task so Spark retries it. Shared by the typed extraction and the
-    * `visible_text()` / `text_content()` SQL expressions.
+  /** The one failure guard and the one stack policy of per-document work.
+    * `body` runs on the calling thread; if that thread's stack overflows,
+    * `body` runs once more on a 64 MiB-stack thread (the tree builder and
+    * the node converter recurse over the DOM, reference recursion:
+    * src/internal/tree/build.ts:420-490). A failure becomes `failed` with
+    * its class: `budget:<budget>` for a budget trip, `internal:<exception>`
+    * for parse surprises and an overflow of the deep stack too. Genuinely
+    * fatal VM errors (OOM, internal JVM errors) and interrupts propagate and
+    * fail the task so Spark retries it. Shared by the typed extraction and
+    * the `visible_text()` / `text_content()` SQL expressions.
     */
   private[graft] def guarded[T](body: => T)(failed: String => T): T =
-    try body
-    catch {
+    try {
+      try body catch { case _: StackOverflowError => onDeepStack(body) }
+    } catch {
       case e: BudgetExceededException => failed(s"budget:${e.payload.budget}")
       case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
         failed(s"internal:${e.getClass.getSimpleName}")
@@ -189,7 +145,7 @@ object Extraction {
   /** Distributed extraction. No shuffle; preserves input partitioning. */
   def extract(ds: Dataset[TranscriptTurn]): Dataset[ExtractedTurn] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions(extractOnTaskWorker(_)(extractOne(_, DefaultBudgets, VisibleTextOptions())))
+    ds.map(extractOne(_, DefaultBudgets, VisibleTextOptions()))
   }
 
   /** Distributed main-content extraction (same plumbing, boilerplate
@@ -197,7 +153,7 @@ object Extraction {
     */
   def extractMain(ds: Dataset[TranscriptTurn]): Dataset[ExtractedTurn] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions(extractOnTaskWorker(_)(extractMainOne(_, DefaultBudgets, MainContentOptions())))
+    ds.map(extractMainOne(_, DefaultBudgets, MainContentOptions()))
   }
 
   // -------------------------------------------------------------------

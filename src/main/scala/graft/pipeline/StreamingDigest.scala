@@ -12,10 +12,11 @@ import graft.core.VisibleTextOptions
   *
   * Scale shape: state is O(1) per conversation (three longs), the digest is
   * an order-independent XOR so out-of-order turns fold in without re-reading
-  * history, and extraction runs per row on the task's deep-stack worker with
-  * the batch budgets (total — poison rows degrade to an error inside
-  * extractOne, never fail the query). Each micro-batch
-  * emits the updated running digest per touched conversation
+  * history, and extraction runs per row with the batch budgets (total —
+  * poison rows degrade to an error inside extractOne, never fail the
+  * query). Each turn is parsed on the caller's thread; a document that
+  * overflows it is parsed once more on a 64 MiB-stack thread. Each
+  * micro-batch emits the updated running digest per touched conversation
   * (OutputMode.Update).
   *
   * State eviction: the input stream MUST carry a watermark on `ts` (the
@@ -59,9 +60,7 @@ object StreamingDigest {
             ConvUpdate(convId, st.n_turns, st.digest, st.n_chars)
           } else {
             var st = state.getOption.getOrElse(ConvDigestState(0L, 0L, 0L))
-            Extraction.extractOnTaskWorker(rows)(
-              Extraction.extractOne(_, Extraction.DefaultBudgets, VisibleTextOptions())
-            ).foreach { e =>
+            rows.map(Extraction.extractOne(_, Extraction.DefaultBudgets, VisibleTextOptions())).foreach { e =>
               st = ConvDigestState(
                 st.n_turns + 1L,
                 st.digest ^ ConvDigest.turnHash(e.turn_idx.toLong, e.extracted_text),

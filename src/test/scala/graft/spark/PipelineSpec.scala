@@ -182,7 +182,12 @@ class PipelineSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-exec").toString
     Transcripts.generate(spark, 300, seed = 17L).toDF().write.parquet(s"$tmp/in")
     // the stock local FileSystem without libhadoop starts a chmod process
-    // per created file, .crc sidecar and directory: about 200 for this run
+    // per created file, .crc sidecar and directory: about 200 for this run.
+    // Spark itself execs `getconf PAGESIZE` once per JVM, when the first
+    // metrics heartbeat (10-20 s after the session starts) loads
+    // ProcfsMetricsGetter; load it now (the session above exists), so the
+    // check sees only the processes of the job, whenever that heartbeat falls
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val previous = System.getSecurityManager
     System.setSecurityManager(new SecurityManager {
@@ -358,13 +363,31 @@ class PipelineSpec extends AnyFunSuite {
     intercept[InternalError] {
       Extraction.guardedExtract(t, 0L)(throw new InternalError("injected"))
     }
-    // a poison document still lands in the error column end-to-end: on the
-    // 64 MiB extraction worker stack this trips maxDepth post-build; on a
-    // small test-thread stack the build overflows first — both degrade
+    // a poison document still lands in the error column end-to-end: it
+    // overflows the test thread's stack, is parsed once more on the guard's
+    // 64 MiB-stack thread, and trips maxDepth there
     val poison = Extraction.extractOne(
       t.copy(text = "<div>" * 100000), Extraction.DefaultBudgets,
       graft.core.VisibleTextOptions())
-    assert(poison.budget_error.startsWith("budget:") ||
-      poison.budget_error == "internal:StackOverflowError", poison.budget_error)
+    assert(poison.budget_error == "budget:maxDepth", poison.budget_error)
+    // a deep but legal document extracts outside any Spark task too
+    val deep = Extraction.extractOne(
+      t.copy(text = "<div>" * 20000 + "deep text"), Extraction.DefaultBudgets,
+      graft.core.VisibleTextOptions())
+    assert(deep.budget_error == "", deep.budget_error)
+    assert(deep.extracted_text == "deep text")
+  }
+
+  test("ExtractJob.parseArgs rejects a flag without a value and non-positive buckets or passes") {
+    def rejected(argv: String*): String =
+      intercept[IllegalArgumentException](ExtractJob.parseArgs(argv.toArray)).getMessage
+    assert(rejected("--output", "o", "--input").contains("--input"))
+    assert(rejected("--input", "i", "--output", "o", "--passes", "0").contains("--passes"))
+    assert(rejected("--input", "i", "--output", "o", "--buckets", "0").contains("--buckets"))
+    assert(rejected("--input", "i", "--output", "o", "--buckets", "-4").contains("--buckets"))
+    assert(ExtractJob.parseArgs(Array("--input", "i", "--output", "o", "--buckets", "16",
+      "--passes", "2", "--salt", "8", "--resume", "--main-content")) ==
+      ExtractJob.Args("i", "o", buckets = 16, passes = 2, resume = true, salt = 8,
+        mainContent = true))
   }
 }
