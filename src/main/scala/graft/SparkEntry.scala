@@ -58,7 +58,6 @@ object SparkEntry {
   final case class IdOutline(doc_id: Long, ord: Long, depth: Long, tag: String, heading: String)
   final case class IdChunk(doc_id: Long, chunk_idx: Long, content: String)
   final case class IdSerialized(doc_id: Long, html_out: String)
-  final case class IdFingerprint(doc_id: Long, fp: Long)
   final case class IdTextErrors(doc_id: Long, extracted_text: String,
                                 n_errors: Long, first_error: String)
   final case class IdTrace(doc_id: Long, n_events: Long, n_transitions: Long,

@@ -241,9 +241,10 @@ object EncodingSniff {
   // subpart per byte-class (so a lone surrogate EDA080 yields THREE U+FFFD
   // where the JVM yields one), windows-1252 maps the five undefined bytes
   // to their C1 controls instead of U+FFFD, and x-user-defined maps
-  // 0x80-0xFF into U+F780-F7FF. The four encodings the sniff can produce
-  // (plus x-user-defined) are implemented exactly; anything else falls back
-  // to the JVM registry.
+  // 0x80-0xFF into U+F780-F7FF. The four encodings the sniff can produce,
+  // x-user-defined, and the two mapped labels the JVM has no charset for
+  // (iso-8859-10, iso-8859-14) are implemented exactly; anything else
+  // falls back to the JVM registry.
 
   /** windows-1252 high row 0x80-0x9F (WHATWG index; identity elsewhere). */
   private val Win1252Hi: Array[Char] = Array(
@@ -253,20 +254,60 @@ object EncodingSniff {
     0x02dc, 0x2122, 0x0161, 0x203a, 0x0153, 0x009d, 0x017e, 0x0178
   ).map(_.toChar)
 
+  /** Bytes 0x80-0xFF of the single-byte encodings decoded here (below 0x80
+    * each is ASCII), one char per byte. The ISO 8859 parts keep the C1
+    * controls at 0x80-0x9F; their 0xA0-0xFF rows were generated from
+    * CPython's `iso8859_10` and `iso8859_14` codecs, which follow the same
+    * ISO mappings as the Encoding Standard's indexes.
+    */
+  private val SingleByteHigh: Map[String, String] = {
+    val c1 = (0x80 until 0xa0).map(_.toChar).mkString
+    Map(
+      "windows-1252" -> (Win1252Hi.mkString + (0xa0 to 0xff).map(_.toChar).mkString),
+      "x-user-defined" -> (0xf780 to 0xf7ff).map(_.toChar).mkString,
+      "iso-8859-10" -> (c1 +
+        "\u00a0\u0104\u0112\u0122\u012a\u0128\u0136\u00a7" +
+        "\u013b\u0110\u0160\u0166\u017d\u00ad\u016a\u014a" +
+        "\u00b0\u0105\u0113\u0123\u012b\u0129\u0137\u00b7" +
+        "\u013c\u0111\u0161\u0167\u017e\u2015\u016b\u014b" +
+        "\u0100\u00c1\u00c2\u00c3\u00c4\u00c5\u00c6\u012e" +
+        "\u010c\u00c9\u0118\u00cb\u0116\u00cd\u00ce\u00cf" +
+        "\u00d0\u0145\u014c\u00d3\u00d4\u00d5\u00d6\u0168" +
+        "\u00d8\u0172\u00da\u00db\u00dc\u00dd\u00de\u00df" +
+        "\u0101\u00e1\u00e2\u00e3\u00e4\u00e5\u00e6\u012f" +
+        "\u010d\u00e9\u0119\u00eb\u0117\u00ed\u00ee\u00ef" +
+        "\u00f0\u0146\u014d\u00f3\u00f4\u00f5\u00f6\u0169" +
+        "\u00f8\u0173\u00fa\u00fb\u00fc\u00fd\u00fe\u0138"),
+      "iso-8859-14" -> (c1 +
+        "\u00a0\u1e02\u1e03\u00a3\u010a\u010b\u1e0a\u00a7" +
+        "\u1e80\u00a9\u1e82\u1e0b\u1ef2\u00ad\u00ae\u0178" +
+        "\u1e1e\u1e1f\u0120\u0121\u1e40\u1e41\u00b6\u1e56" +
+        "\u1e81\u1e57\u1e83\u1e60\u1ef3\u1e84\u1e85\u1e61" +
+        "\u00c0\u00c1\u00c2\u00c3\u00c4\u00c5\u00c6\u00c7" +
+        "\u00c8\u00c9\u00ca\u00cb\u00cc\u00cd\u00ce\u00cf" +
+        "\u0174\u00d1\u00d2\u00d3\u00d4\u00d5\u00d6\u1e6a" +
+        "\u00d8\u00d9\u00da\u00db\u00dc\u00dd\u0176\u00df" +
+        "\u00e0\u00e1\u00e2\u00e3\u00e4\u00e5\u00e6\u00e7" +
+        "\u00e8\u00e9\u00ea\u00eb\u00ec\u00ed\u00ee\u00ef" +
+        "\u0175\u00f1\u00f2\u00f3\u00f4\u00f5\u00f6\u1e6b" +
+        "\u00f8\u00f9\u00fa\u00fb\u00fc\u00fd\u0177\u00ff"))
+  }
+
   /** Stateful WHATWG decoder — feed chunks, then finish; usable both for
     * whole-buffer decode and the streaming path (state survives chunk
     * boundaries exactly like `TextDecoder(..., {stream: true})`).
     */
   final class WhatwgStreamDecoder(encoding: String) {
+    // a single-byte encoding's 0x80-0xFF chars; null for the others
+    private val high: String = SingleByteHigh.getOrElse(encoding, null)
     private val mode: Int = encoding match {
-      case "utf-8"          => 0
-      case "windows-1252"   => 1
-      case "utf-16le"       => 2
-      case "utf-16be"       => 3
-      case "x-user-defined" => 4
-      case _                => 5
+      case "utf-8"           => 0
+      case "utf-16le"        => 2
+      case "utf-16be"        => 3
+      case _ if high != null => 1
+      case _                 => 4
     }
-    def isWhatwgNative: Boolean = mode != 5
+    def isWhatwgNative: Boolean = mode != 4
     // utf-8 state (spec "UTF-8 decoder")
     private var cp = 0
     private var seen = 0
@@ -319,7 +360,7 @@ object EncodingSniff {
         case 1 =>
           while (i < until) {
             val b = bytes(i) & 0xff
-            out.append(if (b >= 0x80 && b <= 0x9f) Win1252Hi(b - 0x80) else b.toChar)
+            out.append(if (b < 0x80) b.toChar else high.charAt(b - 0x80))
             i += 1
           }
         case 2 | 3 =>
@@ -333,12 +374,6 @@ object EncodingSniff {
               i += 1
               emitUtf16Unit(unit, out)
             }
-          }
-        case 4 =>
-          while (i < until) {
-            val b = bytes(i) & 0xff
-            out.append(if (b < 0x80) b.toChar else (0xf780 + (b - 0x80)).toChar)
-            i += 1
           }
         case _ =>
           // non-WHATWG-native: callers use the JVM charset path instead

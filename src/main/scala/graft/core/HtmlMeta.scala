@@ -34,11 +34,6 @@ object HtmlMeta {
     case _         => false
   }
 
-  val FormattingTags: Set[String] = Set(
-    "a", "b", "big", "code", "em", "font", "i", "nobr", "s", "small",
-    "strike", "strong", "tt", "u"
-  )
-
   val ImpliedEndTags: Set[String] =
     Set("dd", "dt", "li", "optgroup", "option", "p", "rb", "rp", "rt", "rtc")
 

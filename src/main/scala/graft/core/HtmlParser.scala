@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 /** Public parsing façade: parse / parseFragment / parseBytes plus the
@@ -89,8 +90,8 @@ object HtmlParser {
   /** The one tree build: a [[TreeBuilder]] over `html`, `run` (document or
     * fragment mode), then the select/option patch on the builder's
     * document. Returns the parent `run` returned, whose children are the
-    * tree. The `.dat` normalizer ([[Serializer.normalizedParse]]) uses it
-    * directly; [[parse]] and [[parseFragment]] through [[build]].
+    * tree. [[parse]] and [[parseFragment]] use it through [[build]], the
+    * test sources' `.dat` normalizer (`DatNormalizer`) directly.
     */
   private[core] def buildDom(html: String, options: ParseOptions,
                              onError: (String, Int, Int) => Unit,
@@ -123,7 +124,7 @@ object HtmlParser {
       if (trace != null) trace.onTransition else null)(run)
 
     val state = new ConvertState(options.captureSpans, budgets.orNull, errors)
-    val children = convertChildren(parent.children, state)
+    val children = convertChildren(parent.children, 0, state)
     // the reference's metrics (mod.ts:441-473) count the root node too and
     // put top-level nodes at depth 2, with 1 for an empty tree
     val totalNodes = state.nodeCount + 1
@@ -182,14 +183,33 @@ object HtmlParser {
 
   // ------------------------------------------------------------------
   // conversion: internal DOM -> public immutable tree
-  private def convertChildren(nodes: ArrayBuffer[DomNode], state: ConvertState): Vector[HtmlNode] = {
-    val out = Vector.newBuilder[HtmlNode]
-    nodes.foreach { n =>
-      val converted = convertNode(n, 0, state)
-      if (converted != null) out += converted
+  private def convertChildren(nodes: ArrayBuffer[DomNode], depth: Int,
+                              state: ConvertState): Vector[HtmlNode] = {
+    val out = slots(nodes.length)
+    var n = 0
+    // an index loop: the closure-based foreach showed up in parse profiles
+    var i = 0
+    while (i < nodes.length) {
+      val converted = convertNode(nodes(i), depth, state)
+      if (converted != null) { out(n) = converted; n += 1 }
+      i += 1
     }
-    out.result()
+    vectorOf(out, n)
   }
+
+  // an exact-size array for converted nodes or attributes (a shared one
+  // for none: nothing can write to it)
+  private val NoSlots = new Array[AnyRef](0)
+  private def slots(n: Int): Array[AnyRef] = if (n == 0) NoSlots else new Array[AnyRef](n)
+
+  /** The first `n` elements of `out` as a vector. Up to 32 of them,
+    * `Vector.from` makes the `Object[]` itself the vector's array, with no
+    * builder and no copy: safe, because nothing writes to `out` afterwards.
+    */
+  private def vectorOf[T](out: Array[AnyRef], n: Int): Vector[T] =
+    if (n == 0) Vector.empty
+    else Vector.from(ArraySeq.unsafeWrapArray(
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n))).asInstanceOf[Vector[T]]
 
   /** One conversion's id counter (the root takes id 1), its node count
     * and deepest node depth (top-level nodes at 0; -1 while no node), and
@@ -204,6 +224,11 @@ object HtmlParser {
     var nodeCount = 0
     var maxDepth = -1
 
+    /** Post-order ids: a node's subtree holds the ids after its previous
+      * sibling's (a first child's, after those before its parent's
+      * subtree) up to and including its own. [[MainContent]]'s tie-break
+      * and `graft.pipeline.Extraction`'s span lookup rely on it.
+      */
     def nextId(): Int = { lastId += 1; lastId }
 
     /** Counts a node at `depth` before its conversion. */
@@ -295,74 +320,44 @@ object HtmlParser {
       // tree layer, so the build.ts:200-235 checks never run (verified
       // differentially); they are accepted-and-ignored here to match.
       // children are converted (and receive ids) BEFORE the element itself
-      // (index loops: the closure-based foreach showed up in parse profiles)
-      val kids =
-        if (el.children.isEmpty) Vector.empty[HtmlNode]
-        else if (el.children.length == 1) {
-          // single-child fast path: skip the 32-slot VectorBuilder
-          val c0 = convertNode(el.children(0), depth + 1, state)
-          // Vector0 :+ x builds a Vector1 directly (no varargs wrapping)
-          if (c0 == null) Vector.empty[HtmlNode] else Vector.empty[HtmlNode] :+ c0
-        } else {
-          val b = Vector.newBuilder[HtmlNode]
-          var i = 0
-          while (i < el.children.length) {
-            val converted = convertNode(el.children(i), depth + 1, state)
-            if (converted != null) b += converted
-            i += 1
-          }
-          b.result()
+      val kids = convertChildren(el.children, depth + 1, state)
+      // Mirrors the reference's public attribute normalization
+      // (build.ts:195-235): the parser-adjusted attr surfaces under its
+      // LOCAL name (parse5 moves the `xlink:`/`xml:`/`xmlns:` qualifier
+      // into a separate prefix field, and formatAttributeName's
+      // `name.includes(":")` branch never fires post-adjustment, so the
+      // reference's public name for e.g. `xlink:href` in foreign content
+      // is plain `href`); collisions after formatting keep the FIRST
+      // occurrence; and adjusted attrs carry NO span (the reference's
+      // location lookup is keyed by the tokenized name, which the
+      // adjustment renamed away — build.ts:218).
+      // A pre-scan: only elements with at least one adjusted attr pay for
+      // the rename/dedup set (tokenized names are ASCII-lowercased, so
+      // dedup-by-exact-name already happened in the tokenizer).
+      var anyAdjusted = false
+      var j = 0
+      while (j < el.attrCount && !anyAdjusted) {
+        if (attrWasAdjusted(el.attrAt(j).name)) anyAdjusted = true
+        j += 1
+      }
+      val seen = if (anyAdjusted) new java.util.HashSet[String]() else null
+      val attrs = slots(el.attrCount)
+      var n = 0
+      var i = 0
+      while (i < el.attrCount) {
+        val a = el.attrAt(i)
+        val adjusted = anyAdjusted && attrWasAdjusted(a.name)
+        val name = if (adjusted) publicAttrName(a.name) else a.name
+        if (seen == null || seen.add(name)) {
+          val sp =
+            if (state.captureSpans && !adjusted && a.start >= 0 && a.end >= a.start)
+              Some(Span(a.start, a.end))
+            else None
+          attrs(n) = Attr(name, a.value, sp)
+          n += 1
         }
-      val attrs =
-        if (el.attrCount == 0) Vector.empty[Attr]
-        else {
-          // Mirrors the reference's public attribute normalization
-          // (build.ts:195-235): the parser-adjusted attr surfaces under its
-          // LOCAL name (parse5 moves the `xlink:`/`xml:`/`xmlns:` qualifier
-          // into a separate prefix field, and formatAttributeName's
-          // `name.includes(":")` branch never fires post-adjustment, so the
-          // reference's public name for e.g. `xlink:href` in foreign content
-          // is plain `href`); collisions after formatting keep the FIRST
-          // occurrence; and adjusted attrs carry NO span (the reference's
-          // location lookup is keyed by the tokenized name, which the
-          // adjustment renamed away — build.ts:218).
-          // fast pre-scan: only elements with at least one adjusted attr pay
-          // for the rename/dedup path (tokenized names are ASCII-lowercased,
-          // so dedup-by-exact-name already happened in the tokenizer)
-          var anyAdjusted = false
-          var j = 0
-          while (j < el.attrCount && !anyAdjusted) {
-            if (attrWasAdjusted(el.attrAt(j).name)) anyAdjusted = true
-            j += 1
-          }
-          if (!anyAdjusted && el.attrCount == 1) {
-            // single-attr fast path: skip the 32-slot VectorBuilder
-            val a = el.attrAt(0)
-            val sp =
-              if (state.captureSpans && a.start >= 0 && a.end >= a.start)
-                Some(Span(a.start, a.end))
-              else None
-            Vector.empty[Attr] :+ Attr(a.name, a.value, sp)
-          } else {
-          val b = Vector.newBuilder[Attr]
-          val seen = if (anyAdjusted) new java.util.HashSet[String]() else null
-          var i = 0
-          while (i < el.attrCount) {
-            val a = el.attrAt(i)
-            val adjusted = anyAdjusted && attrWasAdjusted(a.name)
-            val name = if (adjusted) publicAttrName(a.name) else a.name
-            if (seen == null || seen.add(name)) {
-              val sp =
-                if (state.captureSpans && !adjusted && a.start >= 0 && a.end >= a.start)
-                  Some(Span(a.start, a.end))
-                else None
-              b += Attr(name, a.value, sp)
-            }
-            i += 1
-          }
-          b.result()
-          }
-        }
+        i += 1
+      }
       val elSpan = spanOf(el, state.captureSpans).orElse {
         if (state.captureSpans && el.startOffset >= 0 && el.startTagEnd >= el.startOffset)
           Some(Span(el.startOffset, el.startTagEnd))
@@ -371,7 +366,7 @@ object HtmlParser {
       ElementNode(
         state.nextId(),
         el.tagName, // public tag name: namespace prefix already absent
-        attrs,
+        vectorOf(attrs, n),
         kids,
         provenanceOf(elSpan, state.captureSpans),
         elSpan

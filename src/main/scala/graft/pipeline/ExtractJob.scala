@@ -15,9 +15,11 @@ import scala.jdk.CollectionConverters._
   *     [--format parquet|iceberg] [--main-content]
   *
   * Scale design:
-  *  - rows are routed to `buckets` stable hash buckets of `conv_id`
-  *    (`pmod(xxhash64(conv_id), buckets)`) and written with
-  *    `partitionBy(_bucket)`; with `--passes P > 1` the job runs P
+  *  - rows are routed to `buckets` stable hash buckets of `conv_id` by one
+  *    column expression, `pmod(xxhash64(conv_id), buckets)`, which selects
+  *    a pass's rows, keys the salted and the write repartitions, and is
+  *    written as the `_bucket` column with `partitionBy(_bucket)`; with
+  *    `--passes P > 1` the job runs P
   *    sequential sub-jobs each covering `buckets/P` buckets and records a
   *    progress marker per completed pass — `--resume` skips completed
   *    passes, giving checkpointed restart at pass granularity;
@@ -36,7 +38,7 @@ import scala.jdk.CollectionConverters._
   *    task by (`_bucket`, `conv_id`, `turn_idx`) for stable turn order in
   *    every bucket file;
   *  - lineage rows (partition id, counts, XOR digest) are folded by the
-  *    writer tasks themselves, from the rows they write
+  *    writer tasks themselves, from the typed rows they write
   *    ([[Extraction.foldLineage]]), and reach the driver through an
   *    accumulator. The write stage is the job's result stage, whose
   *    accumulator updates Spark applies once per partition and never from a
@@ -79,19 +81,20 @@ object ExtractJob {
       i += 2
       argv(i - 1)
     }
-    def positive(): Int = {
+    // an integer value of at least `min`, or an error naming the flag
+    def atLeast(min: Int, what: String): Int = {
       val flag = argv(i)
-      val n = value().toIntOption.getOrElse(0)
-      require(n > 0, s"$flag must be a positive integer")
-      n
+      val n = value().toIntOption.filter(_ >= min)
+      require(n.isDefined, s"$flag must be a $what integer")
+      n.get
     }
     while (i < argv.length) {
       argv(i) match {
         case "--input"   => a = a.copy(input = value())
         case "--output"  => a = a.copy(output = value())
-        case "--buckets" => a = a.copy(buckets = positive())
-        case "--passes"  => a = a.copy(passes = positive())
-        case "--salt"    => a = a.copy(salt = value().toInt)
+        case "--buckets" => a = a.copy(buckets = atLeast(1, "positive"))
+        case "--passes"  => a = a.copy(passes = atLeast(1, "positive"))
+        case "--salt"    => a = a.copy(salt = atLeast(0, "non-negative"))
         case "--format"  => a = a.copy(format = value())
         case "--resume"  => a = a.copy(resume = true); i += 1
         case "--main-content" => a = a.copy(mainContent = true); i += 1
@@ -126,6 +129,8 @@ object ExtractJob {
     fs.mkdirs(progressDir)
 
     val bucketsPerPass = args.buckets / args.passes
+    // a turn's bucket: selects the pass, keys both repartitions, written as `_bucket`
+    val bucket = pmod(xxhash64(col("conv_id")), lit(args.buckets))
     val t0 = System.nanoTime()
     val ran = Seq.newBuilder[LineageRow]
     for (pass <- 0 until args.passes) {
@@ -135,21 +140,18 @@ object ExtractJob {
       } else {
         val lo = pass * bucketsPerPass
         val hi = lo + bucketsPerPass
-        val turns = io.readInput(spark, args.input)
-          .withColumn("_bucket", pmod(xxhash64(col("conv_id")), lit(args.buckets)))
-          .filter(col("_bucket") >= lo && col("_bucket") < hi)
+        val turns = io.readInput(spark, args.input).filter(bucket >= lo && bucket < hi)
 
         val salted =
           if (args.salt > 1)
-            turns.repartition(col("_bucket"),
+            turns.repartition(bucket,
               pmod(xxhash64(col("conv_id"), expr(s"turn_idx DIV ${args.salt}")), lit(args.salt)))
           else turns
 
-        val turnsDs = salted.drop("_bucket").as[TranscriptTurn]
+        val turnsDs = salted.as[TranscriptTurn]
         val extracted =
-          (if (args.mainContent) Extraction.extractMain(turnsDs)
-           else Extraction.extract(turnsDs))
-            .withColumn("_bucket", pmod(xxhash64(col("conv_id")), lit(args.buckets)))
+          if (args.mainContent) Extraction.extractMain(turnsDs)
+          else Extraction.extract(turnsDs)
 
         // stable turn ordering inside every bucket file: repartition by
         // bucket then sort (conv_id, turn_idx) within each writer task; the
@@ -157,7 +159,8 @@ object ExtractJob {
         val lineage = spark.sparkContext.collectionAccumulator[LineageRow](s"graft.extract.lineage.pass$pass")
         val width = math.min(bucketsPerPass, spark.sparkContext.defaultParallelism)
         io.writePass(
-          Extraction.foldLineage(extracted.repartition(width, col("_bucket")), lineage)
+          Extraction.foldLineage(extracted.repartition(width, bucket), lineage)
+            .withColumn("_bucket", bucket)
             .sortWithinPartitions(col("_bucket"), col("conv_id"), col("turn_idx")),
           args.output, pass)
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.util.CollectionAccumulator
 
 /** Per-turn extraction: the reference's `visibleText(parse(html))` +
@@ -20,8 +20,8 @@ import org.apache.spark.util.CollectionAccumulator
   *    per-row guard, reference budget semantics src/public/mod.ts:165-180);
   *  - extraction keeps no counters of its own: every count (rows, failures,
   *    parse errors, chars in/out) is a column of the per-partition
-  *    [[LineageRow]], folded by [[lineage]] or, in a job's result stage, by
-  *    [[foldLineage]].
+  *    [[LineageRow]], folded from the typed rows by [[lineage]] or, in a
+  *    job's result stage, by [[foldLineage]].
   */
 object Extraction {
 
@@ -98,31 +98,36 @@ object Extraction {
                  options: VisibleTextOptions): ExtractedTurn =
     extractTurn(t, budgets) { tree =>
       val (text, provTokens) = VisibleText.extractWithProvenance(tree.children, options)
-      // node id -> input span, for provenance-token char spans (direct
-      // recursion: the generic walk's per-node closure showed up at ~9% of
-      // extraction in profiles). Noscript-fallback tokens carry node ids of
-      // the fragment VisibleText parses, resolved here against this map.
-      val spanById = scala.collection.mutable.HashMap.empty[Int, Span]
-      def collectSpans(n: HtmlNode): Unit = {
-        if (n.spanProvenance == "input" && n.span.isDefined)
-          spanById.put(n.id, n.span.get)
-        n match {
-          case e: ElementNode =>
-            var i = 0
-            while (i < e.children.length) { collectSpans(e.children(i)); i += 1 }
-          case _ =>
-        }
-      }
-      var ci = 0
-      while (ci < tree.children.length) { collectSpans(tree.children(ci)); ci += 1 }
+      // Noscript-fallback tokens carry node ids of the fragment VisibleText
+      // parses; they too are resolved against the document.
       val spans = provTokens.map { tok =>
-        val sp = tok.sourceNodeId.flatMap(spanById.get)
+        val sp = tok.sourceNodeId.flatMap(inputSpan(tree.children, _))
         TokenSpan(tok.kind, tok.value,
           sp.map(_.start).getOrElse(-1), sp.map(_.end).getOrElse(-1),
           tok.sourceNodeId.getOrElse(-1))
       }
       (text, spans)
     }
+
+  /** The input span of node `id` in the trees `nodes`, if it has one. Ids
+    * are post-order (`HtmlParser.ConvertState.nextId`), so the first sibling
+    * whose id is at least `id`, found by binary search, is the only subtree
+    * that can hold it.
+    */
+  @scala.annotation.tailrec private def inputSpan(nodes: Vector[HtmlNode], id: Int): Option[Span] = {
+    var lo = 0
+    var hi = nodes.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (nodes(mid).id < id) lo = mid + 1 else hi = mid
+    }
+    if (lo == nodes.length) None
+    else nodes(lo) match {
+      case n if n.id == id => if (n.spanProvenance == SpanProvenance.Input) n.span else None
+      case e: ElementNode  => inputSpan(e.children, id)
+      case _               => None
+    }
+  }
 
   /** Extract one turn, keeping only the main-content block (north-star
     * boilerplate strip: text-density, link-density, tag/class scoring —
@@ -173,10 +178,9 @@ object Extraction {
     h
   }
 
-  /** The lineage fold of one task partition over each row's (conv_id,
-    * turn_idx, text, failed, parse errors, chars in, chars out): row and
-    * failed-row counts, the sums of parse errors and chars, and the XOR of
-    * [[rowDigest]]. XOR is order-independent, so the global XOR of all
+  /** The lineage fold of one task partition over its extracted rows: row
+    * and failed-row counts, the sums of parse errors and chars, and the XOR
+    * of [[rowDigest]]. XOR is order-independent, so the global XOR of all
     * partition digests is the dataset digest at any parallelism.
     * [[lineage]] and [[foldLineage]] both build their [[LineageRow]]s here.
     */
@@ -188,14 +192,13 @@ object Extraction {
     private var charsOut = 0L
     private var digest = 0L
 
-    def add(convId: String, turnIdx: Int, text: String, failed: Boolean,
-            nParseErrors: Int, nCharsIn: Long, nCharsOut: Long): Unit = {
+    def add(e: ExtractedTurn): Unit = {
       rows += 1
-      if (failed) errors += 1
-      parseErrors += nParseErrors
-      charsIn += nCharsIn
-      charsOut += nCharsOut
-      digest ^= rowDigest(convId, turnIdx, text)
+      if (e.budget_error.nonEmpty) errors += 1
+      parseErrors += e.n_parse_errors
+      charsIn += e.n_chars_in
+      charsOut += e.n_chars_out
+      digest ^= rowDigest(e.conv_id, e.turn_idx, e.extracted_text)
     }
 
     /** The partition's lineage row; none for a partition without rows. */
@@ -211,8 +214,7 @@ object Extraction {
     import extracted.sparkSession.implicits._
     extracted.mapPartitions { it =>
       val fold = new LineageFold(TaskContext.getPartitionId())
-      it.foreach(e => fold.add(e.conv_id, e.turn_idx, e.extracted_text, e.budget_error.nonEmpty,
-        e.n_parse_errors, e.n_chars_in, e.n_chars_out))
+      it.foreach(fold.add)
       fold.result.iterator
     }
   }
@@ -224,31 +226,13 @@ object Extraction {
     * never those of a failed attempt, so the rows in `sink` count exactly
     * what the job's successful tasks passed on.
     */
-  def foldLineage(rows: DataFrame, sink: CollectionAccumulator[LineageRow]): DataFrame = {
-    val schema = rows.schema
-    val conv = schema.fieldIndex("conv_id")
-    val turn = schema.fieldIndex("turn_idx")
-    val text = schema.fieldIndex("extracted_text")
-    val error = schema.fieldIndex("budget_error")
-    val parseErrors = schema.fieldIndex("n_parse_errors")
-    val charsIn = schema.fieldIndex("n_chars_in")
-    val charsOut = schema.fieldIndex("n_chars_out")
-    rows.mapPartitions { (it: Iterator[Row]) =>
+  def foldLineage(rows: Dataset[ExtractedTurn],
+                  sink: CollectionAccumulator[LineageRow]): Dataset[ExtractedTurn] = {
+    import rows.sparkSession.implicits._
+    rows.mapPartitions { it =>
       val fold = new LineageFold(TaskContext.getPartitionId())
       // `++` evaluates its argument once, when `it` is exhausted
-      it.map { r =>
-        fold.add(r.getString(conv), r.getInt(turn), r.getString(text), r.getString(error).nonEmpty,
-          r.getInt(parseErrors), r.getLong(charsIn), r.getLong(charsOut))
-        r
-      } ++ { fold.result.foreach(sink.add); Iterator.empty }
-    }(Encoders.row(schema))
-  }
-
-  /** Order-independent digest of the whole extracted dataset. */
-  def datasetDigest(extracted: Dataset[ExtractedTurn]): Long = {
-    import extracted.sparkSession.implicits._
-    extracted
-      .map(e => rowDigest(e.conv_id, e.turn_idx, e.extracted_text))
-      .reduce(_ ^ _)
+      it.map { e => fold.add(e); e } ++ { fold.result.foreach(sink.add); Iterator.empty }
+    }
   }
 }

@@ -38,13 +38,13 @@ object PinnedRenderers {
     * suite).
     */
   def tree(html: String, onModeTransition: TreeBuilder.ModeTransition => Unit = null): String =
-    Serializer.normalizeTree(new TreeBuilder(html, true, false, (_, _, _) => (), onModeTransition).parseDocument())
+    DatNormalizer.normalizeTree(new TreeBuilder(html, true, false, (_, _, _) => (), onModeTransition).parseDocument())
 
   /** html5lib-normalized fragment tree in `context` (no compat patch). */
   def fragment(context: String, html: String,
                onModeTransition: TreeBuilder.ModeTransition => Unit = null): String = {
     val builder = new TreeBuilder(html, true, false, (_, _, _) => (), onModeTransition)
-    Serializer.normalizeTree(builder.parseFragment(context.trim.toLowerCase))
+    DatNormalizer.normalizeTree(builder.parseFragment(context.trim.toLowerCase))
   }
 
   /** [[TokenizeApi.tokenize]]'s public stream, one token per line, then its errors. */

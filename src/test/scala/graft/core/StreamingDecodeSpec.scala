@@ -13,20 +13,25 @@ class StreamingDecodeSpec extends AnyFunSuite {
     bytes.grouped(size)
 
   test("chunked decode equals whole-buffer parse for every chunk size") {
-    val inputs: Seq[(Array[Byte], Option[String])] = Seq(
-      "<meta charset=utf-8><p>café 中文 &amp; plain</p><pre>a\r\nb</pre>".getBytes("UTF-8") -> None,
-      // a mapped label the JVM cannot decode: both paths fall back to UTF-8
-      ("<meta charset=iso-8859-10><p>".getBytes("US-ASCII") :+ 0xE9.toByte) -> None,
+    // (bytes, transport label, the visible text where an input pins it)
+    val inputs: Seq[(Array[Byte], Option[String], Option[String])] = Seq(
+      ("<meta charset=utf-8><p>café 中文 &amp; plain</p><pre>a\r\nb</pre>".getBytes("UTF-8"),
+        None, None),
+      // two mapped labels the JVM has no charset for, decoded from tables
+      ("<meta charset=iso-8859-10><p>".getBytes("US-ASCII") :+ 0xA1.toByte, None, Some("\u0104")),
+      ("<meta charset=iso-8859-14><p>".getBytes("US-ASCII") :+ 0xA1.toByte, None, Some("\u1e02")),
       // gb18030's encoding of U+FEFF leads: TextDecoder keeps it (it strips a
       // leading U+FEFF only for utf-8 and utf-16)
-      (Array(0x84, 0x31, 0x95, 0x33).map(_.toByte) ++ "<p>x</p>".getBytes("US-ASCII")) ->
-        Some("gb18030"))
-    for ((bytes, label) <- inputs) {
+      (Array(0x84, 0x31, 0x95, 0x33).map(_.toByte) ++ "<p>x</p>".getBytes("US-ASCII"),
+        Some("gb18030"), None))
+    for ((bytes, label, text) <- inputs) {
       val whole = HtmlParser.parseBytes(bytes, ParseOptions(transportEncodingLabel = label))
+      text.foreach(t => assert(VisibleText.ofDocument(whole) == t))
       for (size <- Seq(1, 2, 3, 7, 16, 1024)) {
         val streamed = Streaming.parseStream(chunksOf(bytes, size), transportEncodingLabel = label)
         assert(Serializer.serialize(streamed) == Serializer.serialize(whole),
           s"${new String(bytes, "ISO-8859-1")} chunk size $size")
+        text.foreach(t => assert(VisibleText.ofDocument(streamed) == t, s"$t chunk size $size"))
       }
     }
   }

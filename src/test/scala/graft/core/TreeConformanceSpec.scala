@@ -59,11 +59,11 @@ class TreeConformanceSpec extends AnyFunSuite {
     // modes it triggers the same structural transitions as any other
     // character (quirks + html/head/body insertion), so a following comment
     // lands in BODY, not on the document (parser/index.js:770-824)
-    assert(Serializer.normalizedParse("\u0000<!--c--><p>x") ==
+    assert(DatNormalizer.normalizedParse("\u0000<!--c--><p>x") ==
       "| <html>\n|   <head>\n|   <body>\n|     <!-- c -->\n|     <p>\n|       \"x\"")
     // in-table NUL re-enters table-text buffering (pending reset, token
     // dropped) rather than foster-parenting anything
-    assert(Serializer.normalizedParse("<table>\u0000<td>x</table>") ==
+    assert(DatNormalizer.normalizedParse("<table>\u0000<td>x</table>") ==
       "| <html>\n|   <head>\n|   <body>\n|     <table>\n|       <tbody>\n|         <tr>\n|           <td>\n|             \"x\"")
   }
 
@@ -71,18 +71,18 @@ class TreeConformanceSpec extends AnyFunSuite {
     // the reference tokenizer accumulates adjacent NULs into ONE
     // NULL_CHARACTER token, so foreign content replaces the whole run with
     // a SINGLE U+FFFD (distilled from the wild-profile sweep, seed 0x0DDBA11)
-    assert(Serializer.normalizedParse("<svg><![CDATA[a\u0000\u0000b]]></svg>") ==
+    assert(DatNormalizer.normalizedParse("<svg><![CDATA[a\u0000\u0000b]]></svg>") ==
       "| <html>\n|   <head>\n|   <body>\n|     <svg svg>\n|       \"a\uFFFDb\"")
     // non-adjacent NULs stay separate tokens: one replacement each
-    assert(Serializer.normalizedParse("<svg><![CDATA[a\u0000x\u0000b]]></svg>") ==
+    assert(DatNormalizer.normalizedParse("<svg><![CDATA[a\u0000x\u0000b]]></svg>") ==
       "| <html>\n|   <head>\n|   <body>\n|     <svg svg>\n|       \"a\uFFFDx\uFFFDb\"")
   }
 
   for (c <- cases) {
     test(s"tree ${c.file} #${c.idx}: ${c.data.take(48).replace("\n", "\\n")}") {
       val actual = c.fragment match {
-        case Some(ctx) => Serializer.normalizedParseFragment(c.data, ctx)
-        case None      => Serializer.normalizedParse(c.data)
+        case Some(ctx) => DatNormalizer.normalizedParseFragment(c.data, ctx)
+        case None      => DatNormalizer.normalizedParse(c.data)
       }
       assert(actual == c.expected,
         s"\n--- input ---\n${c.data}\n--- expected ---\n${c.expected}\n--- actual ---\n$actual")

@@ -3,6 +3,7 @@ package graft.spark
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +18,17 @@ import graft.pipeline._
   */
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  /** Order-independent digest of a whole extracted dataset: the XOR of
+    * every row's [[Extraction.rowDigest]], computed apart from the lineage
+    * fold that the specs check against it.
+    */
+  private def datasetDigest(extracted: Dataset[ExtractedTurn]): Long = {
+    import extracted.sparkSession.implicits._
+    extracted
+      .map(e => Extraction.rowDigest(e.conv_id, e.turn_idx, e.extracted_text))
+      .reduce(_ ^ _)
+  }
 
   private def fixtureCases(): Seq[(Int, String, String)] = {
     val url = getClass.getResource("/visible-text/v1")
@@ -71,11 +83,38 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an element with 40 children and 40 attributes keeps order, post-order ids and spans") {
+    import graft.core._
+    // past 32, the conversion's vectors are built rather than wrapped
+    val html = "<div " + (0 until 40).map(i => s"a$i='v$i'").mkString(" ") + ">" +
+      (0 until 40).map(i => s"<i>t$i</i>").mkString + "</div>"
+    def firstDiv(ns: Vector[HtmlNode]): Option[ElementNode] = ns.iterator.collect {
+      case e: ElementNode => if (e.tagName == "div") Some(e) else firstDiv(e.children)
+    }.flatten.nextOption()
+    val div = firstDiv(HtmlParser.parse(html, ParseOptions(captureSpans = true)).children).get
+    assert(div.attributes.map(a => (a.name, a.value)) == (0 until 40).map(i => (s"a$i", s"v$i")))
+    val kids = div.children.map(_.asInstanceOf[ElementNode])
+    val texts = kids.map(_.children.head.asInstanceOf[TextNode])
+    assert(texts.map(_.value) == (0 until 40).map(i => s"t$i"))
+    // post-order: each text, then its <i>; the <div> right after its last child
+    for (k <- 0 until 40) {
+      assert(texts(k).id == div.id - 80 + 2 * k)
+      assert(kids(k).id == texts(k).id + 1)
+    }
+    assert(div.id == kids.last.id + 1)
+
+    val out = Extraction.extractOne(TranscriptTurn("wide", 0, "user", html, "",
+      new java.sql.Timestamp(0L)), Extraction.DefaultBudgets, VisibleTextOptions())
+    val last = out.spans.filter(s => s.kind == "text" && s.source_node_id == texts.last.id)
+    assert(last.map(s => (s.start, s.end)) == Seq((texts.last.span.get.start, texts.last.span.get.end)))
+    assert(html.substring(last.head.start, last.head.end) == "t39")
+  }
+
   test("determinism: digest identical across partitionings and reruns") {
     val ds = Transcripts.generate(spark, nConversations = 300, seed = 7L)
-    val d1 = Extraction.datasetDigest(Extraction.extract(ds.repartition(3)))
-    val d2 = Extraction.datasetDigest(Extraction.extract(ds.repartition(17)))
-    val d3 = Extraction.datasetDigest(Extraction.extract(ds.repartition(17)))
+    val d1 = datasetDigest(Extraction.extract(ds.repartition(3)))
+    val d2 = datasetDigest(Extraction.extract(ds.repartition(17)))
+    val d3 = datasetDigest(Extraction.extract(ds.repartition(17)))
     assert(d1 == d2)
     assert(d2 == d3)
   }
@@ -101,7 +140,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(lineage.map(_.n_chars_in).sum == rows.map(_.n_chars_in).sum)
     assert(lineage.map(_.n_chars_out).sum == rows.map(_.n_chars_out).sum)
     val global = lineage.map(_.digest).reduce(_ ^ _)
-    assert(global == Extraction.datasetDigest(extracted))
+    assert(global == datasetDigest(extracted))
   }
 
   /** One committed pass of an ExtractJob output, read back. */
@@ -132,7 +171,7 @@ class PipelineSpec extends AnyFunSuite {
         val errors = written.filter($"budget_error" =!= "").count()
         assert(lineage.map(_.n_rows).sum == written.count(), s"main=$main pass=$pass rows")
         assert(lineage.map(_.n_errors).sum == errors, s"main=$main pass=$pass errors")
-        assert(lineage.map(_.digest).fold(0L)(_ ^ _) == Extraction.datasetDigest(written),
+        assert(lineage.map(_.digest).fold(0L)(_ ^ _) == datasetDigest(written),
           s"main=$main pass=$pass digest")
         val (parseErrors, charsIn, charsOut) = written
           .agg(sum($"n_parse_errors"), sum($"n_chars_in"), sum($"n_chars_out"))
@@ -210,8 +249,8 @@ class PipelineSpec extends AnyFunSuite {
       .write.parquet(s"$tmp/shuffled")
     for (in <- Seq("plain", "shuffled"))
       ExtractJob.run(spark, ExtractJob.Args(s"$tmp/$in", s"$tmp/out-$in", buckets = 4, passes = 1))
-    val digest = Extraction.datasetDigest(readPass(s"$tmp/out-plain", 0))
-    assert(Extraction.datasetDigest(readPass(s"$tmp/out-shuffled", 0)) == digest)
+    val digest = datasetDigest(readPass(s"$tmp/out-plain", 0))
+    assert(datasetDigest(readPass(s"$tmp/out-shuffled", 0)) == digest)
     assert(readPass(s"$tmp/out-shuffled", 0).count() == plain.count())
     assert(!spark.read.parquet(s"$tmp/out-shuffled/data").columns.contains("extra"))
   }
@@ -289,7 +328,7 @@ class PipelineSpec extends AnyFunSuite {
         .select($"conv_id", $"turn_idx", $"role", $"extracted_text", $"spans",
           $"n_parse_errors", $"first_parse_error", $"budget_error",
           $"n_chars_in", $"n_chars_out").as[ExtractedTurn]
-      Extraction.datasetDigest(df)
+      datasetDigest(df)
     }
     assert(spark.read.parquet(s"$out1/data").count() ==
       spark.read.parquet(s"$out2/data").count())
@@ -385,6 +424,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(rejected("--input", "i", "--output", "o", "--passes", "0").contains("--passes"))
     assert(rejected("--input", "i", "--output", "o", "--buckets", "0").contains("--buckets"))
     assert(rejected("--input", "i", "--output", "o", "--buckets", "-4").contains("--buckets"))
+    // --salt takes a non-negative integer: 0 and 1 mean no salt
+    assert(rejected("--input", "i", "--output", "o", "--salt", "abc").contains("--salt"))
+    assert(rejected("--input", "i", "--output", "o", "--salt", "-3").contains("--salt"))
     assert(ExtractJob.parseArgs(Array("--input", "i", "--output", "o", "--buckets", "16",
       "--passes", "2", "--salt", "8", "--resume", "--main-content")) ==
       ExtractJob.Args("i", "o", buckets = 16, passes = 2, resume = true, salt = 8,
