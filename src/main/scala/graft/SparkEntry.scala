@@ -170,9 +170,10 @@ object SparkEntry {
           VisibleTextOptions(includeAccessibleNameFallback = true)))
       }),
 
-    // provenance char-pipeline consistency (mod.ts:1650-1664): on normal
-    // input the char pipeline must agree with the string pipeline (degraded
-    // = false) and the token stream has the closed-form kind sequence
+    // provenance (mod.ts:1638-1667): every token keeps its source node
+    // (degraded = false; the reference's degraded fallback, mod.ts:1650-1664,
+    // has no counterpart here) and the token stream has the closed-form
+    // kind sequence
     "q_provenance" -> ((s, dir) =>
       overHtml[IdProv](s, dir,
         "concat('<h1>', lang, '</h1><p>', text, '</p><table><tr><td>', source, '</td><td>', lang, '</td></tr></table>')") {

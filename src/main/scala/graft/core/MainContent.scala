@@ -207,14 +207,15 @@ object MainContent {
 
     if (candidates.isEmpty) return None
 
-    // The tie-break is the lowest node id: ids are post-order, so a tied
-    // descendant beats its ancestor and an earlier sibling a later one.
-    val ordered = candidates.sortInPlaceBy(_.el.id)
+    // The tie-break is the first candidate recorded. `visit` records each
+    // candidate once its subtree is done, so a tied descendant beats its
+    // ancestor and an earlier sibling a later one — the lowest node id, as
+    // ids are post-order too (`HtmlParser.ConvertState.nextId`).
     var best: Candidate = null
     var bestScore = Double.NegativeInfinity
     var j = 0
-    while (j < ordered.length) {
-      val c = ordered(j)
+    while (j < candidates.length) {
+      val c = candidates(j)
       val s = scoreOf(c.textChars, c.linkChars, c.nElements,
         c.el.tagName.toLowerCase, classIdSign(c.el), options)
       if (s > bestScore) { best = c; bestScore = s }

@@ -366,7 +366,7 @@ final class Tokenizer(input: String, sink: TokenSink) {
     * run STARTING with an entity starts at srcEnd-1 and a class-change
     * flush triggered by a decoded char ends the previous run there.
     */
-  private def emitDecoded(s: String, srcStart: Int, srcEnd: Int): Unit = {
+  private def emitDecoded(s: String, srcEnd: Int): Unit = {
     val at = srcEnd - 1
     flushNullRun(at)
     spillSlice() // decoded text dirties the pending run
@@ -777,10 +777,9 @@ final class Tokenizer(input: String, sink: TokenSink) {
   }
 
   private def dataCharRef(): Unit = {
-    val ampStart = curStart
     val decoded = consumeCharRef(inAttribute = false)
     if (decoded == null) emitChar('&')
-    else emitDecoded(decoded, ampStart, pos)
+    else emitDecoded(decoded, pos)
     fireEntErrs()
   }
 

@@ -35,9 +35,8 @@ object VisibleText {
     "thead", "tfoot", "ul"
   )
 
-  // ---- source chunk bookkeeping for the provenance variant ----
-  private final case class SourceMeta(nodeId: Int, nodeKind: String, role: String)
-  private final case class SourceChunk(value: String, meta: SourceMeta)
+  /** The source of a collected segment, for the provenance variant. */
+  private[core] final case class SourceMeta(nodeId: Int, nodeKind: String, role: String)
 
   /** CRLF/CR → LF. Allocation-free when the input has no '\r'. */
   private def normalizeNewlines(value: String): String = {
@@ -162,80 +161,141 @@ object VisibleText {
   }
 
 
-  /** Global output normalization (reference: mod.ts:1130-1141).
+  /** Visible text after global output normalization: chars [start, end) of
+    * `chars`, and for the provenance variant the source of each char at the
+    * same index of `sources` (null otherwise).
+    */
+  private[core] final class Normalized(
+      val chars: Array[Char], val sources: Array[SourceMeta],
+      val start: Int, val end: Int) {
+    def text: String = new String(chars, start, end - start)
+  }
+
+  private def isSpaceTabFf(c: Char): Boolean = c == ' ' || c == '\t' || c == '\f'
+
+  /** Global output normalization (reference: mod.ts:1130-1141), in place on
+    * all of `chars` and, when not null, on the parallel `sources`.
     *
     * Semantics are the reference's five sequential regex passes
     * ([ \t\f]+\n → \n; \n[ \t\f]+ → \n; \n{3,} → \n\n; " "{2,} → " ";
-    * \t{2,} → \t), hand-rolled into two scans: a run of [ \t\f\n] that
-    * contains a newline reduces to min(#newlines, 2) newlines (passes 1-3),
-    * then same-char space/tab runs collapse (passes 4-5). The golden fixture
-    * corpus pins the equivalence.
+    * \t{2,} → \t), then with `trim` the JS `String.trim()`, hand-rolled into
+    * two scans. The write index never passes the read index, so the buffer
+    * the collector laid out is reused rather than copied.
+    *
+    * Precondition: `chars` holds no '\r'. The reference maps CRLF/CR to LF
+    * first; here every collected segment has passed [[normalizeSegment]] or
+    * is a literal "\n", "\n\n" or "\t", so there is none to map.
     */
-  def normalizeOutput(value: String, trim: Boolean): String = {
-    val input = normalizeNewlines(value)
-    val sb = new java.lang.StringBuilder(input.length)
+  private[core] def normalize(chars: Array[Char], sources: Array[SourceMeta], trim: Boolean): Normalized = {
+    // pass 1: strip space/tab/ff before newlines (backtracking write pointer)
+    val n = chars.length
+    var w = 0
     var i = 0
-    val n = input.length
     while (i < n) {
-      val c = input.charAt(i)
-      if (c == ' ' || c == '\t' || c == '\f' || c == '\n') {
-        // find the end of the [ \t\f\n] run and count newlines
-        var j = i
-        var newlines = 0
-        while (j < n && {
-          val cj = input.charAt(j)
-          cj == ' ' || cj == '\t' || cj == '\f' || cj == '\n'
-        }) {
-          if (input.charAt(j) == '\n') newlines += 1
-          j += 1
-        }
-        if (newlines > 0) {
-          sb.append('\n')
-          if (newlines > 1) sb.append('\n')
-        } else {
-          // no newline: collapse same-char space/tab runs, keep \f as-is
-          var k = i
-          var prev: Char = 0
-          while (k < j) {
-            val ck = input.charAt(k)
-            if (!((ck == ' ' || ck == '\t') && ck == prev)) sb.append(ck)
-            prev = ck
-            k += 1
-          }
-        }
-        i = j
-      } else {
-        sb.append(c)
-        i += 1
+      val c = chars(i)
+      if (c == '\n') {
+        while (w > 0 && isSpaceTabFf(chars(w - 1))) w -= 1
       }
+      chars(w) = c
+      if (sources != null) sources(w) = sources(i)
+      w += 1
+      i += 1
     }
-    val output = sb.toString
-    if (!trim) return output
-    // JS String.trim() semantics, not Java's (see isJsWhitespace)
+    // pass 2 (fused): strip space/tab/ff after newlines, then collapse \n
+    // runs to 2, space runs to 1, tab runs to 1. Counters observe the
+    // post-strip stream exactly as the sequential passes do (a char dropped
+    // by a collapse still resets the other classes' runs, which is
+    // equivalent because at least one char of every collapsed run survives
+    // adjacent to it).
+    var w2 = 0
+    var stage2Prev: Char = 0
+    var nlRun = 0; var spRun = 0; var tabRun = 0
+    var r = 0
+    while (r < w) {
+      val c = chars(r)
+      if (stage2Prev == '\n' && isSpaceTabFf(c)) {
+        // dropped by strip-after-newline; stage2Prev stays '\n'
+      } else {
+        stage2Prev = c
+        var keep = true
+        if (c == '\n') {
+          nlRun += 1; spRun = 0; tabRun = 0; keep = nlRun <= 2
+        } else if (c == ' ') {
+          spRun += 1; nlRun = 0; tabRun = 0; keep = spRun <= 1
+        } else if (c == '\t') {
+          tabRun += 1; nlRun = 0; spRun = 0; keep = tabRun <= 1
+        } else {
+          nlRun = 0; spRun = 0; tabRun = 0
+        }
+        if (keep) {
+          chars(w2) = c
+          if (sources != null) sources(w2) = sources(r)
+          w2 += 1
+        }
+      }
+      r += 1
+    }
     var start = 0
-    var end = output.length
-    while (start < end && isJsWhitespace(output.charAt(start))) start += 1
-    while (end > start && isJsWhitespace(output.charAt(end - 1))) end -= 1
-    if (start == 0 && end == output.length) output else output.substring(start, end)
+    var end = w2
+    if (trim) {
+      // JS String.trim() semantics, not Java's (see isJsWhitespace)
+      while (start < end && isJsWhitespace(chars(start))) start += 1
+      while (end > start && isJsWhitespace(chars(end - 1))) end -= 1
+    }
+    new Normalized(chars, sources, start, end)
   }
 
-  private final class Collector(options: VisibleTextOptions, withChunks: Boolean) {
-    val parts = new java.lang.StringBuilder
-    val chunks: ArrayBuffer[SourceChunk] = if (withChunks) new ArrayBuffer else null
+  /** Collects the visible segments of the walked nodes in document order,
+    * and with `withSources` the [[SourceMeta]] of each. Every appended value
+    * has passed [[normalizeSegment]] or is a literal "\n", "\n\n" or "\t".
+    */
+  private final class Collector(options: VisibleTextOptions, withSources: Boolean) {
+    private val segments = new ArrayBuffer[String]
+    private val segmentSources: ArrayBuffer[SourceMeta] =
+      if (withSources) new ArrayBuffer else null
+    private var length = 0
 
-    def append(value: String, meta: SourceMeta): Unit = {
+    private def append(value: String, meta: SourceMeta): Unit = {
       if (value.isEmpty) return
-      parts.append(value)
-      if (chunks != null) chunks += SourceChunk(value, meta)
+      segments += value
+      if (segmentSources != null) segmentSources += meta
+      length += value.length
     }
 
-    private def metaOf(node: HtmlNode, role: String): SourceMeta =
-      if (chunks == null) null else SourceMeta(node.id, node.kind, role)
+    /** Lays the segments out into one exact-size char buffer, plus the
+      * per-char sources when collected, and normalizes it in place.
+      */
+    def normalized(trim: Boolean): Normalized = {
+      val chars = new Array[Char](length)
+      val sources = if (segmentSources != null) new Array[SourceMeta](length) else null
+      var w = 0
+      var s = 0
+      while (s < segments.length) {
+        val v = segments(s)
+        v.getChars(0, v.length, chars, w)
+        if (sources != null) {
+          val m = segmentSources(s)
+          var i = 0
+          while (i < v.length) { sources(w + i) = m; i += 1 }
+        }
+        w += v.length
+        s += 1
+      }
+      normalize(chars, sources, trim)
+    }
 
-    private def roleOr(over: String, dflt: String): String =
-      if (over != null) over else dflt
+    private def metaOf(node: HtmlNode, roleOverride: String, role: String): SourceMeta =
+      if (segmentSources == null) null
+      else SourceMeta(node.id, node.kind, if (roleOverride != null) roleOverride else role)
 
-    def collectNoscript(node: ElementNode, preserveWs: Boolean, roleOverride: String): Boolean = {
+    /** An attribute value shown as text, whitespace collapsed as in a text node. */
+    private def appendValue(value: String, el: ElementNode, roleOverride: String, role: String): Unit =
+      append(normalizeSegment(value, preserveWhitespace = false), metaOf(el, roleOverride, role))
+
+    private def appendBreak(break: String, el: ElementNode, roleOverride: String): Unit =
+      append(break, metaOf(el, roleOverride, "structure-break"))
+
+    private def collectNoscript(node: ElementNode, preserveWs: Boolean): Boolean = {
       if (node.tagName.toLowerCase != "noscript") return false
       if (node.children.length != 1) return false
       node.children(0) match {
@@ -251,29 +311,21 @@ object VisibleText {
 
     def collect(node: HtmlNode, preserveWs: Boolean, roleOverride: String): Unit = node match {
       case t: TextNode =>
-        append(
-          normalizeSegment(t.value, preserveWs),
-          metaOf(t, roleOr(roleOverride, "text-node"))
-        )
+        append(normalizeSegment(t.value, preserveWs), metaOf(t, roleOverride, "text-node"))
       case el: ElementNode =>
         if (shouldSkipHiddenSubtree(el, options)) return
         val tagName = el.tagName.toLowerCase
         val fallbackName = accessibleNameFallback(el, options)
         if (SkipTags.contains(tagName)) return
-        if (collectNoscript(el, preserveWs, roleOverride)) return
+        if (collectNoscript(el, preserveWs)) return
 
         if (tagName == "br") {
-          append("\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+          appendBreak("\n", el, roleOverride)
           return
         }
 
         if (tagName == "img" && options.includeControlValues) {
-          el.attr("alt").filter(_.nonEmpty).foreach { alt =>
-            append(
-              normalizeSegment(alt, preserveWhitespace = false),
-              metaOf(el, roleOr(roleOverride, "img-alt"))
-            )
-          }
+          el.attr("alt").filter(_.nonEmpty).foreach(appendValue(_, el, roleOverride, "img-alt"))
           return
         }
 
@@ -282,18 +334,10 @@ object VisibleText {
           if (ty != "hidden") {
             val value = el.attr("value")
             if (InputValueTypes.contains(ty) && value.exists(_.nonEmpty)) {
-              append(
-                normalizeSegment(value.get, preserveWhitespace = false),
-                metaOf(el, roleOr(roleOverride, "input-value"))
-              )
+              appendValue(value.get, el, roleOverride, "input-value")
               return
             }
-            fallbackName.foreach { fn =>
-              append(
-                normalizeSegment(fn, preserveWhitespace = false),
-                metaOf(el, roleOr(roleOverride, "input-aria-label"))
-              )
-            }
+            fallbackName.foreach(appendValue(_, el, roleOverride, "input-aria-label"))
           }
           return
         }
@@ -303,28 +347,24 @@ object VisibleText {
         if (tagName == "button" && options.includeControlValues) {
           val value = el.attr("value")
           if (value.exists(_.nonEmpty)) {
-            append(
-              normalizeSegment(value.get, preserveWhitespace = false),
-              metaOf(el, roleOr(roleOverride, "button-value"))
-            )
+            appendValue(value.get, el, roleOverride, "button-value")
             return
           }
         }
 
         if (tagName == "tr") {
-          append("\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+          appendBreak("\n", el, roleOverride)
           var seenTableCell = false
           el.children.foreach {
             case child: ElementNode
                 if child.tagName.toLowerCase == "td" || child.tagName.toLowerCase == "th" =>
-              if (seenTableCell)
-                append("\t", metaOf(el, roleOr(roleOverride, "structure-break")))
+              if (seenTableCell) appendBreak("\t", el, roleOverride)
               collect(child, preserveWs, roleOverride)
               seenTableCell = true
             case child =>
               collect(child, preserveWs, roleOverride)
           }
-          append("\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+          appendBreak("\n", el, roleOverride)
           return
         }
 
@@ -335,229 +375,104 @@ object VisibleText {
 
         val childPreserveWs = preserveWs || tagName == "pre" || tagName == "textarea"
         val blockBreakBefore = tagName == "p" || BlockBreakTags.contains(tagName)
-        if (blockBreakBefore)
-          append("\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+        if (blockBreakBefore) appendBreak("\n", el, roleOverride)
         el.children.foreach(c => collect(c, childPreserveWs, roleOverride))
         if (tagName == "p") {
-          append("\n\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+          appendBreak("\n\n", el, roleOverride)
           return
         }
-        if (blockBreakBefore)
-          append("\n", metaOf(el, roleOr(roleOverride, "structure-break")))
+        if (blockBreakBefore) appendBreak("\n", el, roleOverride)
       case _ => // comments / doctypes contribute nothing
     }
   }
 
-  private def collectFrom(
-      children: Vector[HtmlNode],
+  private def normalizedOf(
+      nodes: Vector[HtmlNode],
       options: VisibleTextOptions,
-      withChunks: Boolean
-  ): Collector = {
-    val c = new Collector(options, withChunks)
-    children.foreach(n => c.collect(n, preserveWs = false, roleOverride = null))
-    c
-  }
-
-  // ------------------------------------------------------------------
-  def ofDocument(tree: DocumentTree, options: VisibleTextOptions = VisibleTextOptions()): String =
-    normalizeOutput(collectFrom(tree.children, options, withChunks = false).parts.toString, options.trim)
-
-  def ofFragment(tree: FragmentTree, options: VisibleTextOptions = VisibleTextOptions()): String =
-    normalizeOutput(collectFrom(tree.children, options, withChunks = false).parts.toString, options.trim)
-
-  def ofNode(node: HtmlNode, options: VisibleTextOptions = VisibleTextOptions()): String = {
-    val c = new Collector(options, withChunks = false)
-    c.collect(node, preserveWs = false, roleOverride = null)
-    normalizeOutput(c.parts.toString, options.trim)
+      withSources: Boolean
+  ): Normalized = {
+    val c = new Collector(options, withSources)
+    nodes.foreach(n => c.collect(n, preserveWs = false, roleOverride = null))
+    c.normalized(options.trim)
   }
 
   /** Tokenize normalized visible text into text/lineBreak/paragraphBreak/tab
-    * tokens (reference: mod.ts:1565-1610).
+    * tokens (reference: mod.ts:1565-1610, and with sources mod.ts:1638-1667).
+    * A text run ends at '\n' and '\t', and also where its source changes
+    * (value equality: equal metas of different segments merge); with no
+    * sources it never does. `token(kind, value, source)` builds each token
+    * from the source of its first char, null with no sources.
     */
-  def tokenize(value: String): Vector[VisibleTextToken] = {
-    val tokens = Vector.newBuilder[VisibleTextToken]
-    val active = new java.lang.StringBuilder
-    def flush(): Unit =
-      if (active.length > 0) {
-        tokens += VisibleTextToken("text", active.toString)
-        active.setLength(0)
-      }
-    var cursor = 0
-    while (cursor < value.length) {
-      val char = value.charAt(cursor)
-      if (char == '\n' && cursor + 1 < value.length && value.charAt(cursor + 1) == '\n') {
-        flush()
-        tokens += VisibleTextToken("paragraphBreak", "\n\n")
+  private def tokenize[T](text: Normalized, token: (String, String, SourceMeta) => T): Vector[T] = {
+    val tokens = Vector.newBuilder[T]
+    val cs = text.chars
+    val ms = text.sources
+    val end = text.end
+    var cursor = text.start
+    while (cursor < end) {
+      val c = cs(cursor)
+      val source = if (ms == null) null else ms(cursor)
+      if (c == '\n' && cursor + 1 < end && cs(cursor + 1) == '\n') {
+        tokens += token("paragraphBreak", "\n\n", source)
         cursor += 2
-      } else if (char == '\n') {
-        flush()
-        tokens += VisibleTextToken("lineBreak", "\n")
+      } else if (c == '\n') {
+        tokens += token("lineBreak", "\n", source)
         cursor += 1
-      } else if (char == '\t') {
-        flush()
-        tokens += VisibleTextToken("tab", "\t")
+      } else if (c == '\t') {
+        tokens += token("tab", "\t", source)
         cursor += 1
       } else {
-        active.append(char)
-        cursor += 1
+        val from = cursor
+        while (cursor < end && cs(cursor) != '\n' && cs(cursor) != '\t' &&
+               (ms == null || ms(cursor) == source)) cursor += 1
+        tokens += token("text", new String(cs, from, cursor - from), source)
       }
     }
-    flush()
     tokens.result()
   }
 
-  def tokensOfDocument(
-      tree: DocumentTree,
-      options: VisibleTextOptions = VisibleTextOptions()
-  ): Vector[VisibleTextToken] = tokenize(ofDocument(tree, options))
+  private val plainToken: (String, String, SourceMeta) => VisibleTextToken =
+    (kind, value, _) => VisibleTextToken(kind, value)
 
-  def tokensOfFragment(
-      tree: FragmentTree,
-      options: VisibleTextOptions = VisibleTextOptions()
-  ): Vector[VisibleTextToken] = tokenize(ofFragment(tree, options))
-
-  // ------------------------------------------------------------------
-  // provenance variant (reference: mod.ts:1638-1667): a parallel char-level
-  // normalization pipeline with a consistency check + degraded fallback.
-  /** Struct-of-arrays char stream: one char + one (shared) meta ref per
-    * position instead of a per-char SourceChar object — the normalize +
-    * tokenize pipeline touches every character of every document, so the
-    * object-per-char representation dominated extraction allocation.
-    * Valid window is [start, end).
-    */
-  private final class CharStream(
-      val chars: Array[Char], val metas: Array[SourceMeta],
-      val start: Int, val end: Int) {
-    def length: Int = end - start
-  }
-
-  private def chunksToChars(chunks: ArrayBuffer[SourceChunk]): CharStream = {
-    var total = 0
-    var ci = 0
-    while (ci < chunks.length) { total += chunks(ci).value.length; ci += 1 }
-    val cs = new Array[Char](total)
-    val ms = new Array[SourceMeta](total)
-    var w = 0
-    ci = 0
-    while (ci < chunks.length) {
-      val chunk = chunks(ci)
-      val v = chunk.value
-      val m = chunk.meta
-      v.getChars(0, v.length, cs, w)
-      var i = 0
-      while (i < v.length) { ms(w + i) = m; i += 1 }
-      w += v.length
-      ci += 1
-    }
-    new CharStream(cs, ms, 0, total)
-  }
-
-  private def isSpaceTabFf(c: Char): Boolean = c == ' ' || c == '\t' || c == '\f'
-
-  private def normalizeSourceChars(in: CharStream, trim: Boolean): CharStream = {
-    // pass 1: strip space/tab/ff before newlines (backtracking write
-    // pointer). Operates IN PLACE on the stream handed in — the only call
-    // site feeds the fresh per-document arrays from chunksToChars, and the
-    // write pointer never passes the read pointer, so a second char[]+ref[]
-    // pair per document (this pipeline touches every char of every turn)
-    // would be pure allocation churn.
-    val n = in.end
-    val c1 = in.chars
-    val m1 = in.metas
-    var w = 0
-    var i = in.start
-    while (i < n) {
-      val c = c1(i)
-      if (c == '\n') {
-        while (w > 0 && isSpaceTabFf(c1(w - 1))) w -= 1
-      }
-      c1(w) = c; m1(w) = m1(i); w += 1
-      i += 1
-    }
-    // pass 2 (fused, in place — the write index never passes the read
-    // index): strip space/tab/ff after newlines, then collapse \n runs to 2,
-    // space runs to 1, tab runs to 1. Counters observe the post-strip stream
-    // exactly as the previously-sequential passes did (a char dropped by a
-    // collapse still resets the other classes' runs, which is equivalent
-    // because at least one char of every collapsed run survives adjacent to
-    // it) — byte-identical output.
-    var w2 = 0
-    var stage2Prev: Char = 0
-    var nlRun = 0; var spRun = 0; var tabRun = 0
-    var r = 0
-    while (r < w) {
-      val c = c1(r)
-      if (stage2Prev == '\n' && isSpaceTabFf(c)) {
-        // dropped by strip-after-newline; stage2Prev stays '\n'
-      } else {
-        stage2Prev = c
-        var keep = true
-        if (c == '\n') {
-          nlRun += 1; spRun = 0; tabRun = 0; keep = nlRun <= 2
-        } else if (c == ' ') {
-          spRun += 1; nlRun = 0; tabRun = 0; keep = spRun <= 1
-        } else if (c == '\t') {
-          tabRun += 1; nlRun = 0; spRun = 0; keep = tabRun <= 1
-        } else {
-          nlRun = 0; spRun = 0; tabRun = 0
-        }
-        if (keep) { c1(w2) = c; m1(w2) = m1(r); w2 += 1 }
-      }
-      r += 1
-    }
-    var start = 0
-    var end = w2
-    if (trim) {
-      // reference mod.ts:1484-1489 trims with /\s/ (JS class, incl. NBSP)
-      while (start < end && isJsWhitespace(c1(start))) start += 1
-      while (end > start && isJsWhitespace(c1(end - 1))) end -= 1
-    }
-    new CharStream(c1, m1, start, end)
-  }
-
-  private def provTok(kind: String, value: String, m: SourceMeta): VisibleTextTokenWithProvenance =
-    VisibleTextTokenWithProvenance(
+  private val provenanceToken: (String, String, SourceMeta) => VisibleTextTokenWithProvenance =
+    (kind, value, m) => VisibleTextTokenWithProvenance(
       kind, value,
       if (m.nodeId >= 0) Some(m.nodeId) else None,
       m.nodeKind, m.role
     )
 
-  private def tokenizeWithChars(st: CharStream): Vector[VisibleTextTokenWithProvenance] = {
-    val tokens = Vector.newBuilder[VisibleTextTokenWithProvenance]
-    val cs = st.chars
-    val ms = st.metas
-    val end = st.end
-    var cursor = st.start
-    while (cursor < end) {
-      val c = cs(cursor)
-      if (c == '\n' && cursor + 1 < end && cs(cursor + 1) == '\n') {
-        tokens += provTok("paragraphBreak", "\n\n", ms(cursor))
-        cursor += 2
-      } else if (c == '\n') {
-        tokens += provTok("lineBreak", "\n", ms(cursor))
-        cursor += 1
-      } else if (c == '\t') {
-        tokens += provTok("tab", "\t", ms(cursor))
-        cursor += 1
-      } else {
-        // text run: same source meta (VALUE equality, matching the previous
-        // per-char comparison — equal metas from different chunks merge),
-        // broken by \n and \t
-        val source = ms(cursor)
-        val from = cursor
-        while (cursor < end && cs(cursor) != '\n' && cs(cursor) != '\t' &&
-               ms(cursor) == source) cursor += 1
-        tokens += provTok("text", new String(cs, from, cursor - from), source)
-      }
-    }
-    tokens.result()
-  }
+  // ------------------------------------------------------------------
+  def ofDocument(tree: DocumentTree, options: VisibleTextOptions = VisibleTextOptions()): String =
+    normalizedOf(tree.children, options, withSources = false).text
 
+  def ofFragment(tree: FragmentTree, options: VisibleTextOptions = VisibleTextOptions()): String =
+    normalizedOf(tree.children, options, withSources = false).text
+
+  def ofNode(node: HtmlNode, options: VisibleTextOptions = VisibleTextOptions()): String =
+    normalizedOf(Vector(node), options, withSources = false).text
+
+  def tokensOfDocument(
+      tree: DocumentTree,
+      options: VisibleTextOptions = VisibleTextOptions()
+  ): Vector[VisibleTextToken] =
+    tokenize(normalizedOf(tree.children, options, withSources = false), plainToken)
+
+  def tokensOfFragment(
+      tree: FragmentTree,
+      options: VisibleTextOptions = VisibleTextOptions()
+  ): Vector[VisibleTextToken] =
+    tokenize(normalizedOf(tree.children, options, withSources = false), plainToken)
+
+  // provenance variant (reference: mod.ts:1638-1667). The reference runs a
+  // second, char-level normalization beside the string one and degrades to
+  // tokens without sources when the two disagree; here the one normalizer
+  // produces both, and VisibleTextNormalizerSpec and FuzzSpec check what
+  // that run-time comparison checked.
   def tokensWithProvenance(
       children: Vector[HtmlNode],
       options: VisibleTextOptions = VisibleTextOptions()
   ): Vector[VisibleTextTokenWithProvenance] =
-    extractWithProvenance(children, options)._2
+    tokenize(normalizedOf(children, options, withSources = true), provenanceToken)
 
   /** One-pass combination of [[ofDocument]] + [[tokensWithProvenance]]:
     * returns (normalized visible text, provenance tokens) from a single
@@ -567,19 +482,7 @@ object VisibleText {
       children: Vector[HtmlNode],
       options: VisibleTextOptions = VisibleTextOptions()
   ): (String, Vector[VisibleTextTokenWithProvenance]) = {
-    val collector = collectFrom(children, options, withChunks = true)
-    val output = normalizeOutput(collector.parts.toString, options.trim)
-    val normalizedChars = normalizeSourceChars(chunksToChars(collector.chunks), options.trim)
-    val normalizedOutput =
-      new String(normalizedChars.chars, normalizedChars.start, normalizedChars.length)
-    val tokens =
-      if (normalizedOutput != output) {
-        // degraded fallback: tokenize the string output without provenance
-        tokenize(output).map { t =>
-          val role = if (t.kind == "text") "text-node" else "structure-break"
-          VisibleTextTokenWithProvenance(t.kind, t.value, None, "document", role)
-        }
-      } else tokenizeWithChars(normalizedChars)
-    (output, tokens)
+    val text = normalizedOf(children, options, withSources = true)
+    (text.text, tokenize(text, provenanceToken))
   }
 }

@@ -3,6 +3,8 @@ package graft.core
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.{Extraction, TranscriptTurn}
+
 /** Property/fuzz layer mirroring the reference's seeded structured fuzzer
   * (reference: scripts/fuzz/run-fuzz.mjs:11-41 — element/attr vocabularies;
   * properties: total behavior except budget errors, determinism,
@@ -133,6 +135,36 @@ class FuzzSpec extends AnyFunSuite {
     check(Prop.forAll(fragmentGen) { html =>
       VisibleText.ofDocument(HtmlParser.parse(html)) ==
         VisibleText.ofDocument(HtmlParser.parse(html))
+    })
+  }
+
+  test("text variants agree: provenance text and tokens equal ofDocument under every option set") {
+    // The reference compares a string and a char normalization at run time
+    // and drops every token's source when they differ (mod.ts:1650-1664);
+    // here one pipeline yields all variants, and this property pins it
+    // under each option set the pinned corpus renders.
+    val optionSets = Seq(
+      VisibleTextOptions(),
+      VisibleTextOptions(skipHiddenSubtrees = false),
+      VisibleTextOptions(includeControlValues = false),
+      VisibleTextOptions(includeAccessibleNameFallback = true),
+      VisibleTextOptions(trim = false))
+    check(Prop.forAll(fragmentGen) { html =>
+      val tree = HtmlParser.parse(html)
+      val variantsAgree = optionSets.forall { o =>
+        val text = VisibleText.ofDocument(tree, o)
+        val (provText, prov) = VisibleText.extractWithProvenance(tree.children, o)
+        provText == text &&
+          prov.map(_.value).mkString == text &&
+          VisibleText.tokensOfDocument(tree, o).map(_.value).mkString == text &&
+          prov.forall(_.sourceNodeId.isDefined)
+      }
+      // visible_text() equals the typed extracted_text
+      val row = Extraction.extractOne(
+        TranscriptTurn("c", 0, "user", html, "", new java.sql.Timestamp(0L)),
+        Extraction.DefaultBudgets, VisibleTextOptions())
+      variantsAgree && row.budget_error == "" &&
+        row.extracted_text == VisibleText.ofDocument(tree)
     })
   }
 
