@@ -74,6 +74,9 @@ final class DomElement(
   // Safe to cache because tagName/namespace are fixed after the SVG
   // case-adjust at creation time.
   var scopeFlagsV: Int = -1
+  // times this element is on TreeBuilder's open-element stack (a count: the
+  // head element can be pushed again after it was popped)
+  var openCount: Int = 0
 
   def attr(n: String): String = {
     if (attrsV == null) return null

@@ -497,12 +497,6 @@ final class Tokenizer(input: String, sink: TokenSink) {
     fastTagName = null
   }
 
-  /** Whole-name fast path, called with `pos` at the first name character:
-    * when the complete name is already lowercase and ends at a plain stop
-    * char (ws / '/' / '>'), intern it in one step and leave `pos` at the
-    * stop char for the regular TagName dispatch. CR, NUL, uppercase or EOF
-    * fall back to the per-char path untouched — byte-identical semantics.
-    */
   // one-entry repeat caches in front of the global interner: tag names
   // repeat consecutively (</li><li>, </td><td>) and attr names repeat
   // across sibling elements (class=, href=), so most lookups shortcut to a
@@ -511,28 +505,37 @@ final class Tokenizer(input: String, sink: TokenSink) {
   private var lastTagName: String = null
   private var lastAttrNameCache: String = null
 
-  private def fastScanTagName(): Unit = {
-    val tbl = Tokenizer.TagNameCharClass
+  /** The one whole-name scan, called with `pos` at the first name
+    * character: when the whole name ends at a stop char of `tbl`, returns
+    * it interned (`cached`, the caller's repeat cache, when it matches) and
+    * leaves `pos` at the stop char. A bail char of `tbl`, a surrogate or EOF
+    * returns null with `pos` untouched, for the per-char states.
+    */
+  private def scanName(tbl: Array[Byte], cached: String): String = {
     var p = pos
     while (p < len) {
       val ch = input.charAt(p)
       if (ch < 256) {
         val cls = tbl(ch)
         if (cls != 0) {
-          if (cls == 2) return
-          val cached = lastTagName
-          if (cached != null && cached.length == p - pos &&
-              input.regionMatches(pos, cached, 0, p - pos)) fastTagName = cached
-          else {
-            fastTagName = TagNameInterner.lookup(input, pos, p)
-            lastTagName = fastTagName
-          }
+          if (cls == 2) return null
+          val name =
+            if (cached != null && cached.length == p - pos &&
+                input.regionMatches(pos, cached, 0, p - pos)) cached
+            else TagNameInterner.lookup(input, pos, p)
           pos = p
-          return
+          return name
         }
-      } else if (ch >= 0xd800) return
+      } else if (ch >= 0xd800) return null
       p += 1
     }
+    null
+  }
+
+  /** Tag names stop at ws / '/' / '>'. */
+  private def fastScanTagName(): Unit = {
+    fastTagName = scanName(Tokenizer.TagNameCharClass, lastTagName)
+    if (fastTagName != null) lastTagName = fastTagName
   }
 
   /** Fused Data-state '<' handling: the overwhelmingly common shapes
@@ -571,36 +574,14 @@ final class Tokenizer(input: String, sink: TokenSink) {
     } else state = TagName
   }
 
-  /** Whole-name fast path for attribute names, called with `pos` at the
-    * first name character: succeeds only when the complete name is already
-    * lowercase and ends at a plain stop ('\t\n\f /' '>' '='); uppercase,
-    * NUL, CR, EOF and the error chars '"' '\'' '<' (which the per-char arm
-    * appends WITH a parse error) all fall back untouched.
-    */
   private var fastAttrName: String = null
 
+  /** Attribute names stop at ws / '/' / '>' / '='; the error chars '"' '\''
+    * '<' bail to the per-char arm.
+    */
   private def fastScanAttrName(): Unit = {
-    val tbl = Tokenizer.AttrNameCharClass
-    var p = pos
-    while (p < len) {
-      val ch = input.charAt(p)
-      if (ch < 256) {
-        val cls = tbl(ch)
-        if (cls != 0) {
-          if (cls == 2) return
-          val cached = lastAttrNameCache
-          if (cached != null && cached.length == p - pos &&
-              input.regionMatches(pos, cached, 0, p - pos)) fastAttrName = cached
-          else {
-            fastAttrName = TagNameInterner.lookup(input, pos, p)
-            lastAttrNameCache = fastAttrName
-          }
-          pos = p
-          return
-        }
-      } else if (ch >= 0xd800) return
-      p += 1
-    }
+    fastAttrName = scanName(Tokenizer.AttrNameCharClass, lastAttrNameCache)
+    if (fastAttrName != null) lastAttrNameCache = fastAttrName
   }
 
   private def finishAttrName(): Unit = {

@@ -83,6 +83,13 @@ object TreeBuilder {
     * known-tag vocabulary is a few hundred; 64k leaves ample headroom).
     */
   private[core] final val FlagsCacheMaxEntries = 65536
+
+  // name sets of the scope walk, the pop-through and the pop-back-to
+  private val TableSections = Set("tbody", "thead", "tfoot")
+  private val Cells = Set("td", "th")
+  private val TableContext = Set("table", "template", "html")
+  private val TableBodyContext = Set("tbody", "tfoot", "thead", "template", "html")
+  private val TableRowContext = Set("tr", "template", "html")
 }
 
 final class AfeEntry(
@@ -107,6 +114,7 @@ final class TreeBuilder(
     onModeTransition: TreeBuilder.ModeTransition => Unit = null
 ) extends TokenSink {
   import InsertionMode._
+  import TreeBuilder.{Cells, TableBodyContext, TableContext, TableRowContext, TableSections}
 
   val document = new DomDocument
   var tokenizer: Tokenizer = null
@@ -168,7 +176,12 @@ final class TreeBuilder(
     onError(code, start, end)
 
   // ------------------------------------------------------------------
-  // stack helpers
+  // open-element stack (open-element-stack.js). push, pop, removeAt,
+  // replaceAt and insertAt are its only writers (besides the EOF clear,
+  // after which nothing is asked), so they keep its facts: each element's
+  // open count, the number of open HTML p and template elements, sawSelect,
+  // and the end location a removal sets. The counts answer membership in
+  // O(1) where parse5 walks (except tmplCount, which it keeps too).
   private def current: DomElement = stack(stack.length - 1)
 
   /** Whether any <select> was ever pushed — lets the public layer skip the
@@ -176,17 +189,46 @@ final class TreeBuilder(
     * the overwhelmingly common select-free document.
     */
   var sawSelect = false
+  private var openP = 0
+  private var openTemplates = 0
 
-  private def push(el: DomElement): Unit = {
-    stack += el
-    if (el.namespace == Ns.Html && el.tagName == "select") sawSelect = true
+  private def tally(el: DomElement, delta: Int): Unit = {
+    el.openCount += delta
+    if (el.namespace == Ns.Html) {
+      val t = el.tagName
+      if (t == "p") openP += delta
+      else if (t == "template") openTemplates += delta
+      else if (t == "select") sawSelect = true
+    }
   }
 
-  private def pop(): DomElement = {
-    val el = stack.remove(stack.length - 1)
+  private def push(el: DomElement): Unit = { stack += el; tally(el, 1) }
+
+  private def insertAt(i: Int, el: DomElement): Unit = { stack.insert(i, el); tally(el, 1) }
+
+  /** parse5 `replace` fires no pop, so the old element keeps its end location. */
+  private def replaceAt(i: Int, el: DomElement): Unit = {
+    tally(stack(i), -1)
+    stack(i) = el
+    tally(el, 1)
+  }
+
+  /** Every removal is a parse5 `onItemPop`: it sets the end location. */
+  private def removeAt(i: Int): DomElement = {
+    val el = stack.remove(i)
+    tally(el, -1)
     setEndLocation(el)
     el
   }
+
+  private def pop(): DomElement = removeAt(stack.length - 1)
+
+  private def removeFromStack(el: DomElement): Unit =
+    if (onStack(el)) removeAt(stack.lastIndexWhere(_ eq el))
+
+  private def onStack(el: DomElement): Boolean = el.openCount > 0
+
+  private def hasTemplateOnStack: Boolean = openTemplates > 0
 
   /** parse5 `_setEndLocation` (parser/index.js:443-465): fires on every
     * stack pop/remove with the token being processed; always overwrites;
@@ -205,36 +247,26 @@ final class TreeBuilder(
     } else el.endOffset = tStart
   }
 
-  private def popUntilPopped(name: String): Unit = {
-    var done = false
-    while (!done && stack.nonEmpty) {
-      val el = pop()
-      if (el.namespace == Ns.Html && el.tagName == name) done = true
-    }
-  }
+  /** The one element test of the scope walk, the pop-through and the
+    * pop-back-to: `target` itself when given, else an HTML element named
+    * `name`, or named in `names` when that is given.
+    */
+  private def matches(el: DomElement, name: String, names: Set[String],
+                      target: DomElement): Boolean =
+    if (target != null) el eq target
+    else el.namespace == Ns.Html &&
+      (if (names != null) names.contains(el.tagName) else el.tagName == name)
 
-  private def popUntilOneOfPopped(names: Set[String]): Unit = {
-    var done = false
-    while (!done && stack.nonEmpty) {
-      val el = pop()
-      if (el.namespace == Ns.Html && names.contains(el.tagName)) done = true
-    }
-  }
+  /** Pops until it has popped a matching element (or emptied the stack). */
+  private def popThrough(name: String, names: Set[String] = null,
+                         target: DomElement = null): Unit =
+    while (stack.nonEmpty && !matches(pop(), name, names, target)) ()
 
-  private def popUntilElementPopped(target: DomElement): Unit = {
-    var done = false
-    while (!done && stack.nonEmpty) {
-      val el = pop()
-      if (el eq target) done = true
-    }
-  }
-
-  private def removeFromStack(el: DomElement): Unit = {
-    val idx = stack.indexWhere(_ eq el)
-    if (idx >= 0) { stack.remove(idx); setEndLocation(el) }
-  }
-
-  private def onStack(el: DomElement): Boolean = stack.exists(_ eq el)
+  /** Pops until the current node is an HTML element named in `names` (the
+    * spec's "clear the stack back to a table/table body/table row context").
+    */
+  private def popBackTo(names: Set[String]): Unit =
+    while (!matches(current, null, names, null)) pop()
 
   // scope queries ------------------------------------------------------
   // Per-element predicate bitmask, computed once per element on first use
@@ -307,64 +339,30 @@ final class TreeBuilder(
   @inline private def isSpecialEl(el: DomElement): Boolean =
     (elFlags(el) & FSpecial) != 0
 
-  private def defaultScopeStop(el: DomElement): Boolean =
-    (elFlags(el) & FDefaultScopeStop) != 0
+  // the scope walk's stop masks
+  private final val DefaultScope = FDefaultScopeStop
+  private final val ButtonScope = FDefaultScopeStop | FButton
+  private final val ListItemScope = FDefaultScopeStop | FListItemStop
+  private final val TableScope = FTableScopeStop
 
-  private def hasInScopeP(pred: DomElement => Boolean): Boolean = {
+  /** The one scope walk (open-element-stack.js hasIn*Scope): from the top,
+    * true at the first element that [[matches]], false at the first whose
+    * flags meet the `stop` mask.
+    */
+  private def inScope(stop: Int, name: String, names: Set[String] = null,
+                      target: DomElement = null): Boolean = {
     var i = stack.length - 1
     while (i >= 0) {
       val el = stack(i)
-      if (pred(el)) return true
-      if (defaultScopeStop(el)) return false
+      if (matches(el, name, names, target)) return true
+      if ((elFlags(el) & stop) != 0) return false
       i -= 1
     }
     false
   }
 
-  private def hasInScope(name: String): Boolean =
-    hasInScopeP(el => el.namespace == Ns.Html && el.tagName == name)
-
-  private def hasAnyInScope(names: Set[String]): Boolean =
-    hasInScopeP(el => el.namespace == Ns.Html && names.contains(el.tagName))
-
-  private def hasElementInScope(target: DomElement): Boolean =
-    hasInScopeP(_ eq target)
-
-  private def hasInListItemScope(name: String): Boolean = {
-    var i = stack.length - 1
-    while (i >= 0) {
-      val el = stack(i)
-      if (el.namespace == Ns.Html && el.tagName == name) return true
-      if ((elFlags(el) & (FDefaultScopeStop | FListItemStop)) != 0) return false
-      i -= 1
-    }
-    false
-  }
-
-  private def hasInButtonScope(name: String): Boolean = {
-    var i = stack.length - 1
-    while (i >= 0) {
-      val el = stack(i)
-      if (el.namespace == Ns.Html && el.tagName == name) return true
-      if ((elFlags(el) & (FDefaultScopeStop | FButton)) != 0) return false
-      i -= 1
-    }
-    false
-  }
-
-  private def hasInTableScope(name: String): Boolean = {
-    var i = stack.length - 1
-    while (i >= 0) {
-      val el = stack(i)
-      if (el.namespace == Ns.Html && el.tagName == name) return true
-      if ((elFlags(el) & FTableScopeStop) != 0) return false
-      i -= 1
-    }
-    false
-  }
-
-  private def hasAnyInTableScope(names: Set[String]): Boolean =
-    names.exists(hasInTableScope)
+  /** An HTML p in button scope; false at once when no HTML p is open. */
+  private def pInButtonScope: Boolean = openP > 0 && inScope(ButtonScope, "p")
 
   private def hasInSelectScope(name: String): Boolean = {
     var i = stack.length - 1
@@ -379,9 +377,6 @@ final class TreeBuilder(
     false
   }
 
-  private def hasTemplateOnStack: Boolean =
-    stack.exists(el => el.namespace == Ns.Html && el.tagName == "template")
-
   private def generateImpliedEndTags(except: String): Unit = {
     while (stack.nonEmpty && (elFlags(current) & FImpliedEnd) != 0 &&
       current.tagName != except) pop()
@@ -389,31 +384,6 @@ final class TreeBuilder(
 
   private def generateImpliedEndTagsThoroughly(): Unit = {
     while (stack.nonEmpty && (elFlags(current) & FImpliedEndThorough) != 0) pop()
-  }
-
-  private def clearStackBackToTableContext(): Unit = {
-    while ({
-      val t = current
-      !(t.namespace == Ns.Html &&
-        (t.tagName == "table" || t.tagName == "template" || t.tagName == "html"))
-    }) pop()
-  }
-
-  private def clearStackBackToTableBodyContext(): Unit = {
-    while ({
-      val t = current
-      !(t.namespace == Ns.Html &&
-        (t.tagName == "tbody" || t.tagName == "tfoot" || t.tagName == "thead" ||
-          t.tagName == "template" || t.tagName == "html"))
-    }) pop()
-  }
-
-  private def clearStackBackToTableRowContext(): Unit = {
-    while ({
-      val t = current
-      !(t.namespace == Ns.Html &&
-        (t.tagName == "tr" || t.tagName == "template" || t.tagName == "html"))
-    }) pop()
   }
 
   // ------------------------------------------------------------------
@@ -678,8 +648,8 @@ final class TreeBuilder(
       // .tagID), parser/index.js:1252), not element-identity-based: if any
       // same-tag HTML element is in scope the algorithm proceeds with the
       // AFE entry even when that specific element is out of scope.
-      if (!hasInScope(subject)) return
-      val fmtIdx = stack.indexWhere(_ eq fmtEl)
+      if (!inScope(DefaultScope, subject)) return
+      val fmtIdx = stack.lastIndexWhere(_ eq fmtEl)
       // furthest block: first special element below the formatting element
       var fbIdx = -1
       var i = fmtIdx + 1
@@ -688,7 +658,7 @@ final class TreeBuilder(
         i += 1
       }
       if (fbIdx < 0) {
-        popUntilElementPopped(fmtEl)
+        popThrough(null, target = fmtEl)
         afeRemove(fmtEl)
         return
       }
@@ -715,8 +685,7 @@ final class TreeBuilder(
           if (nodeAfeIdx < 0) {
             // parse5 openElements.remove fires onItemPop → end location
             // from the current (end-tag) token (open-element-stack.js:171)
-            setEndLocation(stack(nodeIdx))
-            stack.remove(nodeIdx)
+            removeAt(nodeIdx)
             // fbIdx shifts down, but we no longer need it
           } else {
             // clone node
@@ -724,7 +693,7 @@ final class TreeBuilder(
             val clone = new DomElement(e.name, e.ns)
             e.attrsSnapshot.foreach { case (n, v) => clone.addAttr(new DomAttr(n, v)) }
             e.element = clone
-            stack(nodeIdx) = clone
+            replaceAt(nodeIdx, clone)
             node = clone
             if (lastNode eq furthestBlock) bookmark = nodeAfeIdx + 1
             // detach lastNode and append to node
@@ -778,8 +747,7 @@ final class TreeBuilder(
       afe.insert(bookmark, newEntry)
       // stack: remove formatting element, insert clone below furthest block
       removeFromStack(fmtEl)
-      val fbNewIdx = stack.indexWhere(_ eq furthestBlock)
-      stack.insert(fbNewIdx + 1, clone)
+      insertAt(stack.lastIndexWhere(_ eq furthestBlock) + 1, clone)
     }
   }
 
@@ -794,7 +762,7 @@ final class TreeBuilder(
       // closes an open SVG title element
       if (node.tagName == name) {
         generateImpliedEndTags(name)
-        popUntilElementPopped(node)
+        popThrough(null, target = node)
         done = true
       } else if (isSpecialEl(node)) {
         ()
@@ -1248,7 +1216,7 @@ final class TreeBuilder(
   private def eofInTemplate(pos: Int): Unit = {
     if (!hasTemplateOnStack) { stopped = true; return }
     ()
-    popUntilPopped("template")
+    popThrough("template")
     afeClearToLastMarker()
     if (templateModes.nonEmpty) templateModes.remove(templateModes.length - 1)
     resetInsertionMode()
@@ -1479,7 +1447,7 @@ final class TreeBuilder(
         tag.name match {
           case "caption" | "col" | "colgroup" | "tbody" | "td" | "tfoot" | "th" |
               "thead" | "tr" =>
-            if (hasInTableScope("caption")) {
+            if (inScope(TableScope, "caption")) {
               closeCaption()
               processStartTag(tag)
             } else ()
@@ -1501,18 +1469,18 @@ final class TreeBuilder(
       case InTableBody =>
         tag.name match {
           case "tr" =>
-            clearStackBackToTableBodyContext()
+            popBackTo(TableBodyContext)
             insertElement(tag, Ns.Html)
             mode = InRow
           case "th" | "td" =>
             ()
-            clearStackBackToTableBodyContext()
+            popBackTo(TableBodyContext)
             insertFakeElement("tr")
             mode = InRow
             processStartTag(tag)
           case "caption" | "col" | "colgroup" | "tbody" | "tfoot" | "thead" =>
-            if (hasAnyInTableScope(Set("tbody", "thead", "tfoot"))) {
-              clearStackBackToTableBodyContext()
+            if (inScope(TableScope, null, TableSections)) {
+              popBackTo(TableBodyContext)
               pop()
               mode = InTable
               processStartTag(tag)
@@ -1522,13 +1490,13 @@ final class TreeBuilder(
       case InRow =>
         tag.name match {
           case "th" | "td" =>
-            clearStackBackToTableRowContext()
+            popBackTo(TableRowContext)
             insertElement(tag, Ns.Html)
             mode = InCell
             afeInsertMarker()
           case "caption" | "col" | "colgroup" | "tbody" | "tfoot" | "thead" | "tr" =>
-            if (hasInTableScope("tr")) {
-              clearStackBackToTableRowContext()
+            if (inScope(TableScope, "tr")) {
+              popBackTo(TableRowContext)
               pop()
               mode = InTableBody
               processStartTag(tag)
@@ -1539,7 +1507,7 @@ final class TreeBuilder(
         tag.name match {
           case "caption" | "col" | "colgroup" | "tbody" | "td" | "tfoot" | "th" |
               "thead" | "tr" =>
-            if (hasAnyInTableScope(Set("td", "th"))) {
+            if (inScope(TableScope, null, Cells)) {
               closeCell()
               processStartTag(tag)
             } else ()
@@ -1551,7 +1519,7 @@ final class TreeBuilder(
           case "caption" | "table" | "tbody" | "tfoot" | "thead" | "tr" | "td" |
               "th" =>
             ()
-            popUntilPopped("select")
+            popThrough("select")
             resetInsertionMode()
             processStartTag(tag)
           case _ => startTagInSelect(tag)
@@ -1660,32 +1628,32 @@ final class TreeBuilder(
   private def startTagInTable(tag: TagToken): Unit = {
     tag.name match {
       case "caption" =>
-        clearStackBackToTableContext()
+        popBackTo(TableContext)
         afeInsertMarker()
         insertElement(tag, Ns.Html)
         mode = InCaption
       case "colgroup" =>
-        clearStackBackToTableContext()
+        popBackTo(TableContext)
         insertElement(tag, Ns.Html)
         mode = InColumnGroup
       case "col" =>
-        clearStackBackToTableContext()
+        popBackTo(TableContext)
         insertFakeElement("colgroup")
         mode = InColumnGroup
         processStartTag(tag)
       case "tbody" | "tfoot" | "thead" =>
-        clearStackBackToTableContext()
+        popBackTo(TableContext)
         insertElement(tag, Ns.Html)
         mode = InTableBody
       case "td" | "th" | "tr" =>
-        clearStackBackToTableContext()
+        popBackTo(TableContext)
         insertFakeElement("tbody")
         mode = InTableBody
         processStartTag(tag)
       case "table" =>
         ()
-        if (hasInTableScope("table")) {
-          popUntilPopped("table")
+        if (inScope(TableScope, "table")) {
+          popThrough("table")
           resetInsertionMode()
           processStartTag(tag)
         }
@@ -1732,7 +1700,7 @@ final class TreeBuilder(
       case "input" | "keygen" | "textarea" | "select" =>
         ()
         if (hasInSelectScope("select")) {
-          popUntilPopped("select")
+          popThrough("select")
           resetInsertionMode()
           if (tag.name != "select") processStartTag(tag)
         }
@@ -1745,17 +1713,17 @@ final class TreeBuilder(
     generateImpliedEndTags("p")
     if (!(current.namespace == Ns.Html && current.tagName == "p"))
       ()
-    popUntilPopped("p")
+    popThrough("p")
   }
 
   private def closePIfInButtonScope(): Unit =
-    if (hasInButtonScope("p")) closePElement()
+    if (pInButtonScope) closePElement()
 
   private def closeCaption(): Unit = {
     generateImpliedEndTags(null)
     if (!(current.namespace == Ns.Html && current.tagName == "caption"))
       ()
-    popUntilPopped("caption")
+    popThrough("caption")
     afeClearToLastMarker()
     mode = InTable
   }
@@ -1765,7 +1733,7 @@ final class TreeBuilder(
     if (!(current.namespace == Ns.Html &&
       (current.tagName == "td" || current.tagName == "th")))
       ()
-    popUntilOneOfPopped(Set("td", "th"))
+    popThrough(null, Cells)
     afeClearToLastMarker()
     mode = InRow
   }
@@ -1841,7 +1809,7 @@ final class TreeBuilder(
             generateImpliedEndTags("li")
             if (!(current.namespace == Ns.Html && current.tagName == "li"))
               ()
-            popUntilPopped("li")
+            popThrough("li")
             done = true
           } else if (isSpecialEl(node) &&
             !(node.namespace == Ns.Html &&
@@ -1863,7 +1831,7 @@ final class TreeBuilder(
             generateImpliedEndTags(node.tagName)
             if (!(current.namespace == Ns.Html && current.tagName == node.tagName))
               ()
-            popUntilPopped(node.tagName)
+            popThrough(node.tagName)
             done = true
           } else if (isSpecialEl(node) &&
             !(node.namespace == Ns.Html &&
@@ -1880,10 +1848,10 @@ final class TreeBuilder(
         tokenizer.state = TokenizerState.Plaintext
 
       case "button" =>
-        if (hasInScope("button")) {
+        if (inScope(DefaultScope, "button")) {
           ()
           generateImpliedEndTags(null)
-          popUntilPopped("button")
+          popThrough("button")
         }
         reconstructActiveFormattingElements()
         insertElement(tag, Ns.Html)
@@ -1911,7 +1879,7 @@ final class TreeBuilder(
 
       case "nobr" =>
         reconstructActiveFormattingElements()
-        if (hasInScope("nobr")) {
+        if (inScope(DefaultScope, "nobr")) {
           ()
           adoptionAgency("nobr")
           reconstructActiveFormattingElements()
@@ -1926,7 +1894,7 @@ final class TreeBuilder(
         framesetOk = false
 
       case "table" =>
-        if (document.quirksMode != "quirks" && hasInButtonScope("p")) closePElement()
+        if (document.quirksMode != "quirks" && pInButtonScope) closePElement()
         insertElement(tag, Ns.Html)
         framesetOk = false
         mode = InTable
@@ -1998,7 +1966,7 @@ final class TreeBuilder(
         insertElement(tag, Ns.Html)
 
       case "rb" | "rtc" =>
-        if (hasInScope("ruby")) {
+        if (inScope(DefaultScope, "ruby")) {
           generateImpliedEndTags(null)
           if (!(current.namespace == Ns.Html && current.tagName == "ruby"))
             ()
@@ -2006,7 +1974,7 @@ final class TreeBuilder(
         insertElement(tag, Ns.Html)
 
       case "rp" | "rt" =>
-        if (hasInScope("ruby")) {
+        if (inScope(DefaultScope, "ruby")) {
           generateImpliedEndTags("rtc")
           if (!(current.namespace == Ns.Html &&
             (current.tagName == "ruby" || current.tagName == "rtc")))
@@ -2118,10 +2086,10 @@ final class TreeBuilder(
       case InCaption =>
         tag.name match {
           case "caption" =>
-            if (hasInTableScope("caption")) closeCaption()
+            if (inScope(TableScope, "caption")) closeCaption()
             else ()
           case "table" =>
-            if (hasInTableScope("caption")) {
+            if (inScope(TableScope, "caption")) {
               closeCaption()
               processEndTag(tag)
             } else ()
@@ -2150,14 +2118,14 @@ final class TreeBuilder(
       case InTableBody =>
         tag.name match {
           case "tbody" | "tfoot" | "thead" =>
-            if (hasInTableScope(tag.name)) {
-              clearStackBackToTableBodyContext()
+            if (inScope(TableScope, tag.name)) {
+              popBackTo(TableBodyContext)
               pop()
               mode = InTable
             } else ()
           case "table" =>
-            if (hasAnyInTableScope(Set("tbody", "thead", "tfoot"))) {
-              clearStackBackToTableBodyContext()
+            if (inScope(TableScope, null, TableSections)) {
+              popBackTo(TableBodyContext)
               pop()
               mode = InTable
               processEndTag(tag)
@@ -2170,14 +2138,14 @@ final class TreeBuilder(
       case InRow =>
         tag.name match {
           case "tr" =>
-            if (hasInTableScope("tr")) {
-              clearStackBackToTableRowContext()
+            if (inScope(TableScope, "tr")) {
+              popBackTo(TableRowContext)
               pop()
               mode = InTableBody
             } else ()
           case "table" =>
-            if (hasInTableScope("tr")) {
-              clearStackBackToTableRowContext()
+            if (inScope(TableScope, "tr")) {
+              popBackTo(TableRowContext)
               pop()
               mode = InTableBody
               processEndTag(tag)
@@ -2190,8 +2158,8 @@ final class TreeBuilder(
             // reprocesses in IN_TABLE_BODY. The spec would ignore it; we
             // mirror parse5 (found by the trace-transition differential,
             // seed 0x2B2B2B2B).
-            if (hasInTableScope(tag.name) || hasInTableScope("tr")) {
-              clearStackBackToTableRowContext()
+            if (inScope(TableScope, tag.name) || inScope(TableScope, "tr")) {
+              popBackTo(TableRowContext)
               pop()
               mode = InTableBody
               processEndTag(tag)
@@ -2203,18 +2171,18 @@ final class TreeBuilder(
       case InCell =>
         tag.name match {
           case "td" | "th" =>
-            if (hasInTableScope(tag.name)) {
+            if (inScope(TableScope, tag.name)) {
               generateImpliedEndTags(null)
               if (!(current.namespace == Ns.Html && current.tagName == tag.name))
                 ()
-              popUntilPopped(tag.name)
+              popThrough(tag.name)
               afeClearToLastMarker()
               mode = InRow
             } else ()
           case "body" | "caption" | "col" | "colgroup" | "html" =>
             ()
           case "table" | "tbody" | "tfoot" | "thead" | "tr" =>
-            if (hasInTableScope(tag.name)) {
+            if (inScope(TableScope, tag.name)) {
               closeCell()
               processEndTag(tag)
             } else ()
@@ -2226,8 +2194,8 @@ final class TreeBuilder(
           case "caption" | "table" | "tbody" | "tfoot" | "thead" | "tr" | "td" |
               "th" =>
             ()
-            if (hasInTableScope(tag.name)) {
-              popUntilPopped("select")
+            if (inScope(TableScope, tag.name)) {
+              popThrough("select")
               resetInsertionMode()
               processEndTag(tag)
             }
@@ -2292,7 +2260,7 @@ final class TreeBuilder(
     generateImpliedEndTagsThoroughly()
     if (!(current.namespace == Ns.Html && current.tagName == "template"))
       err("closing-of-element-with-open-child-elements", tag.start, tag.end)
-    popUntilPopped("template")
+    popThrough("template")
     afeClearToLastMarker()
     if (templateModes.nonEmpty) templateModes.remove(templateModes.length - 1)
     resetInsertionMode()
@@ -2301,8 +2269,8 @@ final class TreeBuilder(
   private def endTagInTable(tag: TagToken): Unit = {
     tag.name match {
       case "table" =>
-        if (hasInTableScope("table")) {
-          popUntilPopped("table")
+        if (inScope(TableScope, "table")) {
+          popThrough("table")
           resetInsertionMode()
         } else ()
       case "body" | "caption" | "col" | "colgroup" | "html" | "tbody" | "td" |
@@ -2330,7 +2298,7 @@ final class TreeBuilder(
         else ()
       case "select" =>
         if (hasInSelectScope("select")) {
-          popUntilPopped("select")
+          popThrough("select")
           resetInsertionMode()
         } else ()
       case "template" => endTagTemplate(tag)
@@ -2342,7 +2310,7 @@ final class TreeBuilder(
     tag.name match {
       case "template" => endTagTemplate(tag)
       case "body" =>
-        if (!hasInScope("body")) ()
+        if (!inScope(DefaultScope, "body")) ()
         else {
           mode = AfterBody
           // parse5 bodyEndTagInBody: <body> is never popped, so its end
@@ -2353,7 +2321,7 @@ final class TreeBuilder(
           }
         }
       case "html" =>
-        if (!hasInScope("body")) ()
+        if (!inScope(DefaultScope, "body")) ()
         else {
           mode = AfterBody
           processEndTag(tag)
@@ -2362,18 +2330,18 @@ final class TreeBuilder(
           "center" | "details" | "dialog" | "dir" | "div" | "dl" | "fieldset" |
           "figcaption" | "figure" | "footer" | "header" | "hgroup" | "listing" |
           "main" | "menu" | "nav" | "ol" | "pre" | "section" | "summary" | "ul" =>
-        if (!hasInScope(tag.name)) ()
+        if (!inScope(DefaultScope, tag.name)) ()
         else {
           generateImpliedEndTags(null)
           if (!(current.namespace == Ns.Html && current.tagName == tag.name))
             ()
-          popUntilPopped(tag.name)
+          popThrough(tag.name)
         }
       case "form" =>
         if (!hasTemplateOnStack) {
           val node = formElement
           formElement = null
-          if (node == null || !hasElementInScope(node)) {
+          if (node == null || !inScope(DefaultScope, null, target = node)) {
             ()
             return
           }
@@ -2381,56 +2349,56 @@ final class TreeBuilder(
           if (!(current eq node)) ()
           removeFromStack(node)
         } else {
-          if (!hasInScope("form")) {
+          if (!inScope(DefaultScope, "form")) {
             ()
             return
           }
           generateImpliedEndTags(null)
           if (!(current.namespace == Ns.Html && current.tagName == "form"))
             ()
-          popUntilPopped("form")
+          popThrough("form")
         }
       case "p" =>
-        if (!hasInButtonScope("p")) {
+        if (!pInButtonScope) {
           ()
           insertFakeElement("p")
         }
         closePElement()
       case "li" =>
-        if (!hasInListItemScope("li")) ()
+        if (!inScope(ListItemScope, "li")) ()
         else {
           generateImpliedEndTags("li")
           if (!(current.namespace == Ns.Html && current.tagName == "li"))
             ()
-          popUntilPopped("li")
+          popThrough("li")
         }
       case "dd" | "dt" =>
-        if (!hasInScope(tag.name)) ()
+        if (!inScope(DefaultScope, tag.name)) ()
         else {
           generateImpliedEndTags(tag.name)
           if (!(current.namespace == Ns.Html && current.tagName == tag.name))
             ()
-          popUntilPopped(tag.name)
+          popThrough(tag.name)
         }
       case "h1" | "h2" | "h3" | "h4" | "h5" | "h6" =>
-        if (!hasAnyInScope(HtmlMeta.Headings))
+        if (!inScope(DefaultScope, null, HtmlMeta.Headings))
           ()
         else {
           generateImpliedEndTags(null)
           if (!(current.namespace == Ns.Html && current.tagName == tag.name))
             ()
-          popUntilOneOfPopped(HtmlMeta.Headings)
+          popThrough(null, HtmlMeta.Headings)
         }
       case "a" | "b" | "big" | "code" | "em" | "font" | "i" | "nobr" | "s" |
           "small" | "strike" | "strong" | "tt" | "u" =>
         adoptionAgency(tag.name)
       case "applet" | "marquee" | "object" =>
-        if (!hasInScope(tag.name)) ()
+        if (!inScope(DefaultScope, tag.name)) ()
         else {
           generateImpliedEndTags(null)
           if (!(current.namespace == Ns.Html && current.tagName == tag.name))
             ()
-          popUntilPopped(tag.name)
+          popThrough(tag.name)
           afeClearToLastMarker()
         }
       case "br" =>
@@ -2514,7 +2482,7 @@ final class TreeBuilder(
         done = true
       } else if (node.tagName.toLowerCase == tag.name) {
         locTokEndTagName = node.tagName
-        popUntilElementPopped(node)
+        popThrough(null, target = node)
         done = true
       } else i -= 1
     }

@@ -24,9 +24,10 @@ import scala.jdk.CollectionConverters._
   *    progress marker per completed pass — `--resume` skips completed
   *    passes, giving checkpointed restart at pass granularity;
   *  - storage goes through the [[TableIO]] seam: `--format parquet` writes
-  *    directory-per-pass Parquet, `--format iceberg` commits each pass as
-  *    an Iceberg snapshot via `writeTo(...).overwritePartitions()` (same
-  *    control flow, snapshot-native resume);
+  *    directory-per-pass Parquet, `--format iceberg` commits each pass
+  *    atomically as one Iceberg snapshot via
+  *    `writeTo(...).overwritePartitions()`; resume reads the progress
+  *    markers for both formats;
   *  - extraction itself is shuffle-free; the optional salted
   *    `repartition` balances bucket passes, and skew from very long
   *    conversations is neutralized because routing hashes conv_id but
@@ -170,7 +171,7 @@ object ExtractJob {
 
         val mOut = fs.create(marker, true)
         try mOut.write(s"pass=$pass\n".getBytes("UTF-8")) finally mOut.close()
-        println(s"""{"event":"pass-done","pass":$pass,"buckets":[$lo,$hi)}""".replace(")}", "]}"))
+        println(s"""{"event":"pass-done","pass":$pass,"buckets":[$lo,$hi]}""")
       }
     }
     val all = ran.result()

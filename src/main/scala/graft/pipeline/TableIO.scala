@@ -67,12 +67,12 @@ object ParquetTableIO extends TableIO {
 /** Iceberg implementation: `root` is a catalog-qualified table prefix (e.g.
   * `cat.db.extract`), passes live in `<root>_data` / `<root>_lineage`
   * partitioned by `_pass` (+ `_bucket` for data), and
-  * `writeTo(...).overwritePartitions()` makes each pass commit one Iceberg
-  * snapshot — replacing ExtractJob's marker files with snapshot-native
-  * resumability. Uses only Spark's own DataFrameWriterV2/catalog API, so
-  * this COMPILES without Iceberg on the classpath; at runtime it needs the
-  * iceberg-spark-runtime jar and a configured catalog, and the tables
-  * created as
+  * `writeTo(...).overwritePartitions()` makes each pass commit atomically
+  * as one Iceberg snapshot; resume still reads ExtractJob's progress
+  * markers, as for Parquet. Uses only Spark's own DataFrameWriterV2/catalog
+  * API, so this COMPILES without Iceberg on the classpath; at runtime it
+  * needs the iceberg-spark-runtime jar and a configured catalog, and the
+  * tables created as
   * `CREATE TABLE <root>_data (...) USING iceberg PARTITIONED BY (_pass, _bucket)`.
   */
 object IcebergTableIO extends TableIO {

@@ -20,7 +20,9 @@ object AllocProbe {
 
     def measure(name: String)(f: Int => Unit): Unit = {
       var i = 0
-      while (i < n) { f(i); i += 1 } // warm: JIT + allocation paths settle
+      // warm: JIT + allocation paths settle (one pass over the inputs left
+      // the first line's reading varying between identical runs)
+      while (i < 3 * n) { f(i % n); i += 1 }
       val a0 = tmx.getThreadAllocatedBytes(tid)
       i = 0
       while (i < n) { f(i); i += 1 }

@@ -78,6 +78,55 @@ class TreeConformanceSpec extends AnyFunSuite {
       "| <html>\n|   <head>\n|   <body>\n|     <svg svg>\n|       \"a\uFFFDx\uFFFDb\"")
   }
 
+  test("deep nesting builds in linear time") {
+    // every open-element query these shapes make on each tag (p in button
+    // scope, template on the stack, formatting element on the stack) is
+    // answered without a walk of the stack, so each build stays far under
+    // the bound that a walk per tag (quadratic in depth) takes seconds to hit.
+    // The builder is run directly: the DOM→tree conversion recurses.
+    def body(html: String): (DomElement, Long) = {
+      val t0 = System.nanoTime
+      val doc = new TreeBuilder(html, scriptingEnabled = true, captureSpans = false,
+        onError = (_, _, _) => ()).parseDocument()
+      val ms = (System.nanoTime - t0) / 1000000
+      (doc.children(0).asInstanceOf[DomElement].children(1).asInstanceOf[DomElement], ms)
+    }
+    // the innermost element of the chain of `name` elements under `el`, and its depth
+    def chain(el: DomElement, name: String): (DomElement, Int) = {
+      var cur = el
+      var depth = 0
+      var next = cur.children.lastOption.orNull
+      while (next != null && next.isInstanceOf[DomElement] &&
+        next.asInstanceOf[DomElement].tagName == name) {
+        cur = next.asInstanceOf[DomElement]; depth += 1
+        next = cur.children.lastOption.orNull
+      }
+      (cur, depth)
+    }
+    def within2s(shape: String, ms: Long): Unit = {
+      info(s"$shape: $ms ms")
+      assert(ms < 2000, s"$shape built in $ms ms")
+    }
+
+    for ((name, n) <- Seq("div" -> 40000, "section" -> 40000, "b" -> 100000)) {
+      val (b, ms) = body(s"<$name>" * n)
+      assert(chain(b, name)._2 == n, name)
+      within2s(s"<$name> x $n", ms)
+    }
+    val divs = "<div>" * 20000
+    val (formBody, formMs) = body(divs + "<form>" * 40000)
+    val (formHost, formDepth) = chain(formBody, "div")
+    assert(formDepth == 20000)
+    assert(formHost.children.length == 1 && chain(formHost, "form")._2 == 1)
+    within2s("<form> x 40000 under 20000 <div>", formMs)
+    val (pBody, pMs) = body(divs + "</p>" * 40000)
+    val (pHost, pDepth) = chain(pBody, "div")
+    assert(pDepth == 20000)
+    assert(pHost.children.length == 40000 &&
+      pHost.children.forall { case e: DomElement => e.tagName == "p"; case _ => false })
+    within2s("</p> x 40000 under 20000 <div>", pMs)
+  }
+
   for (c <- cases) {
     test(s"tree ${c.file} #${c.idx}: ${c.data.take(48).replace("\n", "\\n")}") {
       val actual = c.fragment match {
