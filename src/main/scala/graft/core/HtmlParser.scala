@@ -113,8 +113,8 @@ object HtmlParser {
       root: (Vector[HtmlNode], Vector[ParseError], Option[Vector[TraceEvent]]) => T): T = {
     val startedAt = System.currentTimeMillis()
     val budgets = options.budgets
-    BudgetExceededException.check("maxInputBytes",
-      budgets.flatMap(_.maxInputBytes).map(_.toLong), html.length.toLong)
+    BudgetExceededException.checkInt("maxInputBytes",
+      budgets.flatMap(_.maxInputBytes), html.length.toLong)
     val trace = if (options.trace) new TraceState(html, budgets) else null
     if (trace != null) trace.pushPreBuild()
 
@@ -124,15 +124,13 @@ object HtmlParser {
       if (trace != null) trace.onTransition else null)(run)
 
     val state = new ConvertState(options.captureSpans, budgets.orNull, errors)
-    val children = convertChildren(parent.children, 0, state)
+    val children = convertChildren(parent, state)
     // the reference's metrics (mod.ts:441-473) count the root node too and
     // put top-level nodes at depth 2, with 1 for an empty tree
     val totalNodes = state.nodeCount + 1
     val maxDepth = state.maxDepth + 2
-    BudgetExceededException.check("maxNodes",
-      budgets.flatMap(_.maxNodes).map(_.toLong), totalNodes.toLong)
-    BudgetExceededException.check("maxDepth",
-      budgets.flatMap(_.maxDepth).map(_.toLong), maxDepth.toLong)
+    BudgetExceededException.checkInt("maxNodes", budgets.flatMap(_.maxNodes), totalNodes.toLong)
+    BudgetExceededException.checkInt("maxDepth", budgets.flatMap(_.maxDepth), maxDepth.toLong)
     BudgetExceededException.check("maxTimeMs", budgets.flatMap(_.maxTimeMs),
       System.currentTimeMillis() - startedAt)
 
@@ -146,8 +144,8 @@ object HtmlParser {
     * Under trace, a decode(sniff) event is appended after the parse events.
     */
   def parseBytes(bytes: Array[Byte], options: ParseOptions = ParseOptions()): DocumentTree = {
-    BudgetExceededException.check("maxInputBytes",
-      options.budgets.flatMap(_.maxInputBytes).map(_.toLong), bytes.length.toLong)
+    BudgetExceededException.checkInt("maxInputBytes",
+      options.budgets.flatMap(_.maxInputBytes), bytes.length.toLong)
     val (text, sniff) = EncodingSniff.decodeHtmlBytes(bytes, options.transportEncodingLabel)
     parseDecoded(text, sniff, options)(_ => ())
   }
@@ -183,18 +181,63 @@ object HtmlParser {
 
   // ------------------------------------------------------------------
   // conversion: internal DOM -> public immutable tree
-  private def convertChildren(nodes: ArrayBuffer[DomNode], depth: Int,
-                              state: ConvertState): Vector[HtmlNode] = {
-    val out = slots(nodes.length)
-    var n = 0
-    // an index loop: the closure-based foreach showed up in parse profiles
-    var i = 0
-    while (i < nodes.length) {
-      val converted = convertNode(nodes(i), depth, state)
-      if (converted != null) { out(n) = converted; n += 1 }
-      i += 1
+
+  /** The public tree of `root`'s children: one post-order walk with an
+    * explicit frame stack, so the conversion's stack use does not grow with
+    * the document's depth. The frame at `top` converts the children of
+    * `parent` (`root` at 0, an element above) into `outs(top)`, child `i`
+    * into slot `i`; `nexts(top)` is the index of its next child, and the
+    * DOM's parent links lead back up. A node is counted
+    * ([[ConvertState.enter]], with its budget errors) when the walk reaches
+    * it, in pre-order, and an element takes its id when its frame is done,
+    * after all of its descendants.
+    */
+  private def convertChildren(root: DomParent, state: ConvertState): Vector[HtmlNode] = {
+    var outs = new Array[Array[AnyRef]](8)
+    var nexts = new Array[Int](8)
+    var top = 0
+    var parent = root
+    outs(0) = slots(root.children.length)
+    var result: Vector[HtmlNode] = null
+    while (result == null) {
+      val kids = parent.children
+      val next = nexts(top)
+      if (next < kids.length) {
+        nexts(top) = next + 1
+        kids(next) match {
+          case el: DomElement =>
+            state.enter(top)
+            top += 1
+            if (top == outs.length) {
+              outs = java.util.Arrays.copyOf(outs, 2 * top)
+              nexts = java.util.Arrays.copyOf(nexts, 2 * top)
+            }
+            parent = el
+            outs(top) = slots(el.children.length)
+            nexts(top) = 0
+          case leaf => outs(top)(next) = convertLeaf(leaf, top, state)
+        }
+      } else {
+        // close up the slots of children that convert to nothing
+        val out = outs(top)
+        var n = 0
+        var i = 0
+        while (i < out.length) {
+          if (out(i) != null) { out(n) = out(i); n += 1 }
+          i += 1
+        }
+        val children = vectorOf[HtmlNode](out, n)
+        if (top == 0) result = children
+        else {
+          val el = parent.asInstanceOf[DomElement]
+          parent = el.parent
+          outs(top) = null
+          top -= 1
+          outs(top)(nexts(top) - 1) = convertElement(el, children, state)
+        }
+      }
     }
-    vectorOf(out, n)
+    result
   }
 
   // an exact-size array for converted nodes or attributes (a shared one
@@ -238,14 +281,13 @@ object HtmlParser {
       checkBudgets(depth)
     }
 
+    // no closures: this runs once per node
     private def checkBudgets(depth: Int): Unit = {
       if (budgets == null) return
-      budgets.maxDepth.foreach { md =>
-        if (depth > md) errors += new ErrRec("max-depth-exceeded", 0, 0, false)
-      }
-      budgets.maxNodes.foreach { mn =>
-        if (nodeCount > mn) errors += new ErrRec("max-nodes-exceeded", 0, 0, false)
-      }
+      if (budgets.maxDepth.isDefined && depth > budgets.maxDepth.get)
+        errors += new ErrRec("max-depth-exceeded", 0, 0, false)
+      if (budgets.maxNodes.isDefined && nodeCount > budgets.maxNodes.get)
+        errors += new ErrRec("max-nodes-exceeded", 0, 0, false)
     }
   }
 
@@ -287,11 +329,8 @@ object HtmlParser {
     if (sp >= 0) name.substring(sp + 1) else name
   }
 
-  private def convertNode(
-      node: DomNode,
-      depth: Int,
-      state: ConvertState
-  ): HtmlNode = node match {
+  /** A text, comment or doctype node at `depth`; null for any other. */
+  private def convertLeaf(node: DomNode, depth: Int, state: ConvertState): HtmlNode = node match {
     case t: DomText =>
       state.enter(depth)
       val sp = spanOf(t, state.captureSpans)
@@ -311,67 +350,67 @@ object HtmlParser {
         provenanceOf(sp, state.captureSpans),
         sp
       )
-    case el: DomElement =>
-      state.enter(depth)
-      // NOTE: the attribute budgets (maxAttributesPerElement /
-      // maxAttributeBytes) exist in the option surface but are silently
-      // DROPPED by the reference's public parse — its
-      // treeBudgetsFromParseOptions forwards only maxNodes/maxDepth to the
-      // tree layer, so the build.ts:200-235 checks never run (verified
-      // differentially); they are accepted-and-ignored here to match.
-      // children are converted (and receive ids) BEFORE the element itself
-      val kids = convertChildren(el.children, depth + 1, state)
-      // Mirrors the reference's public attribute normalization
-      // (build.ts:195-235): the parser-adjusted attr surfaces under its
-      // LOCAL name (parse5 moves the `xlink:`/`xml:`/`xmlns:` qualifier
-      // into a separate prefix field, and formatAttributeName's
-      // `name.includes(":")` branch never fires post-adjustment, so the
-      // reference's public name for e.g. `xlink:href` in foreign content
-      // is plain `href`); collisions after formatting keep the FIRST
-      // occurrence; and adjusted attrs carry NO span (the reference's
-      // location lookup is keyed by the tokenized name, which the
-      // adjustment renamed away — build.ts:218).
-      // A pre-scan: only elements with at least one adjusted attr pay for
-      // the rename/dedup set (tokenized names are ASCII-lowercased, so
-      // dedup-by-exact-name already happened in the tokenizer).
-      var anyAdjusted = false
-      var j = 0
-      while (j < el.attrCount && !anyAdjusted) {
-        if (attrWasAdjusted(el.attrAt(j).name)) anyAdjusted = true
-        j += 1
-      }
-      val seen = if (anyAdjusted) new java.util.HashSet[String]() else null
-      val attrs = slots(el.attrCount)
-      var n = 0
-      var i = 0
-      while (i < el.attrCount) {
-        val a = el.attrAt(i)
-        val adjusted = anyAdjusted && attrWasAdjusted(a.name)
-        val name = if (adjusted) publicAttrName(a.name) else a.name
-        if (seen == null || seen.add(name)) {
-          val sp =
-            if (state.captureSpans && !adjusted && a.start >= 0 && a.end >= a.start)
-              Some(Span(a.start, a.end))
-            else None
-          attrs(n) = Attr(name, a.value, sp)
-          n += 1
-        }
-        i += 1
-      }
-      val elSpan = spanOf(el, state.captureSpans).orElse {
-        if (state.captureSpans && el.startOffset >= 0 && el.startTagEnd >= el.startOffset)
-          Some(Span(el.startOffset, el.startTagEnd))
-        else None
-      }
-      ElementNode(
-        state.nextId(),
-        el.tagName, // public tag name: namespace prefix already absent
-        vectorOf(attrs, n),
-        kids,
-        provenanceOf(elSpan, state.captureSpans),
-        elSpan
-      )
     case _ => null
+  }
+
+  /** Element `el` with its converted `kids`: its public attributes, span and id. */
+  private def convertElement(el: DomElement, kids: Vector[HtmlNode], state: ConvertState): HtmlNode = {
+    // NOTE: the attribute budgets (maxAttributesPerElement /
+    // maxAttributeBytes) exist in the option surface but are silently
+    // DROPPED by the reference's public parse — its
+    // treeBudgetsFromParseOptions forwards only maxNodes/maxDepth to the
+    // tree layer, so the build.ts:200-235 checks never run (verified
+    // differentially); they are accepted-and-ignored here to match.
+    // Mirrors the reference's public attribute normalization
+    // (build.ts:195-235): the parser-adjusted attr surfaces under its
+    // LOCAL name (parse5 moves the `xlink:`/`xml:`/`xmlns:` qualifier
+    // into a separate prefix field, and formatAttributeName's
+    // `name.includes(":")` branch never fires post-adjustment, so the
+    // reference's public name for e.g. `xlink:href` in foreign content
+    // is plain `href`); collisions after formatting keep the FIRST
+    // occurrence; and adjusted attrs carry NO span (the reference's
+    // location lookup is keyed by the tokenized name, which the
+    // adjustment renamed away — build.ts:218).
+    // A pre-scan: only elements with at least one adjusted attr pay for
+    // the rename/dedup set (tokenized names are ASCII-lowercased, so
+    // dedup-by-exact-name already happened in the tokenizer).
+    var anyAdjusted = false
+    var j = 0
+    while (j < el.attrCount && !anyAdjusted) {
+      if (attrWasAdjusted(el.attrAt(j).name)) anyAdjusted = true
+      j += 1
+    }
+    val seen = if (anyAdjusted) new java.util.HashSet[String]() else null
+    val attrs = slots(el.attrCount)
+    var n = 0
+    var i = 0
+    while (i < el.attrCount) {
+      val a = el.attrAt(i)
+      val adjusted = anyAdjusted && attrWasAdjusted(a.name)
+      val name = if (adjusted) publicAttrName(a.name) else a.name
+      if (seen == null || seen.add(name)) {
+        val sp =
+          if (state.captureSpans && !adjusted && a.start >= 0 && a.end >= a.start)
+            Some(Span(a.start, a.end))
+          else None
+        attrs(n) = Attr(name, a.value, sp)
+        n += 1
+      }
+      i += 1
+    }
+    // an element with no end location spans its start tag
+    val full = spanOf(el, state.captureSpans)
+    val elSpan =
+      if (full.isDefined || !state.captureSpans || el.startOffset < 0 || el.startTagEnd < el.startOffset) full
+      else Some(Span(el.startOffset, el.startTagEnd))
+    ElementNode(
+      state.nextId(),
+      el.tagName, // public tag name: namespace prefix already absent
+      vectorOf(attrs, n),
+      kids,
+      provenanceOf(elSpan, state.captureSpans),
+      elSpan
+    )
   }
 
   private def toParseErrors(errors: ArrayBuffer[ErrRec]): Vector[ParseError] =
@@ -391,19 +430,43 @@ object HtmlParser {
   * expectations for a newer spec change in the vendored parser.
   */
 object CompatPatch {
+
+  /** Patches every HTML `body` under `root`, each once its subtree is
+    * walked: one post-order walk with an explicit stack of (parent, index
+    * of its next child) frames, so its stack use does not grow with the
+    * document's depth.
+    */
   def patchSelectAdoption(root: DomParent): Unit = {
-    def walk(node: DomParent): Unit = {
-      node.children.foreach {
-        case p: DomParent => walk(p)
-        case _            =>
-      }
-      node match {
-        case el: DomElement if el.tagName == "body" && el.namespace == Ns.Html =>
-          patchBody(el)
-        case _ =>
+    var parents = new Array[DomParent](16)
+    var nexts = new Array[Int](16)
+    var top = 0
+    parents(0) = root
+    while (top >= 0) {
+      val node = parents(top)
+      val next = nexts(top)
+      if (next < node.children.length) {
+        nexts(top) = next + 1
+        node.children(next) match {
+          case p: DomParent =>
+            top += 1
+            if (top == parents.length) {
+              parents = java.util.Arrays.copyOf(parents, 2 * top)
+              nexts = java.util.Arrays.copyOf(nexts, 2 * top)
+            }
+            parents(top) = p
+            nexts(top) = 0
+          case _ =>
+        }
+      } else {
+        node match {
+          case el: DomElement if el.tagName == "body" && el.namespace == Ns.Html =>
+            patchBody(el)
+          case _ =>
+        }
+        parents(top) = null
+        top -= 1
       }
     }
-    walk(root)
   }
 
   private def isBareElement(n: DomNode, tag: String): Boolean = n match {

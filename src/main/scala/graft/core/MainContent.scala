@@ -93,13 +93,6 @@ object MainContent {
       "related", "share", "shoutbox", "sidebar", "social", "sponsor",
       "widget")
 
-  /** Subtree aggregates for one node (post-order accumulated). */
-  private final class Stats {
-    var textChars: Int = 0
-    var linkChars: Int = 0
-    var nElements: Int = 0
-  }
-
   private final case class Candidate(el: ElementNode, textChars: Int,
                                      linkChars: Int, nElements: Int)
 
@@ -173,41 +166,63 @@ object MainContent {
     // subtree, recording each candidate once its subtree is done. Skipped
     // subtrees (script/style/head/noscript/hidden) contribute nothing —
     // identical invisibility rules to the extraction walk (reference skip
-    // set: src/public/mod.ts:1046-1101).
-    def visit(node: HtmlNode, inLink: Boolean, acc: Stats): Unit = node match {
-      case t: TextNode =>
-        val n = collapsedLen(t.value)
-        acc.textChars += n
-        if (inLink) acc.linkChars += n
-      case el: ElementNode =>
-        val tag = el.tagName.toLowerCase
-        if (VisibleText.SkipTags.contains(tag) || tag == "noscript") return
-        if (VisibleText.shouldSkipHiddenSubtree(el, options.visibleText)) return
-        val mine = new Stats
-        val childInLink = inLink || tag == "a"
-        var i = 0
-        while (i < el.children.length) {
-          visit(el.children(i), childInLink, mine)
-          i += 1
+    // set: src/public/mod.ts:1046-1101). An explicit frame stack keeps the
+    // pass's stack use flat in the tree's depth: frame d > 0 sums the subtree
+    // of `els(d)` and frame 0 the document; `acc(4d)` is the index of the
+    // frame's next child, `acc(4d + 1 .. 4d + 3)` its text chars, link chars
+    // and elements so far. Text is link text from the first frame under an
+    // `<a>`, `linkFrom`, down.
+    var els = new Array[ElementNode](8)
+    var acc = new Array[Int](32)
+    var top = 0
+    var linkFrom = Int.MaxValue
+    while (top >= 0) {
+      val kids = if (top == 0) tree.children else els(top).children
+      val b = 4 * top
+      val next = acc(b)
+      if (next < kids.length) {
+        acc(b) = next + 1
+        kids(next) match {
+          case t: TextNode =>
+            val n = collapsedLen(t.value)
+            acc(b + 1) += n
+            if (top >= linkFrom) acc(b + 2) += n
+          case el: ElementNode =>
+            val tag = el.tagName.toLowerCase
+            if (!VisibleText.SkipTags.contains(tag) && tag != "noscript" &&
+                !VisibleText.shouldSkipHiddenSubtree(el, options.visibleText)) {
+              top += 1
+              if (top == els.length) {
+                els = java.util.Arrays.copyOf(els, 2 * top)
+                acc = java.util.Arrays.copyOf(acc, 8 * top)
+              }
+              els(top) = el
+              java.util.Arrays.fill(acc, 4 * top, 4 * top + 4, 0)
+              if (tag == "a" && linkFrom > top) linkFrom = top
+            }
+          case _ => // comments / doctypes carry no visible text
         }
-        if (CandidateTags.contains(tag) && mine.textChars >= options.minTextChars)
-          candidates += Candidate(el, mine.textChars, mine.linkChars, mine.nElements)
-        acc.textChars += mine.textChars
-        acc.linkChars += mine.linkChars
-        acc.nElements += mine.nElements + 1
-      case _ => // comments / doctypes carry no visible text
-    }
-
-    val root = new Stats
-    var i = 0
-    while (i < tree.children.length) {
-      visit(tree.children(i), inLink = false, root)
-      i += 1
+      } else {
+        if (top > 0) {
+          val el = els(top)
+          val textChars = acc(b + 1)
+          val linkChars = acc(b + 2)
+          val nElements = acc(b + 3)
+          if (CandidateTags.contains(el.tagName.toLowerCase) && textChars >= options.minTextChars)
+            candidates += Candidate(el, textChars, linkChars, nElements)
+          acc(b - 3) += textChars
+          acc(b - 2) += linkChars
+          acc(b - 1) += nElements + 1
+          els(top) = null
+          if (linkFrom == top) linkFrom = Int.MaxValue
+        }
+        top -= 1
+      }
     }
 
     if (candidates.isEmpty) return None
 
-    // The tie-break is the first candidate recorded. `visit` records each
+    // The tie-break is the first candidate recorded. The pass records each
     // candidate once its subtree is done, so a tied descendant beats its
     // ancestor and an earlier sibling a later one — the lowest node id, as
     // ids are post-order too (`HtmlParser.ConvertState.nextId`).

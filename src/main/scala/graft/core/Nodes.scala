@@ -20,6 +20,11 @@ object SpanProvenance {
 
 final case class Attr(name: String, value: String, span: Option[Span] = None)
 
+/** A node of the public tree. The case classes' generated `equals`,
+  * `hashCode` and `toString` recurse over `children`, so their stack use
+  * grows with the tree's depth; nothing inside `Extraction.guarded` (the
+  * typed extraction, streaming or the SQL functions) calls them.
+  */
 sealed trait HtmlNode {
   def id: Int
   def kind: String
@@ -148,6 +153,13 @@ object BudgetExceededException {
   private[core] def check(budget: String, limit: Option[Long], actual: Long): Unit =
     if (exceeds(limit, actual))
       throw new BudgetExceededException(BudgetExceededPayload(budget, limit.get, actual))
+
+  /** [[check]] of an `Int` budget, by the same rule, without a boxed `Long`
+    * copy of its limit on every parse.
+    */
+  private[core] def checkInt(budget: String, limit: Option[Int], actual: Long): Unit =
+    if (limit.isDefined && actual > limit.get)
+      throw new BudgetExceededException(BudgetExceededPayload(budget, limit.get.toLong, actual))
 }
 
 final case class ParseOptions(

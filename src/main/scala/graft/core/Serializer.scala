@@ -2,6 +2,10 @@ package graft.core
 
 /** Deterministic serialization of public trees (reference:
   * src/public/mod.ts:938-984).
+  *
+  * Serialization recurses over children, so its stack use grows with the
+  * tree's depth: nothing inside `Extraction.guarded` (the typed
+  * extraction, streaming or the SQL functions) calls it.
   */
 object Serializer {
 

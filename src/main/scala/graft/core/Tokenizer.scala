@@ -588,11 +588,9 @@ final class Tokenizer(input: String, sink: TokenSink) {
     val n = if (fastAttrName != null) fastAttrName else attrNameBuf.toString
     fastAttrName = null
     attrSkip = false
-    if (tag.hasAttr(n)) {
+    if (!tag.addAttrIfNew(n, attrStart, pos - 1)) {
       err("duplicate-attribute")
       attrSkip = true
-    } else {
-      tag.addAttr(n, attrStart, pos - 1)
     }
     attrValueBuf.clear()
   }

@@ -24,6 +24,10 @@ final class TagToken {
   // keep (all in-repo sinks already do). `pool` keeps retired TokAttr
   // instances for reuse; `attrs` holds the live prefix for the current tag.
   private val pool: ArrayBuffer[TokAttr] = new ArrayBuffer[TokAttr](4)
+  // the names in `attrs`, once there are more than TagToken.ScanLimit of
+  // them: a flood of attributes on one tag stays linear, and a tag with a
+  // few keeps its scan
+  private var names: java.util.HashSet[String] = null
 
   def reset(isEndTag: Boolean, startOffset: Int): Unit = {
     name = ""
@@ -33,14 +37,26 @@ final class TagToken {
     start = startOffset
     end = 0
     attrs.clear()
+    names = null
   }
 
-  def addAttr(n: String, s: Int, e: Int): Unit = {
+  /** Adds attribute `n` unless the tag already has one of that name (the
+    * tokenizer's duplicate-attribute rule: the first wins). True if added.
+    */
+  def addAttrIfNew(n: String, s: Int, e: Int): Boolean = {
+    if (names != null) { if (!names.add(n)) return false }
+    else if (hasAttr(n)) return false
+    else if (attrs.length == TagToken.ScanLimit) {
+      names = new java.util.HashSet[String]
+      attrs.foreach(a => names.add(a.name))
+      names.add(n)
+    }
     val a =
       if (pool.length > attrs.length) pool(attrs.length)
       else { val x = new TokAttr("", "", 0, 0); pool += x; x }
     a.name = n; a.value = ""; a.start = s; a.end = e
     attrs += a
+    true
   }
 
   def attr(n: String): String = {
@@ -52,6 +68,11 @@ final class TagToken {
     null
   }
   def hasAttr(n: String): Boolean = attr(n) != null
+}
+
+object TagToken {
+  /** Up to this many attributes, a duplicate check scans them. */
+  private[core] final val ScanLimit = 8
 }
 
 final class DoctypeTok {

@@ -6,15 +6,45 @@ package graft.core
   */
 object Traversal {
 
-  /** Pre-order iteration with depth, matching the reference's walk order. */
-  def iterate(children: Vector[HtmlNode]): Iterator[(HtmlNode, Int)] = {
-    def go(nodes: Vector[HtmlNode], depth: Int): Iterator[(HtmlNode, Int)] =
-      nodes.iterator.flatMap {
-        case e: ElementNode => Iterator((e, depth)) ++ go(e.children, depth + 1)
-        case n              => Iterator((n, depth))
+  /** Pre-order iteration with depth, matching the reference's walk order.
+    * An explicit stack, so neither its stack use nor the cost of a step
+    * grows with the tree's depth: `levels(d)` is the sibling list being
+    * walked at depth `d` and `nexts(d)` the index of its next node.
+    */
+  def iterate(children: Vector[HtmlNode]): Iterator[(HtmlNode, Int)] =
+    new scala.collection.AbstractIterator[(HtmlNode, Int)] {
+      private var levels = new Array[Vector[HtmlNode]](8)
+      private var nexts = new Array[Int](8)
+      private var top = 0
+      levels(0) = children
+
+      def hasNext: Boolean = {
+        while (top >= 0 && nexts(top) >= levels(top).length) {
+          levels(top) = null
+          top -= 1
+        }
+        top >= 0
       }
-    go(children, 0)
-  }
+
+      def next(): (HtmlNode, Int) = {
+        if (!hasNext) throw new NoSuchElementException("next on an exhausted walk")
+        val depth = top
+        val node = levels(top)(nexts(top))
+        nexts(top) += 1
+        node match {
+          case e: ElementNode if e.children.nonEmpty =>
+            top += 1
+            if (top == levels.length) {
+              levels = java.util.Arrays.copyOf(levels, 2 * top)
+              nexts = java.util.Arrays.copyOf(nexts, 2 * top)
+            }
+            levels(top) = e.children
+            nexts(top) = 0
+          case _ =>
+        }
+        (node, depth)
+      }
+    }
 
   def walk(tree: DocumentTree)(visitor: (HtmlNode, Int) => Unit): Unit =
     iterate(tree.children).foreach { case (n, d) => visitor(n, d) }
@@ -54,34 +84,36 @@ object Traversal {
 
   def textContent(node: HtmlNode): String = node match {
     case t: TextNode    => t.value
-    case e: ElementNode => e.children.map(textContent).mkString
+    case e: ElementNode => textContent(e.children)
     case _              => ""
   }
 
-  def textContent(children: Vector[HtmlNode]): String =
-    children.map(textContent).mkString
+  /** The text nodes' values under `children`, in document order. */
+  def textContent(children: Vector[HtmlNode]): String = {
+    val sb = new java.lang.StringBuilder
+    iterate(children).foreach {
+      case (t: TextNode, _) => sb.append(t.value)
+      case _                =>
+    }
+    sb.toString
+  }
 
   // ------------------------------------------------------------------
   def outline(children: Vector[HtmlNode]): Outline = {
     val entries = Vector.newBuilder[OutlineEntry]
-    def collect(node: HtmlNode, depth: Int): Unit = node match {
-      case e: ElementNode =>
+    iterate(children).foreach {
+      case (e: ElementNode, depth) =>
         val normalized = e.tagName.toLowerCase
         if (normalized.matches("^h[1-6]$") || normalized == "section" ||
           normalized == "article") {
           entries += OutlineEntry(e.id, depth, e.tagName, textContent(e).take(200))
         }
-        e.children.foreach(c => collect(c, depth + 1))
       case _ =>
     }
-    children.foreach(c => collect(c, 0))
     Outline(entries.result())
   }
 
-  private def countNodes(node: HtmlNode): Int = node match {
-    case e: ElementNode => 1 + e.children.map(countNodes).sum
-    case _              => 1
-  }
+  private def countNodes(node: HtmlNode): Int = iterate(Vector(node)).size
 
   /** Greedy packing of top-level siblings under maxChars/maxNodes/maxBytes
     * caps (reference: mod.ts:2179-2233). Bytes are UTF-8 lengths.

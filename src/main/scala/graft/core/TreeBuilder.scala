@@ -1360,11 +1360,30 @@ final class TreeBuilder(
 
   // ------------------------------------------------------------------
   // start tags
+  // the attribute names of each merge target (the html or body element)
+  // that has had more than TagToken.ScanLimit attributes in one merge;
+  // later merges into it add to its set
+  private var mergedNames: java.util.IdentityHashMap[DomElement, java.util.HashSet[String]] = null
+
+  /** Adds `tag`'s attributes that `el` lacks, as a second `<html>` or
+    * `<body>` tag does. A few attributes are checked by a scan; past that a
+    * set of `el`'s names answers, so a flood of attributes, or of merges,
+    * stays linear.
+    */
   private def mergeAttrsInto(el: DomElement, tag: TagToken): Unit = {
+    var names = if (mergedNames == null) null else mergedNames.get(el)
+    if (names == null && el.attrCount + tag.attrs.length > TagToken.ScanLimit) {
+      names = new java.util.HashSet[String]
+      var j = 0
+      while (j < el.attrCount) { names.add(el.attrAt(j).name); j += 1 }
+      if (mergedNames == null) mergedNames = new java.util.IdentityHashMap
+      mergedNames.put(el, names)
+    }
     var i = 0
     while (i < tag.attrs.length) {
       val a = tag.attrs(i)
-      if (!el.hasAttr(a.name)) el.addAttr(new DomAttr(a.name, a.value, a.start, a.end))
+      val absent = if (names == null) !el.hasAttr(a.name) else names.add(a.name)
+      if (absent) el.addAttr(new DomAttr(a.name, a.value, a.start, a.end))
       i += 1
     }
   }

@@ -295,29 +295,100 @@ object VisibleText {
     private def appendBreak(break: String, el: ElementNode, roleOverride: String): Unit =
       append(break, metaOf(el, roleOverride, "structure-break"))
 
-    private def collectNoscript(node: ElementNode, preserveWs: Boolean): Boolean = {
-      if (node.tagName.toLowerCase != "noscript") return false
-      if (node.children.length != 1) return false
-      node.children(0) match {
-        case t: TextNode =>
-          val raw = t.value
-          if (!raw.contains("<") || !raw.contains(">")) return false
-          val fragment = HtmlParser.parseFragment(raw, "body")
-          fragment.children.foreach(c => collect(c, preserveWs, "noscript-fallback"))
-          true
-        case _ => false
+    /** The fragment that stands in for `el` when it is a `noscript` whose
+      * one child is a text node with markup (mod.ts:1201-1231), else null.
+      */
+    private def noscriptFallback(el: ElementNode, tagName: String): FragmentTree = {
+      if (tagName != "noscript" || el.children.length != 1) return null
+      el.children(0) match {
+        case t: TextNode if t.value.contains("<") && t.value.contains(">") =>
+          HtmlParser.parseFragment(t.value, "body")
+        case _ => null
       }
     }
 
-    def collect(node: HtmlNode, preserveWs: Boolean, roleOverride: String): Unit = node match {
+    // Frame flags. The first two hold for the frame's nodes (their
+    // whitespace rule and source role), the rest for the frame's owner.
+    private final val PreserveWs = 1
+    private final val Noscript = 2
+    private final val AfterP = 4
+    private final val AfterBlock = 8
+    private final val Row = 16
+    private final val SeenCell = 32
+
+    // The explicit frame stack: frame d walks `owners(d)`'s children, or
+    // the sibling list in `owners(d)` for the top frame and a noscript
+    // fallback's fragment; `state(2d)` is the index of its next node and
+    // `state(2d + 1)` its flags.
+    private var owners = new Array[AnyRef](8)
+    private var state = new Array[Int](16)
+    private var top = -1
+
+    private def push(owner: AnyRef, flags: Int): Unit = {
+      top += 1
+      if (top == owners.length) {
+        owners = java.util.Arrays.copyOf(owners, 2 * top)
+        state = java.util.Arrays.copyOf(state, 4 * top)
+      }
+      owners(top) = owner
+      state(2 * top) = 0
+      state(2 * top + 1) = flags
+    }
+
+    /** Collects `nodes` and everything under them in document order. One
+      * walk with an explicit frame stack, so its stack use does not grow
+      * with the tree's depth: an element's leading break is appended when
+      * the walk reaches it, and its trailing break when its frame is done.
+      */
+    def collect(roots: Vector[HtmlNode]): Unit = {
+      push(roots, 0)
+      while (top >= 0) {
+        val owner = owners(top)
+        val flags = state(2 * top + 1)
+        val roleOverride = if ((flags & Noscript) != 0) "noscript-fallback" else null
+        val nodes = owner match {
+          case el: ElementNode => el.children
+          case list            => list.asInstanceOf[Vector[HtmlNode]]
+        }
+        val next = state(2 * top)
+        if (next < nodes.length) {
+          state(2 * top) = next + 1
+          visit(nodes(next), flags, roleOverride)
+        } else {
+          if ((flags & (Row | AfterBlock)) != 0)
+            appendBreak("\n", owner.asInstanceOf[ElementNode], roleOverride)
+          else if ((flags & AfterP) != 0)
+            appendBreak("\n\n", owner.asInstanceOf[ElementNode], roleOverride)
+          owners(top) = null
+          top -= 1
+        }
+      }
+    }
+
+    /** Appends what `node` shows by itself and pushes a frame for what it
+      * shows through its children; `flags` are those of the frame it is in.
+      */
+    private def visit(node: HtmlNode, flags: Int, roleOverride: String): Unit = node match {
       case t: TextNode =>
-        append(normalizeSegment(t.value, preserveWs), metaOf(t, roleOverride, "text-node"))
+        append(normalizeSegment(t.value, (flags & PreserveWs) != 0), metaOf(t, roleOverride, "text-node"))
       case el: ElementNode =>
+        val inherited = flags & (PreserveWs | Noscript)
+        if ((flags & Row) != 0) {
+          // a tab before every cell of a row but its first, hidden ones too
+          val childTag = el.tagName.toLowerCase
+          if (childTag == "td" || childTag == "th") {
+            if ((flags & SeenCell) != 0) appendBreak("\t", owners(top).asInstanceOf[ElementNode], roleOverride)
+            else state(2 * top + 1) = flags | SeenCell
+          }
+        }
         if (shouldSkipHiddenSubtree(el, options)) return
         val tagName = el.tagName.toLowerCase
-        val fallbackName = accessibleNameFallback(el, options)
         if (SkipTags.contains(tagName)) return
-        if (collectNoscript(el, preserveWs)) return
+        val fallback = noscriptFallback(el, tagName)
+        if (fallback != null) {
+          push(fallback.children, inherited | Noscript)
+          return
+        }
 
         if (tagName == "br") {
           appendBreak("\n", el, roleOverride)
@@ -337,7 +408,7 @@ object VisibleText {
               appendValue(value.get, el, roleOverride, "input-value")
               return
             }
-            fallbackName.foreach(appendValue(_, el, roleOverride, "input-aria-label"))
+            accessibleNameFallback(el, options).foreach(appendValue(_, el, roleOverride, "input-aria-label"))
           }
           return
         }
@@ -354,34 +425,18 @@ object VisibleText {
 
         if (tagName == "tr") {
           appendBreak("\n", el, roleOverride)
-          var seenTableCell = false
-          el.children.foreach {
-            case child: ElementNode
-                if child.tagName.toLowerCase == "td" || child.tagName.toLowerCase == "th" =>
-              if (seenTableCell) appendBreak("\t", el, roleOverride)
-              collect(child, preserveWs, roleOverride)
-              seenTableCell = true
-            case child =>
-              collect(child, preserveWs, roleOverride)
-          }
-          appendBreak("\n", el, roleOverride)
-          return
+          push(el, inherited | Row)
+        } else if (tagName == "td" || tagName == "th") {
+          push(el, inherited)
+        } else {
+          val preserve = if (tagName == "pre" || tagName == "textarea") PreserveWs else 0
+          val after =
+            if (tagName == "p") AfterP
+            else if (BlockBreakTags.contains(tagName)) AfterBlock
+            else 0
+          if (after != 0) appendBreak("\n", el, roleOverride)
+          push(el, inherited | preserve | after)
         }
-
-        if (tagName == "td" || tagName == "th") {
-          el.children.foreach(c => collect(c, preserveWs, roleOverride))
-          return
-        }
-
-        val childPreserveWs = preserveWs || tagName == "pre" || tagName == "textarea"
-        val blockBreakBefore = tagName == "p" || BlockBreakTags.contains(tagName)
-        if (blockBreakBefore) appendBreak("\n", el, roleOverride)
-        el.children.foreach(c => collect(c, childPreserveWs, roleOverride))
-        if (tagName == "p") {
-          appendBreak("\n\n", el, roleOverride)
-          return
-        }
-        if (blockBreakBefore) appendBreak("\n", el, roleOverride)
       case _ => // comments / doctypes contribute nothing
     }
   }
@@ -392,7 +447,7 @@ object VisibleText {
       withSources: Boolean
   ): Normalized = {
     val c = new Collector(options, withSources)
-    nodes.foreach(n => c.collect(n, preserveWs = false, roleOverride = null))
+    c.collect(nodes)
     c.normalized(options.trim)
   }
 

@@ -14,13 +14,12 @@ import graft.pipeline.Extraction
 object VisibleTextEval {
   private val budgets = Extraction.DefaultBudgets
 
-  // Budget trips, malformed-input surprises and recursion overflow yield
-  // NULL (never "", which would read as an empty page), so one poison row
-  // never kills a task; genuinely fatal errors (OOM etc.) still fail the
-  // task. The typed pipeline's guard, with its failure class dropped: a SQL
-  // string column has nowhere to carry it. A document is parsed on the
-  // caller's thread; a document that overflows it is parsed once more on a
-  // 64 MiB-stack thread, and is NULL only if it overflows there too.
+  // Budget trips, malformed-input surprises and stack overflows yield NULL
+  // (never "", which would read as an empty page), so one poison row never
+  // kills a task; genuinely fatal errors (OOM etc.) still fail the task.
+  // The typed pipeline's guard, with its failure class dropped: a SQL
+  // string column has nowhere to carry it. A document is parsed once, on
+  // the task thread, at any depth its budgets allow.
   private def guard(body: => String): UTF8String =
     Extraction.guarded(UTF8String.fromString(body))(_ => null)
 

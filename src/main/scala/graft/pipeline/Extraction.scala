@@ -12,9 +12,10 @@ import org.apache.spark.util.CollectionAccumulator
   *  - extraction is embarrassingly parallel — no shuffle is introduced here;
   *    callers choose partitioning (`repartition(conv_id)` only when a
   *    downstream per-conversation stage needs co-location);
-  *  - each turn is parsed on the caller's thread; a document that
-  *    overflows it is parsed once more on a 64 MiB-stack thread (see
-  *    [[guarded]]): only adversarially deep documents pay for a thread;
+  *  - each turn is parsed once, on the caller's thread, and every walk
+  *    over it keeps an explicit stack, so a turn nested as deep as
+  *    `DefaultBudgets.maxDepth` needs no deeper thread stack (see
+  *    [[guarded]]);
   *  - a poison document can never kill a task: budget violations and any
   *    unexpected error land in the `budget_error` column (north rule:
   *    per-row guard, reference budget semantics src/public/mod.ts:165-180);
@@ -32,37 +33,18 @@ object Extraction {
     maxDepth = Some(65536)
   )
 
-  private val DeepStackBytes = 64L * 1024 * 1024
-
-  /** Runs `body` on a freshly started daemon thread with a 64 MiB stack and
-    * joins it: its result, or its failure rethrown here.
-    */
-  private def onDeepStack[T](body: => T): T = {
-    var result: Either[Throwable, T] = null
-    val thread = new Thread(null, () => {
-      result = try Right(body) catch { case t: Throwable => Left(t) }
-    }, "graft-deep-stack", DeepStackBytes)
-    thread.setDaemon(true)
-    thread.start()
-    thread.join()
-    result.fold(throw _, identity)
-  }
-
-  /** The one failure guard and the one stack policy of per-document work.
-    * `body` runs on the calling thread; if that thread's stack overflows,
-    * `body` runs once more on a 64 MiB-stack thread (the tree builder and
-    * the node converter recurse over the DOM, reference recursion:
-    * src/internal/tree/build.ts:420-490). A failure becomes `failed` with
-    * its class: `budget:<budget>` for a budget trip, `internal:<exception>`
-    * for parse surprises and an overflow of the deep stack too. Genuinely
-    * fatal VM errors (OOM, internal JVM errors) and interrupts propagate and
-    * fail the task so Spark retries it. Shared by the typed extraction and
-    * the `visible_text()` / `text_content()` SQL expressions.
+  /** The one failure guard of per-document work. `body` runs once, on the
+    * calling thread: every walk over a document keeps an explicit stack, so
+    * no document needs a deeper thread stack than a shallow one. A failure
+    * becomes `failed` with its class: `budget:<budget>` for a budget trip,
+    * `internal:<exception>` for parse surprises, and for a stack overflow
+    * too, so that a recursion a walk still has cannot kill the task.
+    * Genuinely fatal VM errors (OOM, internal JVM errors) and interrupts
+    * propagate and fail the task so Spark retries it. Shared by the typed
+    * extraction and the `visible_text()` / `text_content()` SQL expressions.
     */
   private[graft] def guarded[T](body: => T)(failed: String => T): T =
-    try {
-      try body catch { case _: StackOverflowError => onDeepStack(body) }
-    } catch {
+    try body catch {
       case e: BudgetExceededException => failed(s"budget:${e.payload.budget}")
       case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
         failed(s"internal:${e.getClass.getSimpleName}")
@@ -100,33 +82,39 @@ object Extraction {
       val (text, provTokens) = VisibleText.extractWithProvenance(tree.children, options)
       // Noscript-fallback tokens carry node ids of the fragment VisibleText
       // parses; they too are resolved against the document.
+      val byId = nodesById(tree.children)
       val spans = provTokens.map { tok =>
-        val sp = tok.sourceNodeId.flatMap(inputSpan(tree.children, _))
+        val id = tok.sourceNodeId.getOrElse(-1)
+        val node = if (id >= 0 && id < byId.length) byId(id) else null
+        val sp = if (node != null && node.spanProvenance == SpanProvenance.Input) node.span else None
         TokenSpan(tok.kind, tok.value,
-          sp.map(_.start).getOrElse(-1), sp.map(_.end).getOrElse(-1),
-          tok.sourceNodeId.getOrElse(-1))
+          if (sp.isDefined) sp.get.start else -1, if (sp.isDefined) sp.get.end else -1, id)
       }
       (text, spans)
     }
 
-  /** The input span of node `id` in the trees `nodes`, if it has one. Ids
-    * are post-order (`HtmlParser.ConvertState.nextId`), so the first sibling
-    * whose id is at least `id`, found by binary search, is the only subtree
-    * that can hold it.
+  /** The nodes of the trees `nodes`, indexed by id; null where no node has
+    * the id. Ids are dense and post-order (`HtmlParser.ConvertState.nextId`):
+    * the last top-level node has the highest, and an element's children have
+    * lower ids than the element. So a scan down from the highest id meets
+    * each element after its parent put it in the table, and puts the
+    * element's children there in turn: no walk and no stack.
     */
-  @scala.annotation.tailrec private def inputSpan(nodes: Vector[HtmlNode], id: Int): Option[Span] = {
-    var lo = 0
-    var hi = nodes.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (nodes(mid).id < id) lo = mid + 1 else hi = mid
+  private def nodesById(nodes: Vector[HtmlNode]): Array[HtmlNode] = {
+    val table = new Array[HtmlNode](if (nodes.isEmpty) 0 else nodes.last.id + 1)
+    var i = 0
+    while (i < nodes.length) { table(nodes(i).id) = nodes(i); i += 1 }
+    var id = table.length - 1
+    while (id >= 0) {
+      table(id) match {
+        case e: ElementNode =>
+          var j = 0
+          while (j < e.children.length) { table(e.children(j).id) = e.children(j); j += 1 }
+        case _ =>
+      }
+      id -= 1
     }
-    if (lo == nodes.length) None
-    else nodes(lo) match {
-      case n if n.id == id => if (n.spanProvenance == SpanProvenance.Input) n.span else None
-      case e: ElementNode  => inputSpan(e.children, id)
-      case _               => None
-    }
+    table
   }
 
   /** Extract one turn, keeping only the main-content block (north-star

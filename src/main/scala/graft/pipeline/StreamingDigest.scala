@@ -14,10 +14,9 @@ import graft.core.VisibleTextOptions
   * an order-independent XOR so out-of-order turns fold in without re-reading
   * history, and extraction runs per row with the batch budgets (total —
   * poison rows degrade to an error inside extractOne, never fail the
-  * query). Each turn is parsed on the caller's thread; a document that
-  * overflows it is parsed once more on a 64 MiB-stack thread. Each
-  * micro-batch emits the updated running digest per touched conversation
-  * (OutputMode.Update).
+  * query). Each turn is parsed once, on the task thread, at any depth its
+  * budgets allow. Each micro-batch emits the updated running digest per
+  * touched conversation (OutputMode.Update).
   *
   * State eviction: the input stream MUST carry a watermark on `ts` (the
   * caller's `.withWatermark("ts", ...)`); each update arms an event-time

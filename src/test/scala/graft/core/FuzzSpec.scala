@@ -87,7 +87,6 @@ class FuzzSpec extends AnyFunSuite {
     def randDoc(): String =
       (0 until (20 + rng.nextInt(60))).map(_ => vocab(rng.nextInt(vocab.length))).mkString
     val docs = pathological ++ Vector.fill(588)(randDoc())
-    // deep towers need the pipeline's 64MB worker stack (see Extraction)
     var slow: Seq[(Int, Double)] = null
     var thrown: Throwable = null
     val worker = new Thread(null, () => {
@@ -100,7 +99,7 @@ class FuzzSpec extends AnyFunSuite {
           if (ms > 500.0) Some(i -> ms) else None
         }
       } catch { case t: Throwable => thrown = t }
-    }, "fuzz-nohang", 64L * 1024 * 1024)
+    }, "fuzz-nohang")
     worker.start(); worker.join(120000L)
     assert(thrown == null, s"no-hang corpus threw: $thrown")
     assert(slow != null, "no-hang corpus did not finish within 120s")

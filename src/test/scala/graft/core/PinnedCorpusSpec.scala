@@ -134,7 +134,10 @@ object PinnedCorpusSpec {
 
   /** Renders every (row, kind) and checks it against its digest, on a few
     * deep-stack threads; counts the tree and fragment cases reaching each
-    * insertion mode and each (from, to) mode transition.
+    * insertion mode and each (from, to) mode transition. The deep stacks
+    * are for two renderers that recurse over the tree:
+    * `DatNormalizer.normalizeNode` (the tree and fragment kinds) and
+    * `Serializer.serialize` (the extract kind).
     */
   def replay(corpus: PinnedCorpus): Replay = {
     // per row, the index of its first digest

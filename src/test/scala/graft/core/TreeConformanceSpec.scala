@@ -83,11 +83,12 @@ class TreeConformanceSpec extends AnyFunSuite {
     // scope, template on the stack, formatting element on the stack) is
     // answered without a walk of the stack, so each build stays far under
     // the bound that a walk per tag (quadratic in depth) takes seconds to hit.
-    // The builder is run directly: the DOM→tree conversion recurses.
-    def body(html: String): (DomElement, Long) = {
+    // So is every duplicate-attribute check and attribute merge, which a scan
+    // per attribute makes quadratic in the attributes of one tag.
+    def body(html: String, onError: (String, Int, Int) => Unit = (_, _, _) => ()): (DomElement, Long) = {
       val t0 = System.nanoTime
       val doc = new TreeBuilder(html, scriptingEnabled = true, captureSpans = false,
-        onError = (_, _, _) => ()).parseDocument()
+        onError = onError).parseDocument()
       val ms = (System.nanoTime - t0) / 1000000
       (doc.children(0).asInstanceOf[DomElement].children(1).asInstanceOf[DomElement], ms)
     }
@@ -125,6 +126,30 @@ class TreeConformanceSpec extends AnyFunSuite {
     assert(pHost.children.length == 40000 &&
       pHost.children.forall { case e: DomElement => e.tagName == "p"; case _ => false })
     within2s("</p> x 40000 under 20000 <div>", pMs)
+
+    // an attribute flood: 40,000 names, each given twice; the first wins and
+    // the second is a duplicate-attribute error
+    def attrs(from: Int, until: Int, value: String): String =
+      (from until until).map(i => s"a$i=$value").mkString(" ")
+    val n = 40000
+    var duplicates = 0
+    val (floodBody, floodMs) = body(s"<div ${attrs(0, n, "1")} ${attrs(0, n, "2")}>",
+      (code, _, _) => if (code == "duplicate-attribute") duplicates += 1)
+    val div = floodBody.children(0).asInstanceOf[DomElement]
+    assert(div.attrCount == n && duplicates == n)
+    assert((0 until n).forall(i => div.attrAt(i).name == s"a$i" && div.attrAt(i).value == "1"))
+    within2s(s"<div> with $n attributes, each twice", floodMs)
+    // a second <body> tag merges the attributes the body lacks, in order
+    val (merged, mergeMs) = body(s"<body ${attrs(0, n, "1")}><body ${attrs(n / 2, n + n / 2, "2")}>")
+    assert(merged.attrCount == n + n / 2)
+    assert((0 until n + n / 2).forall { i =>
+      merged.attrAt(i).name == s"a$i" && merged.attrAt(i).value == (if (i < n) "1" else "2")
+    })
+    within2s(s"<body> with $n attributes merged into one with $n", mergeMs)
+    // and one attribute at a time, from as many <body> tags
+    val (grown, growMs) = body("<body>" + (0 until n).map(i => s"<body a$i>").mkString)
+    assert(grown.attrCount == n && (0 until n).forall(i => grown.attrAt(i).name == s"a$i"))
+    within2s(s"$n <body> tags of one attribute each", growMs)
   }
 
   for (c <- cases) {

@@ -403,8 +403,7 @@ class PipelineSpec extends AnyFunSuite {
       Extraction.guardedExtract(t, 0L)(throw new InternalError("injected"))
     }
     // a poison document still lands in the error column end-to-end: it
-    // overflows the test thread's stack, is parsed once more on the guard's
-    // 64 MiB-stack thread, and trips maxDepth there
+    // trips maxDepth
     val poison = Extraction.extractOne(
       t.copy(text = "<div>" * 100000), Extraction.DefaultBudgets,
       graft.core.VisibleTextOptions())
@@ -415,6 +414,117 @@ class PipelineSpec extends AnyFunSuite {
       graft.core.VisibleTextOptions())
     assert(deep.budget_error == "", deep.budget_error)
     assert(deep.extracted_text == "deep text")
+  }
+
+  /** Runs `body` on a thread with a 256 KiB stack: its result, or its
+    * failure rethrown here.
+    */
+  private def onSmallStack[T](body: => T): T = {
+    var result: Either[Throwable, T] = null
+    val thread = new Thread(null, () => {
+      result = try Right(body) catch { case t: Throwable => Left(t) }
+    }, "small-stack", 256L * 1024)
+    thread.start()
+    thread.join()
+    result.fold(throw _, identity)
+  }
+
+  private def turn(html: String): TranscriptTurn =
+    TranscriptTurn("c", 0, "user", html, "", new java.sql.Timestamp(0L))
+
+  /** One line per span: kind, value (newlines and tabs escaped), start, end
+    * and source node id.
+    */
+  private def rendered(e: ExtractedTurn): Seq[String] = e.spans.map { s =>
+    val value = s.value.replace("\n", "\\n").replace("\t", "\\t")
+    s"${s.kind}|$value|${s.start}|${s.end}|${s.source_node_id}"
+  }
+
+  test("extraction spans of a noscript turn resolve against the document, at any depth") {
+    val options = graft.core.VisibleTextOptions()
+    // Transcripts template 7: scripting on, so the noscript text is raw and
+    // has no markup to re-parse
+    val template7 = Transcripts.htmlFor(7L, 0)
+    // a noscript whose raw text has markup: its text re-parses as a body
+    // fragment, whose node ids ("gamma" 2, " delta" 4) are looked up in the
+    // document's span table, as the reference does
+    val fallback = "<p>alpha beta</p><noscript><b>gamma</b> delta</noscript>" +
+      "<script>var x='<p>b</p>';</script>"
+    def spansOf(html: String): Seq[String] = {
+      val e = onSmallStack(Extraction.extractOne(turn(html), Extraction.DefaultBudgets, options))
+      assert(e.budget_error == "", e.budget_error)
+      rendered(e)
+    }
+    val t7Text = "small theta agg query beta small join sigma"
+    val t7Raw = "&lt;b&gt;dup stream batch agg vector&lt;/b&gt;"
+    // the spans the recursive walks and the per-token span search gave
+    for ((pad, shift) <- Seq("" -> 0, "<div>" * 3000 -> 15000)) {
+      assert(spansOf(pad + template7) == Seq(
+        s"text|$t7Text|${shift + 3}|${shift + 46}|3",
+        s"paragraphBreak|\\n\\n|$shift|${shift + 50}|4",
+        s"text|$t7Raw|${shift + 60}|${shift + 106}|5"))
+      assert(spansOf(pad + fallback) == Seq(
+        s"text|alpha beta|${shift + 3}|${shift + 13}|3",
+        s"paragraphBreak|\\n\\n|$shift|${shift + 17}|4",
+        "text|gamma|-1|-1|2",
+        s"text| delta|$shift|${shift + 17}|4"))
+    }
+  }
+
+  test("a turn nested to the depth budget extracts once, on a 256 KiB stack") {
+    val options = graft.core.VisibleTextOptions()
+    val deep = "<div>" * 65000 + "deep text"
+    val typed = onSmallStack(Extraction.extractOne(turn(deep), Extraction.DefaultBudgets, options))
+    assert(typed.budget_error == "", typed.budget_error)
+    assert(typed.extracted_text == "deep text")
+    assert(rendered(typed) == Seq("text|deep text|325000|325009|3"))
+    // the guard runs its body once: the turn is parsed once
+    var runs = 0
+    val text = onSmallStack(Extraction.guarded {
+      runs += 1
+      graft.core.VisibleText.ofDocument(graft.core.HtmlParser.parse(deep,
+        graft.core.ParseOptions(captureSpans = true, budgets = Some(Extraction.DefaultBudgets))))
+    }(error => error))
+    assert(runs == 1 && text == "deep text", text)
+    val main = onSmallStack(Extraction.extractMainOne(turn(deep), Extraction.DefaultBudgets,
+      graft.core.MainContentOptions()))
+    assert(main.budget_error == "", main.budget_error)
+    assert(main.extracted_text == "deep text" && main.spans.isEmpty)
+    // one level past the budget still trips it
+    val over = onSmallStack(Extraction.extractOne(turn("<div>" * 65537), Extraction.DefaultBudgets, options))
+    assert(over.budget_error == "budget:maxDepth", over.budget_error)
+    // a select under deep nesting takes the select patch's walk
+    val select = onSmallStack(Extraction.extractOne(
+      turn("<div>" * 3000 + "<select><option>a</select>"), Extraction.DefaultBudgets, options))
+    assert(select.budget_error == "", select.budget_error)
+    assert(select.extracted_text == "")
+  }
+
+  test("a deep turn with text at every level extracts in linear time, on a 256 KiB stack") {
+    val n = 40000
+    val html = "<div>x" * n
+    val options = graft.core.VisibleTextOptions()
+    onSmallStack(Extraction.extractOne(turn("<div>x" * 100), Extraction.DefaultBudgets, options)) // warm
+    val t0 = System.nanoTime
+    val e = onSmallStack(Extraction.extractOne(turn(html), Extraction.DefaultBudgets, options))
+    val ms = (System.nanoTime - t0) / 1000000
+    info(s"<div>x x $n: $ms ms")
+    assert(e.budget_error == "", e.budget_error)
+    assert(e.extracted_text == Seq.fill(n)("x").mkString("\n"))
+    val texts = e.spans.filter(_.kind == "text")
+    assert(texts.length == n)
+    assert(texts.forall(s => html.substring(s.start, s.end) == "x"))
+    // the spans the per-token span search gave, as the hash of their rendering
+    assert(e.spans.length == 2 * n - 1)
+    assert(rendered(e).mkString(";").hashCode == 1702472848)
+    assert(ms < 2000, s"<div>x x $n extracted in $ms ms")
+    // a pre-order walk of its tree: html, head, body, n divs and n texts
+    val tree = onSmallStack(graft.core.HtmlParser.parse(html))
+    val t1 = System.nanoTime
+    val size = onSmallStack(graft.core.Traversal.iterate(tree.children).size)
+    val iterateMs = (System.nanoTime - t1) / 1000000
+    assert(size == 2 * n + 3)
+    assert(iterateMs < 2000, s"iterate over <div>x x $n took $iterateMs ms")
   }
 
   test("ExtractJob.parseArgs rejects a flag without a value and non-positive buckets or passes") {

@@ -75,7 +75,8 @@ class SqlFunctionSpec extends AnyFunSuite {
 
   test("visible_text of a turn deeper than the task thread's stack equals the typed text") {
     import spark.implicits._
-    // inside DefaultBudgets.maxDepth, but too deep for the 1 MiB task stack
+    // inside DefaultBudgets.maxDepth, but too deep for a recursive walk on
+    // the 1 MiB task stack
     val deep = "<div>" * 20000 + "deep text"
     Seq((deep, 0)).toDF("html", "id").createOrReplaceTempView("deepdoc")
     val typed = Extraction.extract(Seq(TranscriptTurn("c", 0, "user", deep, "",
@@ -89,6 +90,17 @@ class SqlFunctionSpec extends AnyFunSuite {
       assert(row.getString(0) == typed.extracted_text, query)
       assert(!row.isNullAt(1), s"text_content of the deep turn is not NULL: $query")
     }
+    // text at every level: 40,000 lines of visible text, and one text
+    // content that is not copied once per ancestor
+    val lines = "repeat('<div>x', 40000 + CAST(id AS INT))"
+    val row = spark.sql(s"SELECT visible_text($lines), text_content($lines) FROM range(1)")
+      .collect().head
+    val typedLines = Extraction.extract(Seq(TranscriptTurn("c", 0, "user", "<div>x" * 40000, "",
+      new java.sql.Timestamp(0L))).toDS()).collect().head
+    assert(typedLines.budget_error == "")
+    assert(row.getString(0) == typedLines.extracted_text)
+    assert(row.getString(0) == Seq.fill(40000)("x").mkString("\n"))
+    assert(row.getString(1) == "x" * 40000)
   }
 
   test("registered functions reject a call with zero or two arguments") {

@@ -110,8 +110,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming digest extracts a deeply nested turn as the batch digest does") {
     import spark.implicits._
     val in = s"${Files.createTempDirectory("graft-stream-deep")}/in"
-    // 20,000 levels: below DefaultBudgets.maxDepth, far past what a default
-    // 1 MiB task-thread stack can recurse through
+    // 20,000 levels: below DefaultBudgets.maxDepth, far past what a
+    // recursive walk could go through on a 1 MiB task-thread stack
     val deep = "<div>" * 20000 + "deep text"
     val ts = new java.sql.Timestamp(1700000000000L)
     Seq(TranscriptTurn("c1", 0, "user", "<p>hello</p>", "", ts),
